@@ -1049,30 +1049,32 @@ object TableCommit {
   /** EXECUTOR-SIDE position-bitmap row filter — the DSv2 catalog
     * scan's DV application ported to the DataFrame read path
     * (optimization r16, replacing the broadcast-dependent `left_anti`
-    * kill-row join): the broadcast carries the COMPRESSED per-file
-    * GDV2 blobs (cost ∝ vector bytes, never dead-row count), each
-    * task decodes a file's merged kill set once on first touch, and a
-    * row's fate is one binary search over primitive longs. `keepDead`
+    * kill-row join): `dirs` are the covering vector dirs' memoized
+    * broadcasts (writer key → COMPRESSED GDV2 blob; cost ∝ vector
+    * bytes, never dead-row count), `reg` maps each reader-side key
+    * rendering to its (dir index, writer key) entries, each task
+    * decodes a file's merged kill set once on first touch, and a row's
+    * fate is one binary search over primitive longs. `keepDead`
     * inverts the predicate — the change-feed's "newly dead" probe is
-    * the same machinery with hits kept. A file absent from the map is
+    * the same machinery with hits kept. A file absent from `reg` is
     * uncovered: its rows are live (and never newly dead). */
   private final class DvPosFilter(
-      bc: org.apache.spark.broadcast.Broadcast[
-        Map[String, Array[Array[Byte]]]],
+      dirs: Array[org.apache.spark.broadcast.Broadcast[
+        Map[String, Array[Byte]]]],
+      reg: Map[String, Array[(Int, String)]],
       keepDead: Boolean) extends ((String, Long) => Boolean)
       with Serializable {
     @transient private lazy val decoded =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
     override def apply(k: String, pos: Long): Boolean = {
-      val m = bc.value
-      val blobs = m.getOrElse(k,
-        m.getOrElse(scala.util.Try(
-          java.net.URLDecoder.decode(k, "UTF-8")).getOrElse(k), null))
-      if (blobs == null) !keepDead
+      val es = reg.getOrElse(k, reg.getOrElse(scala.util.Try(
+        java.net.URLDecoder.decode(k, "UTF-8")).getOrElse(k), null))
+      if (es == null) !keepDead
       else {
         var dead = decoded.get(k)
         if (dead == null) {
-          dead = DvCodec.mergeDecoded(blobs.toSeq)
+          dead = DvCodec.mergeDecoded(
+            es.toSeq.map { case (i, wk) => dirs(i).value(wk) })
           decoded.put(k, dead)
         }
         val hit = java.util.Arrays.binarySearch(dead, pos) >= 0
@@ -1082,23 +1084,27 @@ object TableCommit {
   }
 
   /** A [[DvPosFilter]] Column over the `__graft_dvk`/`__graft_dvp`
-    * key pair, from an explicit file→dirs vector registry: blobs are
-    * collected driver-side ([[dvBlobsOf]] — compressed bytes of the
-    * requested files only) and broadcast under every key rendering a
-    * reader may derive from `_metadata.file_path`. None when nothing
-    * is covered (the caller skips the filter outright). */
+    * key pair, from an explicit file→dirs vector registry: the
+    * covering dirs come from the process memo ([[dvEntriesOf]]), each
+    * shipped as its dir's ONE memoized broadcast, with the requested
+    * files registered under every key rendering a reader may derive
+    * from `_metadata.file_path`. None when nothing is covered (the
+    * caller skips the filter outright). */
   private def dvFilterCol(s: SparkSession, table: String,
       dv: Map[String, Seq[String]], files: Seq[String],
       keepDead: Boolean): Option[org.apache.spark.sql.Column] = {
-    val blobs = dvBlobsOf(s, table, dv, files)
-    if (blobs.isEmpty) None
+    val entries = dvEntriesOf(s, table, dv, files)
+    if (entries.isEmpty) None
     else {
-      val byKey: Map[String, Array[Array[Byte]]] = blobs.toSeq.flatMap {
-        case (rel, bs) =>
-          dvKeyRenderings(table, rel).map(_ -> bs.toArray)
+      val dirs = entries.valuesIterator.flatten.map(_._1).toSeq.distinct
+      val idx = dirs.zipWithIndex.toMap
+      val reg: Map[String, Array[(Int, String)]] = entries.toSeq.flatMap {
+        case (rel, es) =>
+          val at = es.map { case (d, wk) => (idx(d), wk) }.toArray
+          dvKeyRenderings(table, rel).map(_ -> at)
       }.toMap
-      val bc = s.sparkContext.broadcast(byKey)
-      val f = new DvPosFilter(bc, keepDead)
+      val f = new DvPosFilter(
+        dirs.map(_.broadcast(s.sparkContext)).toArray, reg, keepDead)
       val liveUdf = org.apache.spark.sql.functions.udf(f(_: String, _: Long))
       Some(liveUdf(col("__graft_dvk"), col("__graft_dvp")))
     }
@@ -2808,12 +2814,12 @@ object TableCommit {
     * signature) — the connector's dir-vs-payload dispatch. */
   private[graft] def layoutSigOf(rel: String): Seq[String] = layoutSig(rel)
 
-  /** Deletion-vector BLOBS for an explicit file subset, decoded
-    * driver-side to GDV2 blobs (legacy v1 position dirs re-encode):
-    * file rel-path → the blobs of every vector covering it, in
-    * registration order. Cost ∝ the COMPRESSED vector bytes of the
-    * requested files — the same metadata cost class as every other DV
-    * read; the connector ships each input partition only its own
+  /** Deletion-vector BLOBS for an explicit file subset, served from
+    * the process memo as GDV2 blobs (legacy v1 position dirs
+    * re-encode): file rel-path → the blobs of every vector covering
+    * it, in registration order. No Spark job; a cold dir costs one
+    * driver-side read of its COMPRESSED vector bytes, a warm one
+    * nothing. The connector ships each input partition only its own
     * files' blobs. */
   private[graft] def dvBlobsFor(s: SparkSession, table: String,
       meta: ScanMeta, files: Seq[String]): Map[String, Seq[Array[Byte]]] =
@@ -2825,76 +2831,138 @@ object TableCommit {
     new java.net.URI(null, null, "/" + rel, null).getRawPath
       .stripPrefix("/")).getOrElse(rel)
 
-  /** Test observability: the vector dirs the most recent [[dvBlobsOf]]
-    * call actually read — the witness that a pruned read never opens a
-    * pruned-out file's sidecar (the `inputFiles` probe the old
-    * join-based plan offered is gone with the join arm). */
+  /** Test observability: the vector dirs the most recent
+    * [[dvEntriesOf]] call consulted — the witness that a pruned read
+    * never touches a pruned-out file's sidecar (the `inputFiles` probe
+    * the old join-based plan offered is gone with the join arm). */
   private[graft] val lastDvDirsRead =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
 
-  private def dvBlobsOf(s: SparkSession, table: String,
+  /** One registered vector dir, read once: writer key → GDV2 blob
+    * (legacy v1 position rows re-encoded), the keys' percent-decoded
+    * twins, and the dir's one broadcast, created on the first
+    * DataFrame-path plan that needs it and reused by every later one. */
+  private final class DvDir(val blobs: Map[String, Array[Byte]]) {
+    val byDecoded: Map[String, String] =
+      blobs.keysIterator.map(k => decodedKey(k) -> k).toMap
+    private var bc: (org.apache.spark.SparkContext,
+      org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]]) = _
+    def broadcast(sc: org.apache.spark.SparkContext)
+        : org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]] =
+      synchronized {
+        // a broadcast dies with its context: re-broadcast under a new one
+        if (bc == null || (bc._1 ne sc)) bc = (sc, sc.broadcast(blobs))
+        bc._2
+      }
+    def destroy(): Unit = synchronized {
+      // broadcast ids restart in a new context: only a live owner's
+      // broadcast may be destroyed
+      if (bc != null && !bc._1.isStopped) bc._2.destroy()
+      bc = null
+    }
+  }
+
+  /** THE DV MEMO, (table, dir) → [[DvDir]]. A registered
+    * `_dv/<writerId>[.v2]` tree is written once, before publish, under
+    * a fresh per-statement writer id, and is never rewritten; only
+    * [[vacuum]] or a DROP removes it, and both evict here
+    * ([[forgetDvUnder]]). So a hit never revalidates, and memo memory
+    * tracks the compressed bytes of live vectors. */
+  private val dvMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), DvDir]()
+
+  private def decodedKey(k: String): String =
+    scala.util.Try(java.net.URLDecoder.decode(k, "UTF-8")).getOrElse(k)
+
+  /** Read one vector dir DRIVER-SIDE — no Spark job: list its parquet
+    * parts through the session's Hadoop conf and stream their rows
+    * with the [[CheckpointSidecar]] reader idiom. */
+  private def loadDvDir(s: SparkSession, table: String,
+      dir: String): DvDir = {
+    val root =
+      if (table.contains("://")) new org.apache.hadoop.fs.Path(s"$table/$dir")
+      else new org.apache.hadoop.fs.Path(new java.io.File(table, dir).toURI)
+    val conf = s.sessionState.newHadoopConf()
+    val parts = root.getFileSystem(conf).listStatus(root).filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    val v2 = dir.endsWith(".v2")
+    val blobs = Map.newBuilder[String, Array[Byte]]
+    val pos = scala.collection.mutable.HashMap.empty[String,
+      scala.collection.mutable.ArrayBuilder.ofLong]
+    parts.foreach { f =>
+      val r = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          f.getPath).withConf(conf).build()
+      try {
+        var g = r.read()
+        while (g != null) {
+          val k = g.getString("k", 0)
+          // v2 dirs already hold the canonical blobs; v1 dirs re-encode
+          // their plain position rows through the same codec
+          if (v2) blobs += k -> g.getBinary("bmp", 0).getBytes
+          else pos.getOrElseUpdate(k, new scala.collection.mutable
+            .ArrayBuilder.ofLong) += g.getLong("pos", 0)
+          g = r.read()
+        }
+      } finally r.close()
+    }
+    new DvDir(
+      if (v2) blobs.result()
+      else pos.map { case (k, ps) => k -> DvCodec.encode(ps.result()) }.toMap)
+  }
+
+  /** The covering vectors of `files`: file rel → (dir, the dir's key
+    * for it) per registered vector, in registration order. Every dir
+    * comes from the memo, so a warm plan opens no sidecar; a selective
+    * scan consults only its requested files' dirs. */
+  private def dvEntriesOf(s: SparkSession, table: String,
       dv: Map[String, Seq[String]], files: Seq[String])
-      : Map[String, Seq[Array[Byte]]] = {
+      : Map[String, Seq[(DvDir, String)]] = {
     val want = files.toSet
     val perFile = dv.filter { case (rel, _) => want(rel) }
     if (perFile.isEmpty) return Map.empty
-    // a SELECTIVE scan must pay only for the vectors of the files it
-    // requests: push `k IN (requested rels)` into the vector-dir read,
-    // under BOTH key renderings a writer may have recorded (the raw
-    // rel, and its _metadata URI percent-encoding)
-    val wantedKeys = perFile.keysIterator
-      .flatMap(rel => Seq(rel, uriRendered(rel))).toSeq.distinct
-    def loadDir(dir: String, selective: Boolean)
-        : Map[(String, String), Array[Byte]] = {
-      val base = s.read.parquet(s"$table/$dir")
-      val scoped =
-        if (selective) base.filter(col("k").isin(wantedKeys: _*)) else base
-      // v2 dirs already hold the canonical blobs; v1 dirs re-encode
-      // their plain position rows through the same codec
-      if (dir.endsWith(".v2"))
-        scoped.select(col("k"), col("bmp")).collect().map(r =>
-          (dir, r.getString(0)) -> r.getAs[Array[Byte]](1)).toMap
-      else
-        scoped.groupBy(col("k"))
-          .agg(org.apache.spark.sql.functions.collect_list(col("pos"))
-            .as("ps"))
-          .collect().map(r =>
-            (dir, r.getString(0)) ->
-              DvCodec.encode(r.getSeq[Long](1).toArray)).toMap
-    }
     val dirs = perFile.values.flatten.toSeq.distinct.sorted
     lastDvDirsRead.set(dirs)
-    var all: Map[(String, String), Array[Byte]] =
-      dirs.map(loadDir(_, selective = true))
-        .foldLeft(Map.empty[(String, String), Array[Byte]])(_ ++ _)
+    val loaded = dirs.map(d =>
+      d -> dvMemo.computeIfAbsent((table, d), _ => loadDvDir(s, table, d)))
+      .toMap
     // dv keys carry the writer's _metadata URI rendering, which
     // percent-encodes special path characters; the manifest rel paths
-    // are decoded — index the decoded twin exactly as the hit-count
-    // readers do
-    def decodedOf(m: Map[(String, String), Array[Byte]]) =
-      m.map { case ((dir, k), b) =>
-        (dir, scala.util.Try(java.net.URLDecoder.decode(k, "UTF-8"))
-          .getOrElse(k)) -> b
-      }
-    var decoded = decodedOf(all)
-    // CORRECTNESS BACKSTOP: a registered (file, dir) pair whose key the
-    // selective IN predicate missed (a rendering this reader didn't
-    // anticipate) re-reads that dir IN FULL — over-reading is a cost,
-    // a missed blob would resurrect deleted rows
-    val missedDirs = perFile.toSeq.flatMap { case (rel, regDirs) =>
-      regDirs.filterNot(dir =>
-        all.contains((dir, rel)) || decoded.contains((dir, rel)))
-    }.distinct.sorted
-    if (missedDirs.nonEmpty) {
-      all = all ++ missedDirs.map(loadDir(_, selective = false))
-        .foldLeft(Map.empty[(String, String), Array[Byte]])(_ ++ _)
-      decoded = decodedOf(all)
-    }
+    // are decoded — try both renderings, then the decoded twin index
     perFile.map { case (rel, regDirs) =>
-      rel -> regDirs.flatMap(dir =>
-        all.get((dir, rel)).orElse(decoded.get((dir, rel))))
+      rel -> regDirs.flatMap { d =>
+        val m = loaded(d)
+        Seq(rel, uriRendered(rel)).find(m.blobs.contains)
+          .orElse(m.byDecoded.get(rel)).map(m -> _)
+      }
     }.filter(_._2.nonEmpty)
   }
+
+  private def dvBlobsOf(s: SparkSession, table: String,
+      dv: Map[String, Seq[String]], files: Seq[String])
+      : Map[String, Seq[Array[Byte]]] =
+    dvEntriesOf(s, table, dv, files).map { case (rel, es) =>
+      rel -> es.map { case (d, k) => d.blobs(k) }
+    }
+
+  /** Evict one memoized vector dir, destroying its broadcast. */
+  private def forgetDv(table: String, dir: String): Unit =
+    Option(dvMemo.remove((table, dir))).foreach(_.destroy())
+
+  /** Evict every memoized vector dir of every table at or under `root`
+    * — DROP TABLE and DROP NAMESPACE CASCADE delete those trees. */
+  private[graft] def forgetDvUnder(root: String): Unit =
+    dvMemo.keySet.toArray(Array.empty[(String, String)]).foreach {
+      case (t, d) if t == root || t.startsWith(root + "/") => forgetDv(t, d)
+      case _ =>
+    }
+
+  /** Test observability: the vector dirs of `table` the memo holds. */
+  private[graft] def dvMemoDirs(table: String): Set[String] =
+    dvMemo.keySet.toArray(Array.empty[(String, String)])
+      .collect { case (t, d) if t == table => d }.toSet
 
   /** COMMITTED-LAYOUT CO-LOCATED JOIN (round-13): serve the newest
     * snapshot of a table laid out by the `bucket(n, key)` transform as
@@ -5572,7 +5640,10 @@ object TableCommit {
     st.listSubdirs(table, "_dv")
       .filter { case (name, mtime) => !liveDv.contains(name) &&
         mtime < cutoff }
-      .foreach { case (name, _) => st.deleteTree(table, s"_dv/$name") }
+      .foreach { case (name, _) =>
+        st.deleteTree(table, s"_dv/$name")
+        forgetDv(table, s"_dv/$name")
+      }
     // writer-recorded change-data trees: referenced by RETAINED
     // snapshots' commit-scoped #cdc directives; the rest sweep once
     // stale (a feed consumer may lag at most the retention window —

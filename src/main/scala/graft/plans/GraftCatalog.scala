@@ -203,8 +203,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // recursion on an hdfs:///s3a:// location would delete NOTHING and
     // still report a destructive op as successful (the one lie a
     // catalog must never tell)
-    if (existed)
+    if (existed) {
       graft.operators.TableStore.forTable(path).deleteTree(path, "")
+      TableCommit.forgetDvUnder(path)
+    }
     existed
   }
 
@@ -306,8 +308,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       val existed = graft.operators.TableStore.forTable(w)
         .listSubdirs((w +: namespace.toSeq.dropRight(1)).mkString("/"), "")
         .exists(_._1 == namespace.last) || new java.io.File(dir).isDirectory
-      if (existed)
+      if (existed) {
         graft.operators.TableStore.forTable(dir).deleteTree(dir, "")
+        TableCommit.forgetDvUnder(dir)
+      }
       existed
     } else {
       requireLocalWarehouse("DROP NAMESPACE", w)

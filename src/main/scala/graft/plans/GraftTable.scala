@@ -528,10 +528,10 @@ class GraftScan(path: String, meta: TableCommit.ScanMeta,
   private lazy val partitions: Array[InputPartition] =
     buildPartitions(keptFiles)
 
-  /** DV blobs of the kept files, collected ONCE per scan — the DPP
-    * re-plan ([[planInputPartitions]] after [[filter]]) rebuilds
-    * partitions over a SUBSET of keptFiles, and re-collecting the
-    * vector dirs for it would pay the driver read twice. */
+  /** DV blobs of the kept files, gathered ONCE per scan from the
+    * process-wide vector memo — the DPP re-plan
+    * ([[planInputPartitions]] after [[filter]]) rebuilds partitions
+    * over a SUBSET of keptFiles and reuses this map. */
   private lazy val dvForKept: Map[String, Seq[Array[Byte]]] =
     TableCommit.dvBlobsFor(session, path, meta, keptFiles)
 
