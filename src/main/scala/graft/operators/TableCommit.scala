@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, countDistinct, element_at, expr, input_file_name, lit, max, min, not, sort_array, split => fsplit, struct, sum, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, element_at, expr, input_file_name, lit, max, min, not, sort_array, split => fsplit, struct, sum, when}
 
 /** Minimal ATOMIC COMMIT protocol for the engine's mutable partitioned
   * tables (round-8 verdict item 4) — the "table format's commit
@@ -986,16 +986,37 @@ object TableCommit {
     * key lookup immune to which rendering a side happens to carry. */
   private def dvKeyRenderings(table: String, rel: String): Seq[String] = {
     val segsN = depthOf(rel) + 1
-    val hadoopForm = scala.util.Try {
-      val p =
-        if (table.contains("://"))
-          new org.apache.hadoop.fs.Path(s"$table/$rel")
-        else new org.apache.hadoop.fs.Path(
-          new java.io.File(table, rel).toURI)
-      p.toString.split('/').takeRight(segsN).mkString("/")
-    }.toOption
+    val hadoopForm = scala.util.Try(hadoopPath(table, rel).toString
+      .split('/').takeRight(segsN).mkString("/")).toOption
     (Seq(rel, uriRendered(rel)) ++ hadoopForm).distinct
   }
+
+  /** Percent-decode a URI-rendered path key. This is URI decoding, not
+    * `URLDecoder`'s form decoding: a literal `+` stays a `+`, so the
+    * key of a partition value like `a+b c` (rendered `a+b%20c`)
+    * decodes to its manifest form instead of `a b c`. */
+  private[graft] def pctDecode(k: String): String =
+    scala.util.Try(java.net.URLDecoder.decode(k.replace("+", "%2B"),
+      "UTF-8")).getOrElse(k)
+
+  /** Resolve an executor-side file key (the tail of `_metadata.file_path`
+    * or `input_file_name`) back to its manifest rel among `rels`: any
+    * rendering [[dvKeyRenderings]] registers, then the key's
+    * percent-decoded form. The one key lookup of every DML scan. */
+  private def relIndex(table: String,
+      rels: Seq[String]): String => Option[String] = {
+    val idx = rels.iterator
+      .flatMap(rel => dvKeyRenderings(table, rel).map(_ -> rel)).toMap
+    key => idx.get(key).orElse(idx.get(pctDecode(key)))
+  }
+
+  /** The Hadoop path of a table-relative `rel`: scheme-bearing table
+    * roots go to Hadoop as-is (object-store adapters), plain local
+    * paths through the File URI (exact resolution for relative roots). */
+  private def hadoopPath(table: String,
+      rel: String): org.apache.hadoop.fs.Path =
+    if (table.contains("://")) new org.apache.hadoop.fs.Path(s"$table/$rel")
+    else new org.apache.hadoop.fs.Path(new java.io.File(table, rel).toURI)
 
   /** Write `matches`' (__graft_dvk, __graft_dvp) dead positions as the
     * commit's deletion-vector sidecar, returning the registered dir.
@@ -1006,7 +1027,9 @@ object TableCommit {
     * parquet row per position). `graft.dv.format=v1` pins the legacy
     * (k, pos)-rows encoding — the mixed-fleet upgrade escape: writers
     * stay v1 until every reader understands the `dv2` feature the v2
-    * directive gates. */
+    * directive gates. The MoR DELETE and UPDATE verbs write through
+    * here; MERGE, whose classify pass already returns per-file blobs,
+    * writes through [[writeDvLocal]]. */
   private def writeDvSidecar(s: SparkSession, table: String,
       writerId: String, matches: DataFrame): String = {
     import org.apache.spark.sql.functions.{collect_list, udf}
@@ -1046,6 +1069,46 @@ object TableCommit {
     }
   }
 
+  /** Write a commit's vector sidecar DRIVER-SIDE from per-file GDV2
+    * blobs already in hand (the [[ModelStore.save]] writer idiom, the
+    * FileSystem from the session's Hadoop conf as [[loadDvDir]] reads
+    * it): v2 writes one `(k, bmp)` row per file — the same blob bytes
+    * [[writeDvSidecar]]'s distributed encoder produces — and a
+    * `graft.dv.format=v1` table gets the decoded `(k, pos)` rows. `k`
+    * is the file's manifest rel. Returns the dir to register and its
+    * memo entry, for the caller to memoize once the commit publishes. */
+  private def writeDvLocal(s: SparkSession, table: String, writerId: String,
+      blobs: Map[String, Array[Byte]]): (String, DvDir) = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val v1 = properties(table).get("graft.dv.format").contains("v1")
+    val rel = if (v1) s"_dv/$writerId" else s"_dv/$writerId.v2"
+    val mt = Types.buildMessage()
+      .addField(Types.optional(PrimitiveTypeName.BINARY)
+        .as(LogicalTypeAnnotation.stringType()).named("k"))
+      .addField(
+        if (v1) Types.optional(PrimitiveTypeName.INT64).named("pos")
+        else Types.optional(PrimitiveTypeName.BINARY).named("bmp"))
+      .named("spark_schema")
+    val conf = s.sessionState.newHadoopConf()
+    val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(mt)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        hadoopPath(table, s"$rel/part-00000.parquet"), conf))
+      .withType(mt)
+      .withConf(conf)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try blobs.toSeq.sortBy(_._1).foreach { case (k, bmp) =>
+      if (v1) DvCodec.decode(bmp).foreach(p =>
+        w.write(factory.newGroup().append("k", k).append("pos", p)))
+      else w.write(factory.newGroup().append("k", k).append("bmp",
+        org.apache.parquet.io.api.Binary.fromConstantByteArray(bmp)))
+    } finally w.close()
+    rel -> new DvDir(blobs)
+  }
+
   /** EXECUTOR-SIDE position-bitmap row filter — the DSv2 catalog
     * scan's DV application ported to the DataFrame read path
     * (optimization r16, replacing the broadcast-dependent `left_anti`
@@ -1067,8 +1130,7 @@ object TableCommit {
     @transient private lazy val decoded =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
     override def apply(k: String, pos: Long): Boolean = {
-      val es = reg.getOrElse(k, reg.getOrElse(scala.util.Try(
-        java.net.URLDecoder.decode(k, "UTF-8")).getOrElse(k), null))
+      val es = reg.getOrElse(k, reg.getOrElse(pctDecode(k), null))
       if (es == null) !keepDead
       else {
         var dead = decoded.get(k)
@@ -2844,7 +2906,7 @@ object TableCommit {
     * DataFrame-path plan that needs it and reused by every later one. */
   private final class DvDir(val blobs: Map[String, Array[Byte]]) {
     val byDecoded: Map[String, String] =
-      blobs.keysIterator.map(k => decodedKey(k) -> k).toMap
+      blobs.keysIterator.map(k => pctDecode(k) -> k).toMap
     private var bc: (org.apache.spark.SparkContext,
       org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]]) = _
     def broadcast(sc: org.apache.spark.SparkContext)
@@ -2871,17 +2933,12 @@ object TableCommit {
   private val dvMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String), DvDir]()
 
-  private def decodedKey(k: String): String =
-    scala.util.Try(java.net.URLDecoder.decode(k, "UTF-8")).getOrElse(k)
-
   /** Read one vector dir DRIVER-SIDE — no Spark job: list its parquet
     * parts through the session's Hadoop conf and stream their rows
     * with the [[CheckpointSidecar]] reader idiom. */
   private def loadDvDir(s: SparkSession, table: String,
       dir: String): DvDir = {
-    val root =
-      if (table.contains("://")) new org.apache.hadoop.fs.Path(s"$table/$dir")
-      else new org.apache.hadoop.fs.Path(new java.io.File(table, dir).toURI)
+    val root = hadoopPath(table, dir)
     val conf = s.sessionState.newHadoopConf()
     val parts = root.getFileSystem(conf).listStatus(root).filter { f =>
       val n = f.getPath.getName
@@ -3932,15 +3989,8 @@ object TableCommit {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val fs = rels.map { rel => Future { scala.concurrent.blocking {
-      // scheme-bearing table roots go to Hadoop as-is (object-store
-      // adapters); plain local paths through the File URI (exact
-      // resolution for relative roots)
-      val p = if (table.contains("://"))
-        new org.apache.hadoop.fs.Path(s"$table/$rel")
-      else new org.apache.hadoop.fs.Path(
-        new java.io.File(table, rel).toURI)
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        p, new org.apache.hadoop.conf.Configuration())
+        hadoopPath(table, rel), new org.apache.hadoop.conf.Configuration())
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try rel -> r.getRecordCount finally r.close()
     }}}
@@ -4185,9 +4235,9 @@ object TableCommit {
     val segsN = math.max(1, rels.head.count(_ == '/')) + 1
     def lastK(p: String): String =
       p.split('/').takeRight(segsN).mkString("/")
-    val byKey = rels.map(r => lastK(r) -> r).toMap
-    require(byKey.size == rels.size,
+    require(rels.map(lastK).distinct.size == rels.size,
       s"non-unique partition-dir/file-name keys among fresh files: $rels")
+    val relOf = relIndex(table, rels)
     // the fresh FILES carry physical column names under column mapping;
     // stats stay keyed by LOGICAL name (what readers prune with)
     def phys(c: String): String = wmap.getOrElse(c, c)
@@ -4240,12 +4290,9 @@ object TableCommit {
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .flatMap { r =>
-        val key = lastK(r.getString(0))
         // URI-vs-raw defence: input_file_name may percent-encode
         // characters the on-disk (Hive-escaped) dir name carries raw
-        byKey.get(key)
-          .orElse(byKey.get(java.net.URLDecoder.decode(key, "UTF-8")))
-          .map(rel => (rel, r))
+        relOf(lastK(r.getString(0))).map(rel => (rel, r))
       }
     val stats = resolved.flatMap { case (rel, r) =>
       cols.zipWithIndex.flatMap {
@@ -4258,10 +4305,9 @@ object TableCommit {
     val rows = resolved.map { case (rel, r) =>
       rel -> r.getLong(1 + 2 * cols.length)
     }.toMap
-    // the scan's key resolution is best-effort (a partition value both
-    // '+'-bearing AND percent-ambiguous can miss raw and decoded
-    // lookups); a miss may only ever drop a stats entry (conservative),
-    // never a #rows entry — footer-read exactly the unresolved files
+    // a key the scan could not resolve may only ever drop a stats
+    // entry (conservative), never a #rows entry — footer-read exactly
+    // the unresolved files
     val missed = rels.filterNot(rows.contains)
     (stats, rows ++ footerRows(table, missed))
   }
@@ -4424,10 +4470,9 @@ object TableCommit {
       candidates: Seq[String],
       pred: org.apache.spark.sql.Column): Map[String, Long] = {
     // the DV key IS the manifest-relative path (per-file depth), so
-    // scan results key straight back to the candidate list; the
-    // URL-decode fallback covers percent-encoding skew in
-    // _metadata.file_path
-    val byKey = candidates.map(r => r -> r).toMap
+    // scan results key straight back to the candidate list, through
+    // any percent-encoding skew in _metadata.file_path
+    val relOf = relIndex(table, candidates)
     // grouped by the DV key, taken from _metadata BEFORE any
     // deletion-vector anti-join (input_file_name() refuses
     // multi-source plans); counts are LIVE matches, prior vectors
@@ -4437,12 +4482,8 @@ object TableCommit {
       .filter(pred)
       .groupBy(col("__graft_dvk")).agg(count(lit(1)).as("n"))
       .collect()
-      .flatMap { r =>
-        val key = r.getString(0)
-        byKey.get(key)
-          .orElse(byKey.get(java.net.URLDecoder.decode(key, "UTF-8")))
-          .map(_ -> r.getLong(1))
-      }.toMap
+      .flatMap(r => relOf(r.getString(0)).map(_ -> r.getLong(1)))
+      .toMap
   }
 
   /** Stage-3 of a copy-on-write DML commit (shared by [[deleteWhere]]
@@ -4947,6 +4988,153 @@ object TableCommit {
       fresh.length, rowsUpdated)
   }
 
+  /** Run `f` with its Spark jobs labelled `graft MERGE <table>: <phase>`
+    * (AQE stage and broadcast jobs inherit the label), restoring the
+    * caller's job description after — so a listener or the UI can tell
+    * a MERGE's source, classify, cdc and write jobs apart. */
+  private def labelled[A](s: SparkSession, table: String, phase: String)(
+      f: => A): A = {
+    val sc = s.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft MERGE $table: $phase")
+    try f finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
+  /** A MERGE source's rows on the driver: one `executeCollect` of its
+    * physical plan — no Spark job for a local relation (VALUES, a temp
+    * view over a Seq), one otherwise. */
+  private def sourceRows(s: SparkSession, table: String,
+      qe: org.apache.spark.sql.execution.QueryExecution)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] =
+    labelled(s, table, "source")(
+      qe.executedPlan.executeCollect().map(_.copy()))
+
+  private def externalRows(schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : IndexedSeq[org.apache.spark.sql.Row] = {
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    rows.iterator.map(r => toScala(r).asInstanceOf[org.apache.spark.sql.Row])
+      .toIndexedSeq
+  }
+
+  /** A SQL MERGE's resolved source plan, collected once
+    * ([[sourceRows]]) and served back as a driver-local frame —
+    * [[mergeIntoKeys]] then reads it with no further job. */
+  private[graft] def localSource(s: SparkSession, table: String,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val rows = sourceRows(s, table, s.sessionState.executePlan(plan))
+    s.createDataFrame(externalRows(plan.schema, rows).asJava, plan.schema)
+  }
+
+  /** The MERGE source guard: row count, distinct key tuples and the
+    * leading key's rendered [min, max]. */
+  private[graft] final case class MergeGuard(rows: Long, distinctKeys: Long,
+      lo: Option[String], hi: Option[String])
+
+  /** [[MergeGuard]] computed on the driver from collected source rows,
+    * with the semantics of the Spark aggregate `count(1)`,
+    * `countDistinct(keys)`, `min(lead).cast("string")`,
+    * `max(lead).cast("string")`: a tuple with a NULL component is not
+    * counted, float key components compare normalized (-0.0 = 0.0, one
+    * NaN), the leading key orders by its type's SQL ordering and
+    * renders through the same cast under the session time zone. */
+  private[graft] def mergeGuard(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      keyCols: Seq[String]): MergeGuard = {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending,
+      BoundReference, Cast, InterpretedOrdering, Literal, SortOrder,
+      UnsafeProjection}
+    import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
+    import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
+    val refs = keyCols.map { k =>
+      val i = schema.fieldIndex(k)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+    val tuple = UnsafeProjection.create(refs.map(r => r.dataType match {
+      case FloatType | DoubleType => NormalizeNaNAndZero(r)
+      case _ => r
+    }))
+    val distinct = rows.iterator
+      .filter(r => refs.forall(ref => !r.isNullAt(ref.ordinal)))
+      .map(r => tuple(r).copy()).toSet.size
+    val lead = refs.head
+    val ord = new InterpretedOrdering(Seq(SortOrder(lead, Ascending)))
+    val leads = rows.filter(r => !r.isNullAt(lead.ordinal))
+    def render(r: org.apache.spark.sql.catalyst.InternalRow): String =
+      Cast(Literal(lead.eval(r), lead.dataType), StringType,
+        Some(s.sessionState.conf.sessionLocalTimeZone)).eval().toString
+    if (leads.isEmpty) MergeGuard(rows.length, distinct, None, None)
+    else MergeGuard(rows.length, distinct, Some(render(leads.min(ord))),
+      Some(render(leads.max(ord))))
+  }
+
+  /** The candidate-pruning band of a MERGE source's leading key, from
+    * its rendered [min, max]. The band compares in the KEY TYPE's own
+    * order — numeric keys as BigDecimal, string keys lexicographically
+    * in code-point order against the truncated string stats, ISO
+    * NTZ-timestamp/date keys lexicographically when the rendering is in
+    * the four-digit-year safe era. Mixing orders is the round-10 trap
+    * (keys "9","10" compared numerically give band (10, 9), prune
+    * everything, and duplicate-insert existing keys as NOT MATCHED) —
+    * each arm is self-consistent with how [[fileMeta]] recorded that
+    * type's bounds. Unbandable keys keep ALL files candidate (correct,
+    * just unpruned); the lo<=hi guards are belt-and-braces against any
+    * residual rendering skew. */
+  private[graft] def mergeBand(
+      keyType: Option[org.apache.spark.sql.types.DataType],
+      lo: Option[String], hi: Option[String]): Option[StatBand] = {
+    import org.apache.spark.sql.types._
+    keyType match {
+      case Some(_: NumericType) => (for {
+        l <- lo.flatMap(v => scala.util.Try(BigDecimal(v)).toOption)
+        h <- hi.flatMap(v => scala.util.Try(BigDecimal(v)).toOption)
+      } yield NumBand(l, h)).filter(b => b.lo <= b.hi)
+      case Some(StringType) => (for {
+        l <- lo; h <- hi
+      } yield LexBand(l, h)).filter(b => cpCompare(b.lo, b.hi) <= 0)
+      // zoned TimestampType deliberately absent: its rendering is
+      // session-TZ-dependent, so persisted stats and a later
+      // session's band could disagree (see fileMeta's refine)
+      case Some(DateType | TimestampNTZType) => (for {
+        l <- lo; h <- hi
+        if isoLexSafe(l) && isoLexSafe(h)
+      } yield LexBand(l, h)).filter(b => cpCompare(b.lo, b.hi) <= 0)
+      case _ => None
+    }
+  }
+
+  /** Fold one partition of a MERGE's kept rows into the task's
+    * partial: per data-file key, its (matched, deleted-by-clause,
+    * by-source) counts and the killed positions as a GDV2 blob; plus
+    * the matched source-row ids, also as a GDV2 blob. Field indexes
+    * locate the file key, the position, the source row id (NULL for a
+    * by-source row) and the DELETE-clause flag. */
+  private def classifyPartition(rows: Iterator[org.apache.spark.sql.Row],
+      k: Int, p: Int, r: Int, d: Int)
+      : Iterator[(Seq[(String, Array[Long], Array[Byte])], Array[Byte])] = {
+    val files = scala.collection.mutable.HashMap.empty[String,
+      (Array[Long], scala.collection.mutable.ArrayBuilder.ofLong)]
+    val rids = new scala.collection.mutable.ArrayBuilder.ofLong
+    rows.foreach { row =>
+      val (c, pos) = files.getOrElseUpdate(row.getString(k),
+        (new Array[Long](3), new scala.collection.mutable.ArrayBuilder.ofLong))
+      pos += row.getLong(p)
+      if (row.isNullAt(r)) c(2) += 1L
+      else {
+        c(0) += 1L
+        if (row.getBoolean(d)) c(1) += 1L
+        rids += row.getLong(r)
+      }
+    }
+    Iterator.single((files.toSeq.map { case (key, (c, pos)) =>
+      (key, c, DvCodec.encode(pos.result()))
+    }, DvCodec.encode(rids.result())))
+  }
+
   /** [[mergeInto]]'s audit: matched old versions vectored dead in
     * `filesHit` files, successors + inserts landed in `filesAdded`
     * fresh files; `rowsInserted` is metadata-derived (fresh `#rows`
@@ -4988,8 +5176,9 @@ object TableCommit {
     * the clauses and are dropped on insert).
     *
     * Scale shape: the source is a merge's SMALL side by contract (a
-    * CDC batch against a 100 TB table) — it is explicitly broadcast,
-    * and its [min, max] key band stats-prunes the candidate files
+    * CDC batch against a 100 TB table) — it is collected to the
+    * driver once and explicitly broadcast, and its [min, max] key
+    * band stats-prunes the candidate files
     * first, so the matched join reads only files that can hold a
     * source key. That same pruning makes NOT-MATCHED detection sound
     * on candidates alone: a file whose recorded key range excludes the
@@ -5069,7 +5258,25 @@ object TableCommit {
     * falls to the BY SOURCE clause), the source row inserts. NULL
     * residual = no match (join semantics). Pruning and the OCC
     * added-file rule are unchanged — the residual only NARROWS the
-    * equality match, so the leading-key band stays sound. */
+    * equality match, so the leading-key band stays sound.
+    *
+    * A statement over a local source runs at most four Spark jobs
+    * (one more for any other source, one more with `graft.cdf`), each
+    * labelled `graft MERGE <table>: <phase>`:
+    *  - source: the source is collected to the driver once (no job for
+    *    a local relation, one otherwise); the cardinality guard and the
+    *    pruning band are computed there ([[mergeGuard]]), and the rows
+    *    go back into the plan as a local relation tagged with a row id;
+    *  - classify: one pass over the candidates joined to the broadcast
+    *    source (two jobs with the broadcast) returns per hit file the
+    *    matched, deleted and by-source counts and the kill bitmap, plus
+    *    the matched source-row ids; the kept rows stay cached;
+    *  - the driver writes the vector sidecar ([[writeDvLocal]]) and
+    *    memoizes it once the commit publishes; inserts are the source
+    *    rows whose id did not match;
+    *  - write: successors (from the cached rows) ∪ inserts in one staged
+    *    write (two jobs with the repartition); cdc, when `graft.cdf` is
+    *    on, adds one. */
   def mergeIntoKeys(s: SparkSession, table: String, partCols: Seq[String],
       keyCols: Seq[String], source: DataFrame,
       updateSet: Map[String, org.apache.spark.sql.Column],
@@ -5114,202 +5321,174 @@ object TableCommit {
     updateSet.keys.foreach(c => require(tgtSchema.fieldNames.contains(c),
       s"MERGE SET column $c is not a column of $table — it would be " +
         "silently dropped"))
-    val src = source.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var matchedCache: Option[DataFrame] = None
-    var bySourceCache: Option[DataFrame] = None
+    // phase 1, SOURCE: collected to the driver once (no Spark job for
+    // a VALUES or local-Seq source), guarded there, and served back to
+    // the plan as a local relation tagged with a driver-assigned row
+    // id — nothing below re-executes the caller's source plan
+    val srcSchema = source.schema
+    val srcInternal = sourceRows(s, table, source.queryExecution)
+    val guard = mergeGuard(s, srcSchema, srcInternal, keyCols)
+    // an EMPTY source short-circuits only without the BY SOURCE
+    // clause: with it, every target row is not-matched-by-source and
+    // the clause decides (SQL semantics — empty source + uncondi-
+    // tional clause means delete everything)
+    if (guard.rows == 0L && notMatchedBySourceDelete.isEmpty)
+      return MergeAudit(baseId0, baseId0, total, 0, 0, 0, 0, 0, 0)
+    require(guard.distinctKeys == guard.rows,
+      s"MERGE source has duplicate or NULL (${keyCols.mkString(", ")}) " +
+        "keys — a target row matching two source rows is ambiguous " +
+        "(the SQL MERGE cardinality rule), and a NULL key component " +
+        "can never match")
+    // the BY SOURCE clause must see EVERY live target row (a file
+    // outside the source key band can hold rows to delete), so it
+    // disables both the candidate pruning and the band-scoped
+    // added-file conflict rule below — full candidacy, like Delta
+    val band =
+      if (notMatchedBySourceDelete.isDefined) None
+      else mergeBand(tgtSchema.fields.find(_.name == leadKey)
+        .map(_.dataType), guard.lo, guard.hi)
+    val candidates = band match {
+      case Some(b) => pruneFilesBand(m, leadKey, b)
+      case None => filesOf(m)
+    }
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val srcExt = externalRows(srcSchema, srcInternal)
+    val rid = "__graft_srid"
+    val srcR = broadcast(s.createDataFrame(
+      srcExt.zipWithIndex.map { case (r, i) =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toLong)
+      }.asJava,
+      StructType(srcSchema.fields.map(f => f.copy(name = s"src_${f.name}")) :+
+        StructField(rid, LongType, nullable = false))))
+    // the ON condition: equality CONJUNCTION over the key tuple,
+    // narrowed by the residual when one is declared
+    val onCond = onResidual.foldLeft(
+      keyCols.map(k => col(k) === col(s"src_$k")).reduce(_ && _))(_ && _)
+    val delPred = deleteWhen.map(c => coalesce(c, lit(false)))
+      .getOrElse(lit(false))
+    // phase 2, CLASSIFY: live candidate rows (prior vectors applied,
+    // positions tagged) against the broadcast source — an inner join,
+    // or a left-outer one when the BY SOURCE clause needs the
+    // unmatched rows too — keeping the rows this merge kills: matched
+    // rows (row id set; `__graft_del` when the DELETE clause takes
+    // them) and unmatched rows the clause deletes (row id NULL).
+    // PERSISTED: the classify pass, the update successors and the
+    // change feed all read it. It is NOT bounded by the source — the
+    // cardinality rule bounds source keys, and a target may hold a key
+    // many times — so it is cached, never collected. It is cached as
+    // an RDD of rows: adaptive execution would materialize a cached
+    // Dataset in a job of its own, and a fresh plan over the join
+    // would broadcast the source again
+    val kept: Option[(org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
+        StructType)] =
+      if (candidates.isEmpty) None
+      else {
+        val raw = pinnedRead(s, table, m, candidates, withMeta = true)
+        val live = applyDv(s, table, m, candidates,
+          dvKeyCols(raw, depthsOf(candidates))).drop("_metadata")
+        val df = (notMatchedBySourceDelete match {
+          case None => live.join(srcR, onCond)
+          case Some(cond) => live.join(srcR, onCond, "left_outer")
+            // NULL keeps (SQL semantics)
+            .filter(col(rid).isNotNull || coalesce(cond, lit(false)))
+        }).withColumn("__graft_del", col(rid).isNotNull && delPred)
+        Some(labelled(s, table, "classify")(df.rdd)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) ->
+          df.schema)
+      }
     try {
-      // one pass over the source: cardinality guard (distinct key
-      // TUPLES) + the leading-key band that stats-prunes candidates
-      // and arbitrates rebase-vs-conflict below
-      val srcAgg = src.agg(
-        count(lit(1)),
-        countDistinct(col(keyCols.head), keyCols.tail.map(col): _*),
-        min(col(leadKey)).cast("string"), max(col(leadKey)).cast("string"))
-        .collect()(0)
-      val srcRows = srcAgg.getLong(0)
-      // an EMPTY source short-circuits only without the BY SOURCE
-      // clause: with it, every target row is not-matched-by-source and
-      // the clause decides (SQL semantics — empty source + uncondi-
-      // tional clause means delete everything)
-      if (srcRows == 0L && notMatchedBySourceDelete.isEmpty)
-        return MergeAudit(baseId0, baseId0, total, 0, 0, 0, 0, 0, 0)
-      require(srcAgg.getLong(1) == srcRows,
-        s"MERGE source has duplicate or NULL (${keyCols.mkString(", ")}) " +
-          "keys — a target row matching two source rows is ambiguous " +
-          "(the SQL MERGE cardinality rule), and a NULL key component " +
-          "can never match")
-      // the pruning band compares in the KEY TYPE's own order —
-      // numeric keys as BigDecimal, string keys lexicographically in
-      // code-point order against the truncated string stats, ISO
-      // NTZ-timestamp/date keys lexicographically when the rendering is in
-      // the four-digit-year safe era. Mixing orders is the round-10
-      // trap (keys "9","10" compared numerically give band (10, 9),
-      // prune everything, and duplicate-insert existing keys as NOT
-      // MATCHED) — each arm is self-consistent with how [[fileMeta]]
-      // recorded that type's bounds. Unbandable keys keep ALL files
-      // candidate (correct, just unpruned); the lo<=hi guards are
-      // belt-and-braces against any residual rendering skew.
-      import org.apache.spark.sql.types._
-      // the BY SOURCE clause must see EVERY live target row (a file
-      // outside the source key band can hold rows to delete), so it
-      // disables both the candidate pruning and the band-scoped
-      // added-file conflict rule below — full candidacy, like Delta
-      val bandable = notMatchedBySourceDelete.isEmpty
-      val keyType = tgtSchema.fields.find(_.name == leadKey).map(_.dataType)
-      val srcLo = Option(srcAgg.getString(2))
-      val srcHi = Option(srcAgg.getString(3))
-      val band: Option[StatBand] = if (!bandable) None else keyType match {
-        case Some(_: NumericType) => (for {
-          lo <- srcLo.flatMap(v => scala.util.Try(BigDecimal(v)).toOption)
-          hi <- srcHi.flatMap(v => scala.util.Try(BigDecimal(v)).toOption)
-        } yield NumBand(lo, hi)).filter(b => b.lo <= b.hi)
-        case Some(StringType) => (for {
-          lo <- srcLo; hi <- srcHi
-        } yield LexBand(lo, hi)).filter(b => cpCompare(b.lo, b.hi) <= 0)
-        // zoned TimestampType deliberately absent: its rendering is
-        // session-TZ-dependent, so persisted stats and a later
-        // session's band could disagree (see fileMeta's refine)
-        case Some(DateType | TimestampNTZType) => (for {
-          lo <- srcLo; hi <- srcHi
-          if isoLexSafe(lo) && isoLexSafe(hi)
-        } yield LexBand(lo, hi)).filter(b => cpCompare(b.lo, b.hi) <= 0)
-        case _ => None
+      // ONE job (plus the source broadcast): every task folds its rows
+      // into per-file counts and a kill bitmap, and the driver merges
+      // the partials — no shuffle, and driver memory tracks compressed
+      // vector bytes plus |source|
+      val partials = kept.fold(Array.empty[(Seq[(String, Array[Long],
+          Array[Byte])], Array[Byte])]) { case (rows, sch) =>
+        val at = Seq("__graft_dvk", "__graft_dvp", rid, "__graft_del")
+          .map(sch.fieldIndex)
+        labelled(s, table, "classify")(rows.mapPartitions(it =>
+          classifyPartition(it, at(0), at(1), at(2), at(3))).collect())
       }
-      val candidates = band match {
-        case Some(b) => pruneFilesBand(m, leadKey, b)
-        case None => filesOf(m)
-      }
-      val srcR = broadcast(src.select(
-        src.columns.map(c => col(c).as(s"src_$c")).toIndexedSeq: _*))
-      // the ON condition: equality CONJUNCTION over the key tuple,
-      // narrowed by the residual when one is declared
-      val onCond = onResidual.foldLeft(
-        keyCols.map(k => col(k) === col(s"src_$k")).reduce(_ && _))(_ && _)
-      // the matched frame: live candidate rows (prior vectors applied,
-      // positions tagged) joined to the broadcast source on the key.
-      // PERSISTED — it feeds four consumers (per-file hit counts, the
-      // DV write, the update successors, the not-matched anti-join
-      // keys), each of which would otherwise rescan every candidate
-      // file; it is at most source-sized (the cardinality rule), so
-      // caching costs |batch|, never table size
-      val liveAll =
-        if (candidates.isEmpty) None
-        else {
-          val raw = pinnedRead(s, table, m, candidates, withMeta = true)
-          Some(applyDv(s, table, m, candidates,
-            dvKeyCols(raw, depthsOf(candidates))))
-        }
-      val matched = liveAll.map(
-        _.join(srcR, onCond)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      matchedCache = matched
-      // WHEN NOT MATCHED BY SOURCE AND cond THEN DELETE: live target
-      // rows whose key tuple joins NO source row, clause-filtered
-      // (NULL keeps, SQL semantics); shares the one candidate read
-      val bySource = for {
-        cond <- notMatchedBySourceDelete
-        live <- liveAll
-      } yield live
-        // full srcR (not a key projection): the ON residual may
-        // reference any src_ column; the frame is broadcast either way
-        .join(srcR, onCond, "left_anti")
-        .filter(coalesce(cond, lit(false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bySourceCache = bySource
-      val delPred = deleteWhen.map(c => coalesce(c, lit(false)))
-        .getOrElse(lit(false))
-      // per-hit-file (matched, deleted) counts — |candidates| scalar
-      // rows to the driver, the hitScan shape with the clause split
-      // the DV key IS the manifest-relative path (per-file depth) —
-      // hit counts key straight back to the candidate list
-      val byKey = candidates.map(r => r -> r).toMap
-      // ONE fused aggregation over both persisted frames (optimization
-      // r16, guide §1.2): the matched counts and the by-source counts
-      // previously collected in two driver round-trips; tagging the
-      // union keeps the groups disjoint, so every count is identical —
-      // merges without the BY SOURCE clause keep a single-frame plan
-      def tagged(df: DataFrame, bs: Boolean, d: org.apache.spark.sql.Column) =
-        df.select(col("__graft_dvk").as("k"), lit(bs).as("bs"), d.as("d"))
-      val countFrames = Seq(
-        matched.map(tagged(_, bs = false,
-          when(delPred, 1L).otherwise(0L))),
-        bySource.map(tagged(_, bs = true, lit(0L)))).flatten
-      val countRows: Seq[(String, Boolean, Long, Long)] =
-        countFrames.reduceOption(_.unionAll(_)) match {
-          case Some(u) => u.groupBy(col("k"), col("bs"))
-            .agg(count(lit(1)).as("n"), sum(col("d")).as("d"))
-            .collect().toSeq.map(r =>
-              (r.getString(0), r.getBoolean(1), r.getLong(2), r.getLong(3)))
-          case None => Nil
-        }
-      def relOf(key: String): Option[String] = byKey.get(key)
-        .orElse(byKey.get(java.net.URLDecoder.decode(key, "UTF-8")))
-      val hitCounts: Map[String, (Long, Long)] = countRows
-        .filter(!_._2).flatMap { case (key, _, n, d) =>
-          relOf(key).map(_ -> (n, d))
-        }.toMap
-      val bsCounts: Map[String, Long] = countRows
-        .filter(_._2).flatMap { case (key, _, n, _) =>
-          relOf(key).map(_ -> n)
-        }.toMap
-      val hit = candidates.filter(f =>
-        hitCounts.contains(f) || bsCounts.contains(f))
+      val hits = kept.map { case (rows, sch) => s.createDataFrame(rows, sch) }
+      val relOf = relIndex(table, candidates)
+      // per hit file: (matched, deleted, by-source) counts and the
+      // kill bitmaps of the tasks that saw it
+      val perFile = scala.collection.mutable.HashMap.empty[String,
+        (Array[Long], scala.collection.mutable.ArrayBuffer[Array[Byte]])]
+      partials.foreach(_._1.foreach { case (key, n, bmp) =>
+        val rel = relOf(key).getOrElse(sys.error(
+          s"MERGE on $table: scanned file key $key resolves to no " +
+            "candidate file"))
+        val (c, blobs) = perFile.getOrElseUpdate(rel,
+          (new Array[Long](3), scala.collection.mutable.ArrayBuffer.empty))
+        (0 until 3).foreach(i => c(i) += n(i))
+        blobs += bmp
+      })
+      val matchedRids = DvCodec.mergeDecoded(partials.toSeq.map(_._2))
+      val hitCounts: Map[String, (Long, Long)] = perFile.collect {
+        case (rel, (c, _)) if c(0) > 0L => rel -> (c(0), c(1))
+      }.toMap
+      val bsCounts: Map[String, Long] = perFile.collect {
+        case (rel, (c, _)) if c(2) > 0L => rel -> c(2)
+      }.toMap
+      val hit = candidates.filter(perFile.contains)
       val rowsMatched = hitCounts.valuesIterator.map(_._1).sum
       val rowsDeleted = hitCounts.valuesIterator.map(_._2).sum
       val rowsUpdated = rowsMatched - rowsDeleted
       val rowsDeletedBySource = bsCounts.valuesIterator.sum
       val writerId = java.util.UUID.randomUUID().toString.take(8)
-      // every matched row's old version dies (updates get successors);
-      // by-source-clause rows die with no successor
-      val killFrame = (matched, bySource) match {
-        case (Some(a), Some(b)) =>
-          Some(a.select(col("__graft_dvk"), col("__graft_dvp"))
-            .unionByName(b.select(col("__graft_dvk"), col("__graft_dvp"))))
-        case (a, b) => a.orElse(b)
-      }
-      val dvRel =
-        if (hit.nonEmpty) writeDvSidecar(s, table, writerId, killFrame.get)
-        else s"_dv/$writerId"
+      // phase 3: every matched row's old version dies (updates get
+      // successors), by-source-clause rows die with no successor — one
+      // vector per hit file, written by the driver
+      val (dvRel, dvDir) =
+        if (hit.isEmpty) (s"_dv/$writerId", None)
+        else {
+          val (rel, dir) = writeDvLocal(s, table, writerId,
+            perFile.map { case (f, (_, bs)) =>
+              f -> (if (bs.length == 1) bs.head
+                else DvCodec.encode(DvCodec.mergeDecoded(bs.toSeq)))
+            }.toMap)
+          (rel, Some(dir))
+        }
       // successors: the update clause over the pre-merge row, each
       // assignment cast to the declared type (schema of record invariant)
-      val successors = matched.map(_.filter(!delPred)
+      val successors = hits.map(_.filter(col(rid).isNotNull &&
+          !col("__graft_del"))
         .select(tgtSchema.fields.map { f =>
           updateSet.get(f.name) match {
             case Some(e) => e.cast(f.dataType).as(f.name)
             case None => col(f.name)
           }
         }.toIndexedSeq: _*))
-      // NOT MATCHED: source key tuples absent from every candidate's
-      // live rows (pruning proves non-candidates cannot hold one)
-      val matchedKeys = matched.map(
-        _.select(keyCols.map(k => col(s"src_$k").as(k)): _*).distinct())
-      val insertsRaw = matchedKeys match {
-        case Some(mk) => src.join(mk, keyCols, "left_anti")
-        case None => src
-      }
-      val inserts = insertsRaw.select(tgtSchema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+      // NOT MATCHED: source rows no candidate's live row matched
+      // (pruning proves non-candidates cannot hold one) — local rows,
+      // selected by row id on the driver
+      val inserts = s.createDataFrame(srcExt.indices
+          .filter(i => java.util.Arrays.binarySearch(matchedRids, i.toLong) < 0)
+          .map(srcExt).asJava, srcSchema)
+        .select(tgtSchema.fields.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
       // writer-recorded CHANGE DATA: the full four-way classification
-      // in one sidecar — delete preimages (deleteWhen clause), update
-      // pre/postimages, inserts — cost ∝ |matched| + |inserted|;
+      // in one sidecar — delete preimages (either DELETE clause),
+      // update pre/postimages, inserts — cost ∝ |matched| + |inserted|;
       // OPT-IN via graft.cdf=true (Delta's default: off)
       val cdfOn = cdfEnabled(table)
       val cdcRel = s"_cdc/$writerId"
       if (cdfOn) {
         val tgtCols = tgtSchema.fields.toSeq.map(f => col(f.name))
-        val cdcParts = Seq(
-          matched.map(_.filter(delPred).select(tgtCols :+
-            lit("delete").as("_change_type"): _*)),
-          bySource.map(_.select(tgtCols :+
-            lit("delete").as("_change_type"): _*)),
-          matched.map(_.filter(!delPred).select(tgtCols :+
-            lit("update_preimage").as("_change_type"): _*)),
+        def tagged(df: DataFrame, kind: String): DataFrame =
+          df.select(tgtCols :+ lit(kind).as("_change_type"): _*)
+        val cdcParts = hits.toSeq.flatMap(h => Seq(
+          tagged(h.filter(col(rid).isNull || col("__graft_del")), "delete"),
+          tagged(h.filter(col(rid).isNotNull && !col("__graft_del")),
+            "update_preimage"))) ++
           successors.map(_.withColumn("_change_type",
-            lit("update_postimage"))),
-          Some(inserts.withColumn("_change_type", lit("insert")))).flatten
-        cdcParts.reduce(_.unionByName(_))
-          .write.mode("overwrite").parquet(s"$table/$cdcRel")
+            lit("update_postimage"))) :+
+          inserts.withColumn("_change_type", lit("insert"))
+        labelled(s, table, "cdc")(cdcParts.reduce(_.unionByName(_))
+          .write.mode("overwrite").parquet(s"$table/$cdcRel"))
       }
+      // phase 4, WRITE: successors ∪ inserts in one staged write
       val freshSrc = successors.fold(inserts)(_.unionByName(inserts))
       val statsCols = statsOf(m).keysIterator.map(_._2).toSeq.distinct.sorted
       val specs = specColsOf(partCols)
@@ -5322,15 +5501,19 @@ object TableCommit {
       }
       val checked = constraints(table)
       val wcols = shaped.columns.toSeq
-      .filterNot(derivedDirNames(partCols))
+        .filterNot(derivedDirNames(partCols))
       val wmap = writeMapping(table, wcols)
-      val (fresh, freshBytes) = stageMove(table, writerId, shaped, partCols,
-        checkedConstraints = checked, wmap = wmap)
-      val (freshStats, freshRows) =
-        if (statsCols.nonEmpty && fresh.nonEmpty)
-          fileMeta(s, table, fresh, statsCols, wmap)
-        else (Map.empty[(String, String), (String, String)],
-          footerRows(table, fresh))
+      val (fresh, freshBytes, freshStats, freshRows) =
+        labelled(s, table, "write") {
+          val (fresh, freshBytes) = stageMove(table, writerId, shaped,
+            partCols, checkedConstraints = checked, wmap = wmap)
+          val (freshStats, freshRows) =
+            if (statsCols.nonEmpty && fresh.nonEmpty)
+              fileMeta(s, table, fresh, statsCols, wmap)
+            else (Map.empty[(String, String), (String, String)],
+              footerRows(table, fresh))
+          (fresh, freshBytes, freshStats, freshRows)
+        }
       val rowsInserted = freshRows.valuesIterator.sum - rowsUpdated
       val hitSet = hit.toSet
       val baseDvSig = dvOf(m).filter { case (rel, _) => hitSet(rel) }
@@ -5373,7 +5556,7 @@ object TableCommit {
         val c = carriedFrom(baseM.map(_._2), _ => true)
         guardConstraints(table, checked, c.props)
         guardMapping(table, wmap, wcols, c.schema, c.props)
-      guardSpec(table, partCols, c.props)
+        guardSpec(table, partCols, c.props)
         val nextDv =
           if (hit.isEmpty) c.dv
           else c.dv ++ hit.map(rel =>
@@ -5389,6 +5572,9 @@ object TableCommit {
             c.props, c.bytes ++ freshBytes,
             cdc = if (cdfOn) Seq(cdcRel) else Nil,
             op = Some("MERGE"))) {
+          // the published vector is already in hand: the next read of
+          // this snapshot opens no sidecar
+          dvDir.foreach(d => dvMemo.put((table, dvRel), d))
           vacuum(table, baseId + 1)
           published = baseId + 1
           committed = true
@@ -5405,11 +5591,7 @@ object TableCommit {
       MergeAudit(baseId0, published, total, candidates.length, hit.length,
         fresh.length, rowsUpdated, rowsDeleted, rowsInserted,
         rowsDeletedBySource)
-    } finally {
-      matchedCache.foreach(_.unpersist())
-      bySourceCache.foreach(_.unpersist())
-      src.unpersist()
-    }
+    } finally kept.foreach(_._1.unpersist())
   }
 
   /** ROW-LEVEL UPDATE as a COPY-ON-WRITE commit — [[deleteWhere]]'s

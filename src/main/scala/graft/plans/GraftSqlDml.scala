@@ -91,6 +91,15 @@ object GraftSqlDml {
   private def colFor(e: Expression, tgt: AttributeSet,
       src: AttributeSet): Column =
     org.apache.spark.sql.functions.expr(e.transform {
+      // the analyzer's NOT NULL shim (a nullable source value assigned to
+      // a non-nullable column) has no SQL spelling: fail the same way
+      case n: org.apache.spark.sql.catalyst.expressions.objects
+          .AssertNotNull =>
+        org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(n.child,
+          org.apache.spark.sql.catalyst.analysis.UnresolvedFunction(
+            "raise_error", Seq(org.apache.spark.sql.catalyst.expressions
+              .Literal(s"NULL value assigned to a non-nullable column: " +
+                n.child.sql)), isDistinct = false)))
       case a: AttributeReference if src.contains(a) =>
         UnresolvedAttribute.quoted("src_" + a.name)
       case a: AttributeReference if tgt.contains(a) =>
@@ -365,16 +374,11 @@ object GraftSqlDml {
           "rows_deleted_by_source").map(n =>
           AttributeReference(n, LongType, nullable = false)()),
         s => {
-          // the resolved source plan back as a DataFrame, through the
-          // public createDataFrame seam (CDC-batch-sized conversion)
-          val srcSchema = sourcePlan.schema
-          val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToScalaConverter(srcSchema)
-          val sourceDf = org.apache.spark.sql.classic.ClassicConversions
-            .castToImpl(s).createDataFrame(
-              s.sessionState.executePlan(sourcePlan).toRdd
-                .map(r => toScala(r).asInstanceOf[Row]),
-              srcSchema)
+          // the resolved source plan collected ONCE to the driver and
+          // served back as a local frame (the source is the merge's
+          // small side by contract; a VALUES or local-Seq source
+          // collects with no Spark job)
+          val sourceDf = TableCommit.localSource(s, t.path, sourcePlan)
           val srcAndPin: (org.apache.spark.sql.DataFrame, Option[Long]) =
             if (insertEnabled) (sourceDf, None)
             else {

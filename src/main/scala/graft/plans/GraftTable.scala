@@ -479,8 +479,7 @@ class GraftScan(path: String, meta: TableCommit.ScanMeta,
               if (sc.transform.isDefined) return None
               null
             } else {
-              val v = scala.util.Try(
-                java.net.URLDecoder.decode(raw, "UTF-8")).getOrElse(raw)
+              val v = TableCommit.pctDecode(raw)
               sc.transform match {
                 case None => castDirValue(v, f.dataType)
                 case Some(("bucket", n)) =>
@@ -950,9 +949,7 @@ private[graft] object GraftScan {
       else {
         val raw = seg.substring(cut + 1)
         if (raw == "__HIVE_DEFAULT_PARTITION__") None
-        else Some(seg.substring(0, cut) ->
-          scala.util.Try(java.net.URLDecoder.decode(raw, "UTF-8"))
-            .getOrElse(raw))
+        else Some(seg.substring(0, cut) -> TableCommit.pctDecode(raw))
       }
     }.toMap
 
