@@ -25,8 +25,10 @@ import org.apache.spark.sql.functions._
   */
 object ModelStore {
 
-  /** Bump when the artifact format or training semantics change. */
-  private val Version = "v1"
+  /** Bump when the artifact format or training semantics change (v2:
+    * IVF Lloyd's sums on the driver, so centroids may differ from v1's
+    * in the last bit). */
+  private val Version = "v2"
 
   private val lock = new Object
 

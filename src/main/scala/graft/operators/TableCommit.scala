@@ -2626,14 +2626,17 @@ object TableCommit {
     * the consumer's reads pin — diffing against "whatever is newest"
     * would race a concurrent commit landing between the consumer's
     * resolve and its diff (the diff would name files the pinned
-    * snapshot doesn't carry). */
-  def changedFileSets(table: String, sinceId: Long,
-      toId: Long): (Seq[String], Seq[String]) = {
+    * snapshot doesn't carry).
+    *
+    * `pastWindow`: see [[pastWindowAt]]. */
+  def changedFileSets(table: String, sinceId: Long, toId: Long,
+      pastWindow: Boolean = false): (Seq[String], Seq[String]) = {
     val all = manifests(table)
-    val since = all.find(_._1 == sinceId).getOrElse(sys.error(
-      s"snapshot $sinceId of $table is outside the retention window"))
-    val to = all.find(_._1 == toId).getOrElse(sys.error(
-      s"snapshot $toId of $table is outside the retention window"))
+    def at(id: Long): (Long, Snapshot) =
+      pastWindowAt(table, all, id, pastWindow).getOrElse(sys.error(
+        s"snapshot $id of $table is outside the retention window"))
+    val since = at(sinceId)
+    val to = at(toId)
     val before = filesOf(since._2)
     val after = filesOf(to._2)
     val beforeSet = before.toSet
@@ -2849,10 +2852,26 @@ object TableCommit {
       dv: Map[String, Seq[String]],
       props: Map[String, String])
 
-  /** Resolve snapshot `id` (None = newest) into a [[ScanMeta]]. */
-  private[graft] def scanMeta(table: String, id: Option[Long]): Option[ScanMeta] = {
+  /** Snapshot `id` among the retained snapshots `all` of `table` or,
+    * with `pastWindow`, one that left the retention window while its
+    * manifest chain is still on disk — for the append-only stream
+    * ([[graft.plans.GraftMicroBatchStream]]), which reads only files a
+    * later snapshot still carries (an append-only table never drops a
+    * file) and needs an older snapshot just for its file list. A
+    * consumer that lags the writers by more than the window keeps
+    * draining; once vacuum deletes the chain the lookup fails as
+    * without the flag. */
+  private def pastWindowAt(table: String, all: Seq[(Long, Snapshot)],
+      id: Long, pastWindow: Boolean): Option[(Long, Snapshot)] =
+    all.find(_._1 == id)
+      .orElse(if (pastWindow) stateOf(table, id).map(id -> _) else None)
+
+  /** Resolve snapshot `id` (None = newest) into a [[ScanMeta]];
+    * `pastWindow` as in [[pastWindowAt]]. */
+  private[graft] def scanMeta(table: String, id: Option[Long],
+      pastWindow: Boolean = false): Option[ScanMeta] = {
     val want = id.orElse(resolve(table).map(_._1))
-    want.flatMap(i => manifests(table).find(_._1 == i)).map { case (i, m) =>
+    want.flatMap(i => pastWindowAt(table, manifests(table), i, pastWindow)).map { case (i, m) =>
       ScanMeta(i, filesOf(m), schemaOf(m), statsOf(m), rowsOf(m), m.bytes,
         dvOf(m), propsOf(m))
     }

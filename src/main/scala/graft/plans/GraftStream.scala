@@ -40,7 +40,13 @@ import graft.operators.TableCommit
   * physical) fails the stream with a restart hint — a silent
   * null-read would be worse; pure renames and added columns are
   * benign (physicals are stable under rename by the mapping
-  * contract). */
+  * contract).
+  *
+  * Lag: the diffs and the batch's end snapshot may lie past the
+  * retention window while their manifest chains are on disk
+  * (`pastWindow`), so a consumer — running or restarted from its
+  * checkpoint — may fall any number of commits behind until vacuum
+  * deletes the chain under its offset. */
 private[plans] class GraftMicroBatchStream(
     path: String, streamSchema: StructType, required: StructType,
     pushed: Array[sources.Filter], startingSnapshot: Option[Long],
@@ -113,7 +119,8 @@ private[plans] class GraftMicroBatchStream(
         var budget = maxF.toLong
         var done = false
         while (!done && end < newest) {
-          val n = TableCommit.changedFileSets(path, end, end + 1)._1.length
+          val n = TableCommit.changedFileSets(path, end, end + 1,
+            pastWindow = true)._1.length
           if (end > a && n > budget) done = true
           else { end += 1; budget -= n }
         }
@@ -136,9 +143,9 @@ private[plans] class GraftMicroBatchStream(
     val a = start.asInstanceOf[GraftStreamOffset].id
     val b = end.asInstanceOf[GraftStreamOffset].id
     if (b <= a && a >= 0L) { inner = None; return Array.empty }
-    val metaB = TableCommit.scanMeta(path, Some(b)).getOrElse(
+    val metaB = TableCommit.scanMeta(path, Some(b), pastWindow = true).getOrElse(
       sys.error(s"micro-batch end snapshot $b of $path is no longer " +
-        "reconstructable — the stream lagged past the retention window"))
+        "reconstructable — vacuum removed its manifest chain"))
     // mapping-drift guard for the columns this stream actually reads
     metaB.schema.foreach { sch =>
       val physNow = TableCommit.physicalSchemaFor(sch)
@@ -164,7 +171,8 @@ private[plans] class GraftMicroBatchStream(
       else {
         val added = Seq.newBuilder[String]
         ((a + 1L) to b).foreach { id =>
-          val (add, removed) = TableCommit.changedFileSets(path, id - 1, id)
+          val (add, removed) = TableCommit.changedFileSets(path, id - 1, id,
+            pastWindow = true)
           if (removed.nonEmpty) sys.error(
             s"commit $id of $path removed ${removed.length} file(s) — " +
               "a streaming read tails APPEND-ONLY tables; rewrites " +

@@ -3,7 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
 import graft.QueryDef
+import graft.functions.NearestCells
 import graft.functions.Parity.dround
 import graft.sources.Tables
 
@@ -234,45 +236,22 @@ object Similarity {
     * vector space into cells; vectors index into their nearest cell and
     * each query probes its nprobe=2 nearest cells — the structure behind
     * FAISS-style IVF indexes, with the cell id as an ordinary shuffle
-    * key. `no-oracle`: the centroids come from Spark ML KMeans (seeded,
-    * deterministic within a Spark version) which DuckDB cannot
+    * key. `no-oracle`: the centroids are a trained model DuckDB does not
     * reproduce; the recall contract vs exact top-k is asserted in
     * SimilaritySpec.
     *
-    * Scale hygiene (round-2): the centroids are learned with a pure
-    * DataFrame Lloyd's iteration over a deterministic 25% SAMPLE — at
-    * 10⁹ vectors training cost is set by the sample, and centroid
-    * quality converges long before that. No Spark ML in the path
-    * (measured: the first `KMeans.fit` of a session costs ~4 s of
-    * MLlib class-loading/JIT alone at this scale — more than the whole
-    * query); each Lloyd round is ONE codegen'd job over the cached
-    * sample (literal-centroid argmin + 64 per-dimension avgs) and the
-    * only driver traffic is the K×64 centroid matrix, a model
-    * parameter, not data. Assignment embeds the learned centroids as
-    * LITERAL arrays in a codegen'd expression (dist² argmin via
-    * −2·v·c + |c|², the |v|² term being rank-invariant). Each vector is
-    * indexed ONCE (top-1 cell); each query fans out to its top-2 cells,
-    * so the per-cell join touches 2 cells per query instead of leaving
-    * recall to single-probe luck. */
-  /** K-row centroid frame: (cell id, components, |c|²). Scoring joins
-    * against this instead of embedding centroids as literals — literal
-    * embedding regenerates (and re-janino-compiles) the projection for
-    * every new centroid matrix, which costs more than the arithmetic;
-    * the join form compiles once. score = −2·v·c + |c|² (∝ squared
-    * distance up to the rank-invariant +|v|²). */
-  private def centFrame(s: SparkSession, cs: Array[Array[Double]]): DataFrame = {
-    import s.implicits._
-    broadcast(cs.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }
-      .toSeq.toDF("cid", "cv", "cn2"))
-  }
-
-  private def scoredAgainst(s: SparkSession, in: DataFrame,
-      cs: Array[Array[Double]]): DataFrame =
-    in.crossJoin(centFrame(s, cs))
-      .withColumn("score",
-        call_function("graft_dot_fd", col("v"), col("cv")) * -2.0 + col("cn2"))
-
+    * Training ([[trainCentroids]]) is Lloyd's over a deterministic,
+    * row-capped sample, collected once and iterated on the driver: one
+    * Spark job per model, and no Spark ML in the path (the first
+    * `KMeans.fit` of a session costs ~4 s of MLlib class-loading/JIT
+    * alone at this scale). Routing is one narrow projection: the
+    * [[graft.functions.NearestCells]] expression scores a vector against
+    * every centroid (score = −2·v·c + |c|², squared distance up to the
+    * rank-invariant |v|²) and returns its top cells ordered by (score,
+    * cid) — no window, no groupBy, no join back to the vectors. Each
+    * vector is indexed ONCE (top-1 cell); each query fans out to its
+    * top-2 cells, so the per-cell join touches 2 cells per query instead
+    * of leaving recall to single-probe luck. */
   /** Absolute ceiling on the Lloyd's training-sample size. A bare
     * fraction scales with the corpus — 0.25 of 100 TB of embeddings
     * would push 25 TB through every Lloyd round — while centroid
@@ -293,16 +272,6 @@ object Similarity {
       SampleBaseFraction
     else SampleCapRows.toDouble / n
 
-  /** Sample-trained pure-DataFrame Lloyd's (shared by n_cosine_knn_ivf
-    * and n_semdedup — see n_cosine_knn_ivf's scaladoc for the design
-    * rationale): deterministic hash-ranked init, assignment via the
-    * broadcast-join scorer so the round's physical plan is structurally
-    * identical across iterations and codegen compiles ONCE, centroid
-    * means aggregated over (cell, dim) after a posexplode rather than as
-    * 64 wide avg() columns (the wide form janino-compiles a
-    * multi-kilobyte aggregate — several seconds of one-off codegen).
-    * Only K×Dim centroid values ever reach the driver; the sample is
-    * row-capped by [[sampleFraction]]. */
   /** Sum of parquet footer record counts under `dir` — the corpus row
     * count with ZERO Spark jobs (optimization r16, guide §1.2: the
     * training-sample fraction needs only n, and a full scan job to
@@ -327,50 +296,62 @@ object Similarity {
       }.sum
     }.toOption
 
-  /** `knownCount` skips the sample-fraction count job when the caller
-    * already holds |e| (a prior count of the same frame, or footer
-    * metadata of the immutable input) — the FRACTION is a pure
-    * function of n, so the sample (and the model) is byte-identical
-    * to the counted path. */
-  private def trainCentroids(s: SparkSession, e: DataFrame, k: Int,
-      iters: Int, knownCount: Option[Long] = None): Array[Array[Double]] = {
-    import s.implicits._
-    // the training sample is tiny by construction — pack it into a few
-    // partitions so each Lloyd job schedules a handful of tasks, not a
-    // full cluster width of near-empty ones. HASH-partitioned on the
-    // aggregation key (round-9 verdict item 5): the per-iteration
-    // argmin groupBy(vec_id) then reuses the cached partitioning and
-    // plans NO Exchange — each Lloyd round drops from two shuffle
-    // stages to one tiny (cell, pos) one, and the driver-synchronized
-    // gap between them (the build line's dominant cost) goes with it.
-    // Content-hash partitioning also makes the aggregation's merge
-    // order independent of the upstream layout, so retrains converge
-    // bit-identically regardless of which pipeline fed the sample.
-    val train = e.sample(withReplacement = false,
-        fraction = sampleFraction(knownCount.getOrElse(e.count())), seed = 7)
-      .select(col("vec_id"), col("v")).repartition(4, col("vec_id")).cache()
-    // deterministic data-driven init: the K sample vectors with the
-    // smallest portable hash of their id (a seeded shuffle, engine-free)
-    val cents: Array[Array[Double]] = train
-      .withColumn("h", hcol)
-      .orderBy(col("h"), col("vec_id")).limit(k)
-      .select(col("v")).as[Array[Float]].collect().map(_.map(_.toDouble))
+  /** The Lloyd's training sample of an `n`-row frame `e` (vec_id, v) on
+    * the driver, as (vec_id, portable hash of vec_id, v) rows: ONE job,
+    * `e.sample(sampleFraction(n), seed 7)`. The collect is bounded by
+    * [[SampleCapRows]] (≈ 200k × 64 floats ≈ 51 MB expected at the cap),
+    * a model-sized constant that does not grow with the corpus. */
+  private[queries] def trainingSample(e: DataFrame, n: Long): Array[InternalRow] =
+    e.sample(withReplacement = false, fraction = sampleFraction(n), seed = 7)
+      .select(col("vec_id"), hcol.as("h"), col("v"))
+      .queryExecution.executedPlan.executeCollect()
+
+  /** Lloyd's over a [[trainingSample]] in plain arrays: the k sample
+    * vectors with the smallest (portable hash, vec_id) as the init (a
+    * seeded shuffle, engine-free), then `iters` rounds of nearest-cell
+    * assignment through [[graft.functions.NearestCells.topN]] (the
+    * router's own score and tie-break) and per-(cell, dimension) means
+    * in double. Null vectors and null elements contribute nothing; a
+    * (cell, dimension) with no contribution keeps its previous value. */
+  private[queries] def lloyd(sample: Array[InternalRow], k: Int,
+      iters: Int): Array[Array[Double]] = {
+    val cents = sample.sortBy(r => (r.getLong(1), r.getLong(0))).take(k)
+      .map(_.getArray(2).toFloatArray().map(_.toDouble))
+    val vs = sample.map(_.getArray(2)) // null for a null vector
     for (_ <- 0 until iters) {
-      val upd = scoredAgainst(s, train, cents)
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("score"), col("cid"), col("v"))).as("m"))
-        .select(col("m.cid").as("cell"), posexplode(col("m.v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(avg(col("col").cast("double")).as("c"))
-        .collect()
-      // empty cells keep their previous centroid
-      upd.foreach { r =>
-        cents(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
+      val cn2 = NearestCells.norms(cents)
+      val sums = cents.map(c => new Array[Double](c.length))
+      val cnts = cents.map(c => new Array[Long](c.length))
+      vs.foreach { v =>
+        if (v != null) {
+          val cell = NearestCells.topN(v, cents, cn2, 1).getInt(0)
+          var i = 0
+          while (i < math.min(v.numElements(), sums(cell).length)) {
+            if (!v.isNullAt(i)) {
+              sums(cell)(i) += v.getFloat(i).toDouble
+              cnts(cell)(i) += 1
+            }
+            i += 1
+          }
+        }
       }
+      for (c <- cents.indices; i <- cents(c).indices if cnts(c)(i) > 0)
+        cents(c)(i) = sums(c)(i) / cnts(c)(i)
     }
-    train.unpersist(blocking = false)
     cents
   }
+
+  /** Sample-trained Lloyd's (shared by n_cosine_knn_ivf, n_semdedup and
+    * the unit-space IVF-PQ router): one Spark job collects the
+    * [[trainingSample]], every iteration runs on the driver
+    * ([[lloyd]]). `knownCount` skips the sample-fraction count job when
+    * the caller already holds |e| (a prior count of the same frame, or
+    * footer metadata of the immutable input) — the FRACTION is a pure
+    * function of n, so the sample (and the model) is byte-identical to
+    * the counted path. */
+  private def trainCentroids(e: DataFrame, k: Int, iters: Int,
+      knownCount: Option[Long] = None): Array[Array[Double]] =
+    lloyd(trainingSample(e, knownCount.getOrElse(e.count())), k, iters)
 
   /** The persisted IVF model (K=16, 3 Lloyd iterations over `vecs`):
     * loaded from the dataset-keyed [[graft.operators.ModelStore]] when
@@ -378,34 +359,27 @@ object Similarity {
     * contract a production index follows (round-4 verdict item 3;
     * `n_ann_build_models` is the explicit build line). Training is
     * deterministic and doubles round-trip parquet exactly, so the two
-    * paths are bit-identical (SimilaritySpec pins it). */
+    * paths are bit-identical (SimilaritySpec pins it). The sample
+    * fraction's n comes from the input's parquet footers: `vecs` keeps
+    * every row, so the sample and the model equal the counted path's. */
   private[graft] def ivfCentroids(s: SparkSession, d: String): Array[Array[Double]] =
     graft.operators.ModelStore.loadOrTrain(s,
       graft.operators.ModelStore.dir(d, "ivf_k16"))(
-      Array(trainCentroids(s, vecs(s, d), 16, 3))).head
+      Array(trainCentroids(vecs(s, d), 16, 3,
+        knownCount = parquetRowCount(s"$d/embeddings.parquet")))).head
 
   private def cosineKnnIvf(s: SparkSession, d: String): DataFrame = {
     val e = vecs(s, d)
     val cents = ivfCentroids(s, d)
-    def scored(in: DataFrame, cs: Array[Array[Double]]) =
-      scoredAgainst(s, in, cs)
-    // final index/probe assignment: top-2 cells per vector through the
-    // same compiled scorer + a thin window over K rows per vector
-    val cells = scored(e.select(col("vec_id"), col("v")), cents)
-      .withColumn("rn", row_number().over(wTopCell))
-      .filter(col("rn") <= 2)
-      .groupBy(col("vec_id"))
-      .agg(min(when(col("rn") === 1, col("cid"))).as("cell"),
-        min(when(col("rn") === 2, col("cid"))).as("cell2"))
-    val assigned = e.join(cells, Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"), col("cell2"))
+    // index cell and probe cells: each vector's top-2 cells, in the scan
+    val assigned = e.withColumn("cells",
+      NearestCells.column(col("v"), cents, 2))
     val data = assigned.select(col("vec_id").as("id2"), col("v").as("v2"),
-      col("nrm").as("n2"), col("cell"))
+      col("nrm").as("n2"), col("cells")(0).as("cell"))
     // probe cells are distinct (top-2 of distinct cell ids), so a
     // candidate pair appears at most once — no dedup needed before topK
     val probes = assigned.select(col("vec_id").as("id1"), col("v").as("v1"),
-      col("nrm").as("n1"),
-      explode(array(col("cell"), col("cell2"))).as("cell"))
+      col("nrm").as("n1"), explode(col("cells")).as("cell"))
     topK(probes.join(data, Seq("cell")).filter(col("id1") =!= col("id2")), 3)
   }
 
@@ -479,7 +453,7 @@ object Similarity {
   /** The PQ training-sample predicate applied at the SOURCE (round-9
     * verdict item 5): `pqTrain` keeps the hash-half of its input
     * anyway, and the per-vector pipelines feeding the RESIDUAL training
-    * (cell-assignment window, re-join, residual slice) are all
+    * (nearest-cell routing, residual slice) are all
     * row-independent — so filtering the corpus BEFORE them halves that
     * work while producing the exact same training rows. */
   private def pqSampleHalf(nv: DataFrame): DataFrame =
@@ -488,9 +462,10 @@ object Similarity {
   /** Train all M codebooks in ONE job per Lloyd iteration (rows keyed by
     * subspace): deterministic hash sample, hash-ranked init. */
   private def pqTrain(s: SparkSession, sub: DataFrame): Array[Array[Array[Double]]] = {
-    // hash-partitioned on the argmin keys (the trainCentroids note):
-    // the per-iteration groupBy(vec_id, m) reuses the cached
-    // partitioning — no Exchange per Lloyd round
+    // the sample is tiny: a few partitions, hash-partitioned on the
+    // argmin keys, so the per-iteration groupBy(vec_id, m) reuses the
+    // cached partitioning — no Exchange per Lloyd round — and the merge
+    // order does not depend on the upstream layout
     val tsub = sub.withColumn("h", hcol)
       .filter(pmod(col("h"), lit(2L)) === 0L)
       .repartition(4, col("vec_id"), col("m")).cache()
@@ -612,9 +587,6 @@ object Similarity {
   }
 
   // ------------------------------------------------------------------ n_ivf_pq
-  private def wTopCell = Window.partitionBy(col("vec_id"))
-    .orderBy(col("score").asc, col("cid").asc)
-
   /** Routing centroids over the UNIT-normalized vectors — the residual
     * IVF-PQ composition must assign cells in the same space it encodes
     * (n_cosine_knn_ivf's raw-v model routes magnitude+direction; the
@@ -624,16 +596,12 @@ object Similarity {
   private[graft] def ivfUnitCentroids(s: SparkSession, d: String): Array[Array[Double]] =
     graft.operators.ModelStore.loadOrTrain(s,
       graft.operators.ModelStore.dir(d, "ivfn_k16"))(
-      Array(trainCentroids(s,
+      Array(trainCentroids(
         normVecs(vecs(s, d)).select(col("vec_id"), col("nv").as("v")), 16, 3))).head
 
-  /** (vec_id, cell): top-1 unit-space cell per vector. */
-  private def unitCells(s: SparkSession, nv: DataFrame,
-      cents: Array[Array[Double]]): DataFrame =
-    scoredAgainst(s, nv.select(col("vec_id"), col("nv").as("v")), cents)
-      .withColumn("rn", row_number().over(wTopCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
+  /** `nv` plus its top-1 unit-space `cell`. */
+  private def withUnitCell(nv: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    nv.withColumn("cell", NearestCells.column(col("nv"), cents, 1)(0))
 
   /** RESIDUAL sub-vectors (vec_id, cell, m, sv) of a (vec_id, cell, nv)
     * frame: r = nv − centroid(cell), sliced into the M subspaces. The
@@ -670,20 +638,17 @@ object Similarity {
       // training half only (pqSampleHalf scaladoc)
       val half = pqSampleHalf(normVecs(vecs(s, d)))
       val cents = ivfUnitCentroids(s, d)
-      pqTrain(s, residualSub(s,
-        unitCells(s, half, cents).join(half, Seq("vec_id")), cents))
+      pqTrain(s, residualSub(s, withUnitCell(half, cents), cents))
     }
 
   /** (id2, cell, codes) corpus index rows: top-1 unit-space cell + the
     * residual PQ codes. The cell rides THROUGH the encode aggregation
     * as a grouping key (it is functionally dependent on vec_id) rather
-    * than being re-joined afterwards — the join form executed the
-    * unitCells window twice per index build. */
+    * than being re-joined afterwards. */
   private def corpusIndex(s: SparkSession, nv: DataFrame,
       cents: Array[Array[Double]],
       books: Array[Array[Array[Double]]]): DataFrame = {
-    val rsub = residualSub(s,
-      unitCells(s, nv, cents).join(nv, Seq("vec_id")), cents)
+    val rsub = residualSub(s, withUnitCell(nv, cents), cents)
     pqScoreAgainst(s, rsub, books)
       .groupBy(col("vec_id"), col("cell"), col("m"))
       .agg(min(struct(col("score"), col("cid"))).as("x"))
@@ -714,12 +679,10 @@ object Similarity {
       cents: Array[Array[Double]], books: Array[Array[Array[Double]]],
       nprobe: Int): DataFrame = {
     val qids = pqQueryIds(nv)
-    val qcells = scoredAgainst(s,
-        nv.join(qids, "vec_id").select(col("vec_id"), col("nv").as("v")), cents)
-      .withColumn("rn", row_number().over(wTopCell))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val rq = residualSub(s, qcells.join(nv, Seq("vec_id")), cents)
+    val qcells = nv.join(qids, "vec_id").select(col("vec_id"), col("nv"),
+      explode(NearestCells.column(col("nv"), cents, nprobe))
+        .as("cell"))
+    val rq = residualSub(s, qcells, cents)
       .withColumn("sn2", call_function("graft_dot_f", col("sv"), col("sv")))
     val qc2 = rq.groupBy(col("vec_id"), col("cell"))
       .agg(sum(col("sn2")).as("qc2"))
@@ -933,7 +896,7 @@ object Similarity {
     // list the per-invocation encode joins against
     graft.operators.Sinks.artifactAt(
       new java.io.File(idsPath), "ann_incr_ids") { p =>
-      unitCells(s, nv, cents)
+      withUnitCell(nv, cents)
         .filter(pmod(col("cell"), lit(5)) === 1)
         .filter(pmod(hcol, lit(2L)) === 0L)
         .select(col("vec_id"))
@@ -1025,10 +988,9 @@ object Similarity {
     import graft.operators.ModelStore
     val e = vecs(s, d)
     // Three of the four trainings (pq, ivfn, pqr) start from the
-    // normalized vectors, and pqr's residual pipeline reads them twice
-    // more (the cell assignment AND the re-join for residuals) — without
-    // a cache each consumer re-runs the parquet scan + normalize from
-    // scratch, several redundant jobs inside the top bench line
+    // normalized vectors, and each PQ training reads them once per job
+    // — without a cache each consumer re-runs the parquet scan +
+    // normalize from scratch, several redundant jobs inside the build
     // (round-5 verdict item 2). Persisted for the BUILD's duration
     // only and released before return, so the bench's strict end-of-run
     // leak count stays exact.
@@ -1042,42 +1004,33 @@ object Similarity {
       // row-preserving over embeddings, so the value equals e.count()
       // and the sampled rows (hence the model) are byte-identical
       val eCount = parquetRowCount(s"$d/embeddings.parquet")
-      // The build's wall-clock is ~20 driver-synchronized TINY jobs
-      // (per-iteration Lloyd collects), not data volume — the driver
-      // round-trip gaps dominate. The three trainings with no mutual
-      // dependency (ivf, pq, ivfn) run CONCURRENTLY so their job gaps
-      // overlap (Spark schedules concurrent jobs from one session
-      // fine; each training's own DAG and merge structure is exactly
-      // the sequential one). pqr waits only on ivfn, whose cells its
-      // residuals need. On a cluster the same overlap hides per-job
-      // scheduling latency; the models are unchanged.
+      // each IVF model trains in one job (sample collect) plus driver
+      // arithmetic, so the two run back to back
+      val ivf = Array(trainCentroids(e, 16, 3, knownCount = eCount))
+      ModelStore.save(s, ModelStore.dir(d, "ivf_k16"), ivf)
+      val ivfn = Array(trainCentroids(
+        nv.select(col("vec_id"), col("nv").as("v")), 16, 3,
+        knownCount = Some(nvCount)))
+      ModelStore.save(s, ModelStore.dir(d, "ivfn_k16"), ivfn)
+      // each PQ training is still a chain of driver-synchronized tiny
+      // jobs (init + one collect per Lloyd round); pq and pqr do not
+      // depend on each other, so pq runs concurrently and their job gaps
+      // overlap (each training's DAG and merge structure is the
+      // sequential one; the models are unchanged)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fIvf = Future {
-        val m = Array(trainCentroids(s, e, 16, 3, knownCount = eCount))
-        ModelStore.save(s, ModelStore.dir(d, "ivf_k16"), m); m
-      }
       val fPq = Future {
         val m = pqTrain(s, subVectors(nv))
         ModelStore.save(s, ModelStore.dir(d, "pq_m8x64"), m); m
       }
-      val fIvfn = Future {
-        val m = Array(trainCentroids(s,
-          nv.select(col("vec_id"), col("nv").as("v")), 16, 3,
-          knownCount = Some(nvCount)))
-        ModelStore.save(s, ModelStore.dir(d, "ivfn_k16"), m); m
-      }
       // the residual-composition pair: unit-space routing centroids, then
-      // codebooks over the residuals they induce
-      val ivfn = Await.result(fIvfn, Duration.Inf)
-      // sample at the source (pqSampleHalf scaladoc): same training
-      // rows, half the residual-pipeline work feeding them
-      val nvHalf = pqSampleHalf(nv)
-      val pqr = pqTrain(s, residualSub(s,
-        unitCells(s, nvHalf, ivfn.head).join(nvHalf, Seq("vec_id")), ivfn.head))
+      // codebooks over the residuals they induce; sample at the source
+      // (pqSampleHalf scaladoc): same training rows, half the
+      // residual-pipeline work feeding them
+      val pqr = pqTrain(s,
+        residualSub(s, withUnitCell(pqSampleHalf(nv), ivfn.head), ivfn.head))
       ModelStore.save(s, ModelStore.dir(d, "pqr_m8x64"), pqr)
-      val ivf = Await.result(fIvf, Duration.Inf)
       val pq = Await.result(fPq, Duration.Inf)
       ModelStore.summary(s, "ivf_k16", ivf)
         .unionByName(ModelStore.summary(s, "ivfn_k16", ivfn))
@@ -1096,8 +1049,7 @@ object Similarity {
     * baseline the staleness decision compares against. */
   private def cellStats(s: SparkSession, nv: DataFrame,
       cents: Array[Array[Double]]): Array[Array[Double]] = {
-    val rsub = residualSub(s,
-      unitCells(s, nv, cents).join(nv, Seq("vec_id")), cents)
+    val rsub = residualSub(s, withUnitCell(nv, cents), cents)
       .withColumn("sn2", call_function("graft_dot_f", col("sv"), col("sv")))
     val rows = rsub.groupBy(col("vec_id"), col("cell"))
       .agg(sum(col("sn2")).as("rn2"))
@@ -1160,11 +1112,11 @@ object Similarity {
           math.abs(now(c)(1) - b(c)(1)) / math.max(b(c)(1), 1e-9)).max
         if (!forceStale && occSkew <= 0.5 && rnDrift <= 0.25) ("fresh_noop", b)
         else {
-          val ivfn = Array(trainCentroids(s,
+          val ivfn = Array(trainCentroids(
             nv.select(col("vec_id"), col("nv").as("v")), 16, 3))
           ModelStore.save(s, ModelStore.dir(d, "ivfn_k16"), ivfn)
-          val pqr = pqTrain(s, residualSub(s,
-            unitCells(s, nv, ivfn.head).join(nv, Seq("vec_id")), ivfn.head))
+          val pqr = pqTrain(s,
+            residualSub(s, withUnitCell(nv, ivfn.head), ivfn.head))
           ModelStore.save(s, ModelStore.dir(d, "pqr_m8x64"), pqr)
           // rebuild from scratch even if retraining reproduced the
           // models bit-for-bit (same fingerprint -> same path): a stale
@@ -1252,8 +1204,9 @@ object Similarity {
     * quadratic step tractable: pairs are only formed WITHIN a cell, so
     * the per-task work is (n/K)² and K scales with the corpus — the
     * exact trick that let the paper run on web-scale LAION/C4. Reuses
-    * the IVF trainer ([[trainCentroids]], deterministic sample-trained
-    * Lloyd's, only K×64 values on the driver); the in-cell pair scan is
+    * the IVF model ([[ivfCentroids]], deterministic sample-trained
+    * Lloyd's) and routes each vector to its nearest cell in the scan
+    * projection ([[graft.functions.NearestCells]]); the in-cell pair scan is
     * an equi-join on cell id — a plain shuffle join, no broadcast of
     * the relation, no cross-cell pairs ever materialized.
     *
@@ -1270,10 +1223,8 @@ object Similarity {
     val Tau = 0.4
     val e = vecs(s, d)
     val cents = ivfCentroids(s, d)
-    val assigned = scoredAgainst(s, e, cents)
-      .withColumn("rn", row_number().over(wTopCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
+    val assigned = e.withColumn("cell",
+      NearestCells.column(col("v"), cents, 1)(0))
     val a = assigned.select(col("cell"), col("vec_id").as("id1"),
       col("v").as("v1"), col("nrm").as("n1"))
     val b = assigned.select(col("cell"), col("vec_id").as("id2"),
