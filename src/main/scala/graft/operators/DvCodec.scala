@@ -43,9 +43,9 @@ object DvCodec {
 
   /** Serialize a set of 64-bit row positions. Input need not be
     * sorted or distinct; the output is canonical for the set.
-    * Implemented AS chunk-encode + assemble, so the distributed
-    * chunk-at-a-time writer ([[encodeChunk]] per `(file, pos >>> 16)`
-    * group, [[assemble]] per file) is byte-identical to this
+    * Implemented AS chunk-encode + assemble, so a chunk-at-a-time
+    * writer ([[encodeChunk]] per `pos >>> 16` group, [[assemble]] per
+    * file, [[union]] across writers) is byte-identical to this
     * monolithic form by construction, not by parallel maintenance. */
   def encode(positions: Array[Long]): Array[Byte] = {
     val ps = positions.distinct
@@ -64,11 +64,11 @@ object DvCodec {
 
   /** One chunk's container BLOCK — exactly the bytes the canonical
     * blob carries for this chunk (`int64 chunkKey, byte kind, int32 n,
-    * payload`). The DISTRIBUTED encoder's unit: every position must
-    * share `pos >>> 16 == chunkKey`, so one aggregation buffer holds
-    * at most 65 536 slots (≤ the 8 KiB bitmap container) no matter how
-    * many rows of the covered file are dead. Input need not be sorted
-    * or distinct; the block is canonical for the slot set. */
+    * payload`). The chunk-at-a-time encoder's unit: every position must
+    * share `pos >>> 16 == chunkKey`, so one buffer holds at most
+    * 65 536 slots (≤ the 8 KiB bitmap container) no matter how many
+    * rows of the covered file are dead. Input need not be sorted or
+    * distinct; the block is canonical for the slot set. */
   def encodeChunk(chunkKey: Long, positions: Array[Long]): Array[Byte] = {
     val ps = positions.distinct
     java.util.Arrays.sort(ps)
@@ -119,6 +119,36 @@ object DvCodec {
     d.flush()
     bos.toByteArray
   }
+
+  /** A blob's container blocks in chunk-key order, each as the
+    * `(chunkKey, block)` pair [[assemble]] takes — a structural walk,
+    * no slot is decoded. */
+  private def blocks(blob: Array[Byte]): Iterator[(Long, Array[Byte])] = {
+    val bb = java.nio.ByteBuffer.wrap(blob)
+    require(bb.getInt() == Magic, "not a GDV2 deletion-vector blob")
+    Iterator.fill(bb.getInt()) {
+      val start = bb.position()
+      val hi = bb.getLong()
+      val kind = bb.get()
+      val n = bb.getInt()
+      bb.position(bb.position() + (if (kind == 0) 2 * n else BitmapBytes))
+      hi -> java.util.Arrays.copyOfRange(blob, start, bb.position())
+    }
+  }
+
+  /** The UNION of several blobs as one canonical blob, in the
+    * compressed domain: chunk keys are walked in order, a chunk only
+    * one blob holds is copied as its container block, and only the
+    * chunks that COLLIDE are decoded (each at most 65 536 slots) and
+    * re-encoded. Equal to `encode(mergeDecoded(blobs))` for canonical
+    * inputs, with memory bounded by compressed bytes plus one chunk —
+    * how per-task kill bitmaps of one file combine on the driver. */
+  def union(blobs: Seq[Array[Byte]]): Array[Byte] =
+    assemble(blobs.flatMap(blocks).groupBy(_._1).toSeq.map {
+      case (_, Seq(one)) => one
+      case (hi, bs) => hi -> encodeChunk(hi,
+        bs.flatMap { case (_, b) => decode(assemble(Seq(hi -> b))) }.toArray)
+    })
 
   /** The UNION of several blobs' position sets as one sorted primitive
     * array — the read side's "a position is dead when ANY covering

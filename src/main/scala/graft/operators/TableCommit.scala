@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, element_at, expr, input_file_name, lit, max, min, not, sort_array, split => fsplit, struct, sum, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, element_at, input_file_name, lit, max, min, not, split => fsplit, sum, when}
 
 /** Minimal ATOMIC COMMIT protocol for the engine's mutable partitioned
   * tables (round-8 verdict item 4) — the "table format's commit
@@ -319,17 +319,10 @@ object TableCommit {
       val newest = all.max
       // retention from the NEWEST state's properties (self-describing)
       val newestState = stateOfWith(table, present, newest)
-      val keep = newestState
-        .flatMap(_.props.get("graft.retention.generations"))
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
-        .filter(_ >= 2L).getOrElse(2L)
-      // TAGGED snapshots surface past the window (vacuum leases their
-      // chains, so reconstruction still has the manifests) — read from
-      // the newest state's props directly, never via tags() (recursion)
-      val leased = newestState.map(_.props).getOrElse(Map.empty)
-        .collect { case (k, v) if k.startsWith(TagPrefix) =>
-          scala.util.Try(v.toLong).toOption }.flatten.toSet
-      all.filter(id => id > newest - keep || leased(id)).sorted
+      // read from the newest state's props directly, never via
+      // properties() (recursion)
+      all.filter(retains(newest, newestState.map(_.props)
+          .getOrElse(Map.empty))).sorted
         .flatMap { rid =>
           (if (rid == newest) newestState
            else stateOfWith(table, present, rid)).map(rid -> _)
@@ -936,10 +929,6 @@ object TableCommit {
   private def cdcOfLines(lines: Seq[String]): Seq[String] =
     lines.filter(_.startsWith(CdcPrefix)).map(_.stripPrefix(CdcPrefix))
 
-  /** The (last-two-path-segments, row-position) key both sides of the
-    * DV anti-join compute — executor-side string ops on the hidden
-    * `_metadata` column, so writer and reader derive the key from the
-    * SAME URI rendering and no driver-side decode can skew it. */
   /** Partition depth of one data-file rel path (1 for `pt=5/f`, 2 for
     * `d=1/s=a/f`; 1 for an unpartitioned adopted file, matching the
     * zero-file default). */
@@ -953,6 +942,11 @@ object TableCommit {
     if (files.isEmpty) Seq(1)
     else files.map(depthOf).distinct.sorted(Ordering[Int].reverse)
 
+  /** Tag `df` with the (file key, row position) pair every vector is
+    * keyed by — executor-side string ops on the hidden `_metadata`
+    * column, so the DML kill scan and the read-side bitmap filter
+    * ([[DvPosFilter]]) derive the key from the SAME URI rendering and
+    * no driver-side decode can skew it. */
   private def dvKeyCols(df: DataFrame, depths: Seq[Int]): DataFrame = {
     val segs = fsplit(col("_metadata").getField("file_path"), "/")
     // depth+1 trailing segments: the FULL manifest-relative path (all
@@ -1018,65 +1012,18 @@ object TableCommit {
     if (table.contains("://")) new org.apache.hadoop.fs.Path(s"$table/$rel")
     else new org.apache.hadoop.fs.Path(new java.io.File(table, rel).toURI)
 
-  /** Write `matches`' (__graft_dvk, __graft_dvp) dead positions as the
-    * commit's deletion-vector sidecar, returning the registered dir.
-    * Format v2 (the default): one parquet row per covered data file,
-    * positions roaring-compressed ([[DvCodec]]) — sidecar bytes track
-    * the compressed kill-set shape, not the dead-row count (a dense
-    * million-row kill is ~16 bytes/chunk-slot amortized instead of a
-    * parquet row per position). `graft.dv.format=v1` pins the legacy
-    * (k, pos)-rows encoding — the mixed-fleet upgrade escape: writers
-    * stay v1 until every reader understands the `dv2` feature the v2
-    * directive gates. The MoR DELETE and UPDATE verbs write through
-    * here; MERGE, whose classify pass already returns per-file blobs,
-    * writes through [[writeDvLocal]]. */
-  private def writeDvSidecar(s: SparkSession, table: String,
-      writerId: String, matches: DataFrame): String = {
-    import org.apache.spark.sql.functions.{collect_list, udf}
-    val kills = matches.select(col("__graft_dvk").as("k"),
-      col("__graft_dvp").as("pos"))
-    if (properties(table).get("graft.dv.format").contains("v1")) {
-      val rel = s"_dv/$writerId"
-      kills.write.mode("overwrite").parquet(s"$table/$rel")
-      rel
-    } else {
-      val rel = s"_dv/$writerId.v2"
-      // CHUNK-BOUNDED distributed encode (round-13 verdict item 4):
-      // group kills by (file, pos >>> 16) so one aggregation buffer
-      // holds at most a 64Ki-slot chunk (≤ the 8 KiB bitmap
-      // container) — a dense kill of a 100M-row adopted file never
-      // builds the whole position array in one executor row. The
-      // per-chunk container blocks then concatenate per file in
-      // ascending chunk order, byte-identical to the monolithic
-      // encode by construction (encode IS encodeChunk+assemble;
-      // DvCodecSpec pins the equality across container mixes).
-      val encChunk = udf((hi: Long, ps: Seq[Long]) =>
-        DvCodec.encodeChunk(hi, ps.toArray))
-      val asm = udf((chunks: Seq[org.apache.spark.sql.Row]) =>
-        DvCodec.assemble(chunks.map(r =>
-          (r.getLong(0), r.getAs[Array[Byte]](1)))))
-      kills
-        .groupBy(col("k"), expr("shiftrightunsigned(pos, 16)").as("hi"))
-        .agg(collect_list(col("pos")).as("ps"))
-        .select(col("k"),
-          struct(col("hi"), encChunk(col("hi"), col("ps")).as("blk"))
-            .as("cb"))
-        .groupBy(col("k"))
-        .agg(sort_array(collect_list(col("cb"))).as("chunks"))
-        .select(col("k"), asm(col("chunks")).as("bmp"))
-        .write.mode("overwrite").parquet(s"$table/$rel")
-      rel
-    }
-  }
-
   /** Write a commit's vector sidecar DRIVER-SIDE from per-file GDV2
     * blobs already in hand (the [[ModelStore.save]] writer idiom, the
     * FileSystem from the session's Hadoop conf as [[loadDvDir]] reads
-    * it): v2 writes one `(k, bmp)` row per file — the same blob bytes
-    * [[writeDvSidecar]]'s distributed encoder produces — and a
-    * `graft.dv.format=v1` table gets the decoded `(k, pos)` rows. `k`
-    * is the file's manifest rel. Returns the dir to register and its
-    * memo entry, for the caller to memoize once the commit publishes. */
+    * it) — the engine's one vector writer. Format v2 (the default)
+    * writes one `(k, bmp)` row per file, positions roaring-compressed
+    * ([[DvCodec]]), so sidecar bytes track the compressed kill-set
+    * shape, not the dead-row count. `graft.dv.format=v1` pins the
+    * legacy decoded `(k, pos)` rows — the mixed-fleet upgrade escape:
+    * writers stay v1 until every reader understands the `dv2` feature
+    * the v2 directive gates. `k` is the file's manifest rel. Returns
+    * the dir to register and its memo entry, for the caller to memoize
+    * once the commit publishes. */
   private def writeDvLocal(s: SparkSession, table: String, writerId: String,
       blobs: Map[String, Array[Byte]]): (String, DvDir) = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
@@ -1216,10 +1163,22 @@ object TableCommit {
     manifests(table).sortBy(-_._1).headOption
       .map(m => propsOf(m._2)).getOrElse(Map.empty)
 
-  private def retentionOf(table: String): Long =
-    properties(table).get("graft.retention.generations")
+  /** THE retention rule, one place for every caller: snapshot `id`
+    * stays readable while it is among the newest
+    * `graft.retention.generations` (default and floor 2) or a tag
+    * leases it (vacuum keeps a tagged snapshot's chain, so it still
+    * reconstructs) — both read from the newest state's properties
+    * `props`. [[manifests]], [[vacuumAudit]] and [[vacuum]] all keep
+    * exactly this set. */
+  private def retains(newest: Long, props: Map[String, String])
+      : Long => Boolean = {
+    val keep = props.get("graft.retention.generations")
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .filter(_ >= 2L).getOrElse(2L)
+    val leased = props.collect { case (k, v) if k.startsWith(TagPrefix) =>
+      scala.util.Try(v.toLong).toOption }.flatten.toSet
+    id => id > newest - keep || leased(id)
+  }
 
   /** SET TBLPROPERTIES as a METADATA-ONLY commit: publish a manifest
     * with the same files, stats, rows, vectors, ledger and schema,
@@ -4479,8 +4438,9 @@ object TableCommit {
       filesTotal: Int, filesCandidates: Int, filesRewritten: Int,
       rowsUpdated: Long)
 
-  /** Stage-2 of a copy-on-write DML commit (shared by [[deleteWhere]]
-    * and [[updateWhere]]): matching-row count per candidate file — one
+  /** Stage-2 of a copy-on-write DML commit ([[deleteWhere]] and
+    * [[updateWhere]]; the merge-on-read verbs count in their classify
+    * pass instead): matching-row count per candidate file — one
     * grouped scan over ONLY the candidates, |candidates| scalar rows to
     * the driver. Paths map back to manifest-relative form by their last
     * TWO segments (file names alone collide across partition dirs —
@@ -4492,10 +4452,9 @@ object TableCommit {
     // scan results key straight back to the candidate list, through
     // any percent-encoding skew in _metadata.file_path
     val relOf = relIndex(table, candidates)
-    // grouped by the DV key, taken from _metadata BEFORE any
-    // deletion-vector anti-join (input_file_name() refuses
-    // multi-source plans); counts are LIVE matches, prior vectors
-    // applied
+    // grouped by the DV key, taken from _metadata (input_file_name()
+    // refuses multi-source plans); counts are LIVE matches, prior
+    // vectors applied by the bitmap filter
     val raw = pinnedRead(s, table, m, candidates, withMeta = true)
     applyDv(s, table, m, candidates, dvKeyCols(raw, depthsOf(candidates)))
       .filter(pred)
@@ -4699,25 +4658,28 @@ object TableCommit {
   /** MERGE-ON-READ DELETE — [[deleteWhere]]'s deletion-vector twin
     * (Delta deletion vectors / Iceberg v2 position deletes): instead of
     * rewriting the hit files, mark their matching rows' POSITIONS dead
-    * in a parquet sidecar tree (`_dv/<writerId>`: one (key, pos) row
-    * per dead row) and publish a manifest that keeps the SAME file list
-    * but registers the vector against each hit file. Write cost ∝
-    * deleted rows — the latency-optimal half of the delete trade
-    * (copy-on-write pays the rewrite once and reads clean;
-    * merge-on-read commits in O(matches) and every reader pays a small
-    * anti-join until a compaction rewrite materializes the vectors —
-    * which happens automatically here, because every rewrite reads
-    * THROUGH [[readFiles]] and the replaced file's `#dv` entries drop
-    * with it). Narrowing stages 1-2 are shared with [[deleteWhere]];
-    * the hit scan and the position scan both run against the LIVE row
-    * set (prior vectors applied), so repeated MoR deletes stack without
-    * double-counting, and `#rows` entries are adjusted by the exact
-    * live match counts so [[rowCount]] stays metadata-exact. Stats are
-    * left as-is: dead rows only shrink a file's content, so recorded
-    * min/max remain CONSERVATIVE bounds and pruning stays sound.
-    * Conflicts: a winner that removed, rewrote, or re-vectored a hit
-    * file invalidates our position scan — conflict; anything else
-    * rebases (including appends and MoR deletes on OTHER files). */
+    * in a vector sidecar (`_dv/<writerId>.v2`: one compressed position
+    * bitmap per hit file, [[DvCodec]]) and publish a manifest that
+    * keeps the SAME file list but registers the vector against each
+    * hit file. Write cost ∝ the compressed kill set — the
+    * latency-optimal half of the delete trade (copy-on-write pays the
+    * rewrite once and reads clean; merge-on-read commits in O(matches)
+    * and every reader pays a bitmap filter on the scan until a
+    * compaction rewrite materializes the vectors — which happens
+    * automatically here, because every rewrite reads THROUGH
+    * [[readFiles]] and the replaced file's `#dv` entries drop with it).
+    * Stats pruning is shared with [[deleteWhere]]; then ONE classify
+    * pass over the LIVE candidate rows (prior vectors applied) yields
+    * the hit files, their live match counts and their kill bitmaps
+    * ([[morCommit]]) — one Spark job, one more with `graft.cdf` — so
+    * repeated MoR deletes stack without double-counting, and `#rows`
+    * entries are adjusted by the exact counts so [[rowCount]] stays
+    * metadata-exact. Stats are left as-is: dead rows only shrink a
+    * file's content, so recorded min/max remain CONSERVATIVE bounds and
+    * pruning stays sound. Conflicts: a winner that removed, rewrote, or
+    * re-vectored a hit file invalidates our classify pass — conflict;
+    * anything else rebases (including appends and MoR deletes on OTHER
+    * files). */
   def deleteWhereMor(s: SparkSession, table: String, partCol: String,
       column: String, lo: BigDecimal, hi: BigDecimal): MorDeleteAudit =
     deleteWhereMorBy(s, table, Seq(partCol), column, lo, hi)
@@ -4757,81 +4719,15 @@ object TableCommit {
     val total = filesOf(m).length
     val band = guardLexBand(table, column, band0, m.schema)
     val candidates = pruneFilesBand(m, column, band)
-    def matchPred = band.pred(column)
     if (candidates.isEmpty)
       return MorDeleteAudit(baseId0, baseId0, total, 0, 0, 0L)
-    val hitCounts = hitScan(s, table, m, candidates, matchPred)
-    val hit = candidates.filter(hitCounts.contains)
-    val rowsDeleted = hitCounts.valuesIterator.sum
-    if (hit.isEmpty)
-      return MorDeleteAudit(baseId0, baseId0, total, candidates.length, 0, 0L)
-    // dead positions among the LIVE rows of the hit files (prior
-    // vectors applied — stacked MoR deletes never re-kill a position)
-    val raw = pinnedRead(s, table, m, hit, withMeta = true)
-    val live = applyDv(s, table, m, hit, dvKeyCols(raw, depthsOf(hit)))
-    val writerId = java.util.UUID.randomUUID().toString.take(8)
-    // CDF recording is OPT-IN (graft.cdf=true, the Delta default):
-    // un-enabled tables pay ZERO extra commit-path work; enabled ones
-    // persist the band-sized matches once so the vector write and the
-    // change-data write share one scan of the hit files
-    val cdfOn = cdfEnabled(table)
-    val matches0 =
-      if (cdfOn) live.filter(coalesce(matchPred, lit(false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else live.filter(coalesce(matchPred, lit(false)))
-    val dvRel = try {
-      val rel = writeDvSidecar(s, table, writerId, matches0)
-      // writer-recorded CHANGE DATA (round-11 verdict item 4): the
-      // deleted rows' full preimages, cost ∝ matches — the precise feed
-      // replays this instead of re-deriving dead rows from the vectors
-      if (cdfOn) {
-        val delFields = schemaOf(m).map(_.fieldNames.toSeq).getOrElse(
-          raw.columns.toSeq.filterNot(Set("_metadata")))
-        matches0
-          .select(delFields.map(col) :+ lit("delete").as("_change_type"): _*)
-          .write.mode("overwrite").parquet(s"$table/_cdc/$writerId")
-      }
-      rel
-    } finally if (cdfOn) matches0.unpersist()
-    val cdcRel = s"_cdc/$writerId"
-    val hitSet = hit.toSet
-    val baseDvSig = dvOf(m).filter { case (rel, _) => hitSet(rel) }
-    var (baseId, baseFiles) = (baseId0, baseFiles0)
-    var published = baseId0
-    var committed = false
-    while (!committed) {
-      if (!hitSet.subsetOf(baseFiles.toSet))
-        throw new CommitConflictException(
-          s"concurrent commit of $table removed or rewrote file(s) this " +
-            "MoR delete read — re-read and re-derive")
-      val baseM = manifests(table).find(_._1 == baseId)
-      val winDv = baseM.map(bm => dvOf(bm._2)).getOrElse(Map.empty)
-      if (winDv.filter { case (rel, _) => hitSet(rel) } != baseDvSig)
-        throw new CommitConflictException(
-          s"concurrent commit of $table changed deletion-vector coverage " +
-            "of file(s) this MoR delete read — re-read and re-derive")
-      val c = carriedFrom(baseM.map(_._2), _ => true)
-      val nextDv = c.dv ++ hit.map(rel =>
-        rel -> (baseDvSig.getOrElse(rel, Seq.empty) :+ dvRel))
-      // exact metadata: each hit file's #rows entry shrinks by its
-      // live match count (files without an entry stay unknowable)
-      val nextRows = c.rows.map { case (rel, n) =>
-        rel -> (n - hitCounts.getOrElse(rel, 0L)) }
-      if (publish(table, baseId + 1, baseFiles, c.txns,
-          c.schema.map(_.json), c.stats, nextRows, nextDv, c.props, c.bytes,
-          cdc = if (cdfOn) Seq(cdcRel) else Nil,
-          op = Some("DELETE (MOR)"))) {
-        vacuum(table, baseId + 1)
-        published = baseId + 1
-        committed = true
-      } else {
-        val (winId, winFiles) = resolve(table).get
-        baseId = winId
-        baseFiles = winFiles
-      }
-    }
-    MorDeleteAudit(baseId0, published, total, candidates.length, hit.length,
-      rowsDeleted)
+    val live = liveRows(s, table, m, candidates)
+    val o = morCommit(s, table, "DELETE", partCols, baseId0, baseFiles0, m,
+      schemaOf(m).getOrElse(dataSchema(live)), candidates,
+      Some(live.filter(coalesce(band.pred(column), lit(false)))
+        .withColumn("__graft_del", lit(true))), set = None)
+    MorDeleteAudit(baseId0, o.published, total, candidates.length, o.filesHit,
+      o.deleted)
   }
 
   /** [[updateWhereMor]]'s audit — the old versions are vectored dead
@@ -4853,8 +4749,12 @@ object TableCommit {
     * invariant) with one MoR-only capability: the PARTITION column may
     * be SET — a merge-on-read update moves a row across partitions by
     * killing it in place and appending it where it now belongs, which
-    * the copy-on-write form refuses. Conflicts are [[deleteWhereMor]]'s
-    * (a winner that removed, rewrote, or re-vectored a hit file). */
+    * the copy-on-write form refuses. It runs on [[morCommit]]: one
+    * classify job, then the successor write (two jobs with its
+    * repartition), one more with `graft.cdf`. Conflicts are
+    * [[deleteWhereMor]]'s (a winner that removed, rewrote, or
+    * re-vectored a hit file) plus the constraint, column-mapping and
+    * partition-spec guards of every row-writing commit. */
   def updateWhereMor(s: SparkSession, table: String, partCol: String,
       column: String, lo: BigDecimal, hi: BigDecimal,
       set: Map[String, org.apache.spark.sql.Column]): MorUpdateAudit =
@@ -4898,124 +4798,29 @@ object TableCommit {
     val total = filesOf(m).length
     val band = guardLexBand(table, column, band0, m.schema)
     val candidates = pruneFilesBand(m, column, band)
-    def matchPred = band.pred(column)
     if (candidates.isEmpty)
       return MorUpdateAudit(baseId0, baseId0, total, 0, 0, 0, 0L)
-    val hitCounts = hitScan(s, table, m, candidates, matchPred)
-    val hit = candidates.filter(hitCounts.contains)
-    val rowsUpdated = hitCounts.valuesIterator.sum
-    if (hit.isEmpty)
-      return MorUpdateAudit(baseId0, baseId0, total, candidates.length, 0,
-        0, 0L)
-    val raw = pinnedRead(s, table, m, hit, withMeta = true)
-    // the LOGICAL data fields (never _metadata, which rides the read
-    // only for the deletion-vector key)
-    val dataFields = schemaOf(m).map(_.fields.toSeq).getOrElse(
-      raw.schema.fields.toSeq.filterNot(_.name == "_metadata"))
-    set.keys.foreach(c => require(dataFields.exists(_.name == c),
+    val live = liveRows(s, table, m, candidates)
+    val tgtSchema = schemaOf(m).getOrElse(dataSchema(live))
+    set.keys.foreach(c => require(tgtSchema.fieldNames.contains(c),
       s"SET column $c is not a column of $table"))
-    // band-sized matches persist once and feed the vector write, the
-    // change-data write AND the successor stage write — one scan of
-    // the hit files instead of three
-    val matches = applyDv(s, table, m, hit,
-      dvKeyCols(raw, depthsOf(hit)))
-      .filter(coalesce(matchPred, lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val writerId = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = writeDvSidecar(s, table, writerId, matches)
-    // the successors: every projected row already matches, so each SET
-    // column is just the expression (cast to the declared type)
-    val updated = matches.select(dataFields.map { f =>
-      set.get(f.name) match {
-        case Some(e) => e.cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-    // writer-recorded CHANGE DATA: update_preimage (pre-update values)
-    // + update_postimage (successors) — the four-way feed's precise
-    // source for corrections vs churn, cost ∝ matches; OPT-IN via
-    // graft.cdf=true (the Delta default: off — zero extra commit work)
-    val cdfOn = cdfEnabled(table)
-    val cdcRel = s"_cdc/$writerId"
-    if (cdfOn)
-      matches.select(dataFields.map(f => col(f.name)) :+
-          lit("update_preimage").as("_change_type"): _*)
-        .unionByName(updated.withColumn("_change_type",
-          lit("update_postimage")))
-        .write.mode("overwrite").parquet(s"$table/$cdcRel")
-    val statsCols = statsOf(m).keysIterator.map(_._2).toSeq.distinct.sorted
-    val specs = specColsOf(partCols)
-    val updatedM = withSpecDirs(updated, specs)
-    val upcols = specs.map(sc => col(sc.dirName))
-    val shaped = statsCols.headOption match {
-      case Some(c) => updatedM.repartition(upcols: _*)
-        .sortWithinPartitions((upcols :+ col(c)): _*)
-      case None => updatedM.repartition(upcols: _*)
-    }
-    val checked = constraints(table)
-    val wcols = shaped.columns.toSeq
-      .filterNot(derivedDirNames(partCols))
-    val wmap = writeMapping(table, wcols)
-    val (fresh, freshBytes) =
-      try stageMove(table, writerId, shaped, partCols,
-        checkedConstraints = checked, wmap = wmap)
-      finally matches.unpersist()
-    val (freshStats, freshRows) =
-      if (statsCols.nonEmpty && fresh.nonEmpty)
-        fileMeta(s, table, fresh, statsCols, wmap)
-      else (Map.empty[(String, String), (String, String)],
-        footerRows(table, fresh))
-    val hitSet = hit.toSet
-    val baseDvSig = dvOf(m).filter { case (rel, _) => hitSet(rel) }
-    var (baseId, baseFiles) = (baseId0, baseFiles0)
-    var published = baseId0
-    var committed = false
-    while (!committed) {
-      if (!hitSet.subsetOf(baseFiles.toSet))
-        throw new CommitConflictException(
-          s"concurrent commit of $table removed or rewrote file(s) this " +
-            "MoR update read — re-read and re-derive")
-      val baseM = manifests(table).find(_._1 == baseId)
-      val winDv = baseM.map(bm => dvOf(bm._2)).getOrElse(Map.empty)
-      if (winDv.filter { case (rel, _) => hitSet(rel) } != baseDvSig)
-        throw new CommitConflictException(
-          s"concurrent commit of $table changed deletion-vector coverage " +
-            "of file(s) this MoR update read — re-read and re-derive")
-      val next = baseFiles ++ fresh
-      val c = carriedFrom(baseM.map(_._2), _ => true)
-      guardConstraints(table, checked, c.props)
-      guardMapping(table, wmap, wcols, c.schema, c.props)
-      guardSpec(table, partCols, c.props)
-      val nextDv = c.dv ++ hit.map(rel =>
-        rel -> (baseDvSig.getOrElse(rel, Seq.empty) :+ dvRel))
-      val nextRows = c.rows.map { case (rel, n) =>
-        rel -> (n - hitCounts.getOrElse(rel, 0L)) } ++ freshRows
-      if (publish(table, baseId + 1, next, c.txns, c.schema.map(_.json),
-          c.stats ++ freshStats, nextRows, nextDv, c.props,
-          c.bytes ++ freshBytes, cdc = if (cdfOn) Seq(cdcRel) else Nil,
-          op = Some("UPDATE (MOR)"))) {
-        vacuum(table, baseId + 1)
-        published = baseId + 1
-        committed = true
-      } else {
-        val (winId, winFiles) = resolve(table).get
-        baseId = winId
-        baseFiles = winFiles
-      }
-    }
-    MorUpdateAudit(baseId0, published, total, candidates.length, hit.length,
-      fresh.length, rowsUpdated)
+    val o = morCommit(s, table, "UPDATE", partCols, baseId0, baseFiles0, m,
+      tgtSchema, candidates,
+      Some(live.filter(coalesce(band.pred(column), lit(false)))
+        .withColumn("__graft_del", lit(false))), Some(set))
+    MorUpdateAudit(baseId0, o.published, total, candidates.length, o.filesHit,
+      o.filesAdded, o.matched)
   }
 
-  /** Run `f` with its Spark jobs labelled `graft MERGE <table>: <phase>`
+  /** Run `f` with its Spark jobs labelled `graft <verb> <table>: <phase>`
     * (AQE stage and broadcast jobs inherit the label), restoring the
     * caller's job description after — so a listener or the UI can tell
-    * a MERGE's source, classify, cdc and write jobs apart. */
-  private def labelled[A](s: SparkSession, table: String, phase: String)(
-      f: => A): A = {
+    * a DML statement's source, classify, cdc and write jobs apart. */
+  private def labelled[A](s: SparkSession, verb: String, table: String,
+      phase: String)(f: => A): A = {
     val sc = s.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft MERGE $table: $phase")
+    sc.setJobDescription(s"graft $verb $table: $phase")
     try f finally sc.setLocalProperty("spark.job.description", prev)
   }
 
@@ -5025,7 +4830,7 @@ object TableCommit {
   private def sourceRows(s: SparkSession, table: String,
       qe: org.apache.spark.sql.execution.QueryExecution)
       : Array[org.apache.spark.sql.catalyst.InternalRow] =
-    labelled(s, table, "source")(
+    labelled(s, "MERGE", table, "source")(
       qe.executedPlan.executeCollect().map(_.copy()))
 
   private def externalRows(schema: org.apache.spark.sql.types.StructType,
@@ -5126,32 +4931,277 @@ object TableCommit {
     }
   }
 
-  /** Fold one partition of a MERGE's kept rows into the task's
-    * partial: per data-file key, its (matched, deleted-by-clause,
-    * by-source) counts and the killed positions as a GDV2 blob; plus
-    * the matched source-row ids, also as a GDV2 blob. Field indexes
-    * locate the file key, the position, the source row id (NULL for a
-    * by-source row) and the DELETE-clause flag. */
+  /** Fold one partition of a merge-on-read statement's kept rows into
+    * the task's partial: per data-file key, its (matched,
+    * deleted-by-clause, by-source) counts and the killed positions as a
+    * GDV2 blob, encoded one 64Ki chunk at a time — a task holds the
+    * finished chunks compressed and only the open chunk's slots, never
+    * a file's whole position array; plus the matched source-row ids,
+    * also as a GDV2 blob. Field indexes locate the file key, the
+    * position, the delete flag and the source row id (NULL for a
+    * by-source row; `-1` when the statement has no source, so every
+    * kept row counts as matched). */
   private def classifyPartition(rows: Iterator[org.apache.spark.sql.Row],
-      k: Int, p: Int, r: Int, d: Int)
+      k: Int, p: Int, d: Int, r: Int)
       : Iterator[(Seq[(String, Array[Long], Array[Byte])], Array[Byte])] = {
-    val files = scala.collection.mutable.HashMap.empty[String,
-      (Array[Long], scala.collection.mutable.ArrayBuilder.ofLong)]
-    val rids = new scala.collection.mutable.ArrayBuilder.ofLong
-    rows.foreach { row =>
-      val (c, pos) = files.getOrElseUpdate(row.getString(k),
-        (new Array[Long](3), new scala.collection.mutable.ArrayBuilder.ofLong))
-      pos += row.getLong(p)
-      if (row.isNullAt(r)) c(2) += 1L
-      else {
-        c(0) += 1L
-        if (row.getBoolean(d)) c(1) += 1L
-        rids += row.getLong(r)
+    final class Kills {
+      val counts = new Array[Long](3)
+      var chunk = -1L
+      val open = new scala.collection.mutable.ArrayBuilder.ofLong
+      val done = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+      def close(): Unit = if (open.length > 0) {
+        done += DvCodec.encode(open.result())
+        open.clear()
       }
     }
-    Iterator.single((files.toSeq.map { case (key, (c, pos)) =>
-      (key, c, DvCodec.encode(pos.result()))
+    val files = scala.collection.mutable.HashMap.empty[String, Kills]
+    val rids = new scala.collection.mutable.ArrayBuilder.ofLong
+    rows.foreach { row =>
+      val f = files.getOrElseUpdate(row.getString(k), new Kills)
+      val pos = row.getLong(p)
+      if ((pos >>> 16) != f.chunk) { f.close(); f.chunk = pos >>> 16 }
+      f.open += pos
+      if (r >= 0 && row.isNullAt(r)) f.counts(2) += 1L
+      else {
+        f.counts(0) += 1L
+        if (row.getBoolean(d)) f.counts(1) += 1L
+        if (r >= 0) rids += row.getLong(r)
+      }
+    }
+    Iterator.single((files.toSeq.map { case (key, f) =>
+      f.close()
+      (key, f.counts, DvCodec.union(f.done.toSeq))
     }, DvCodec.encode(rids.result())))
+  }
+
+  /** The live rows of `candidates` in snapshot `m` (prior vectors
+    * applied), tagged with each row's vector key ([[dvKeyCols]]). */
+  private def liveRows(s: SparkSession, table: String, m: Snapshot,
+      candidates: Seq[String]): DataFrame =
+    applyDv(s, table, m, candidates, dvKeyCols(
+      pinnedRead(s, table, m, candidates, withMeta = true),
+      depthsOf(candidates))).drop("_metadata")
+
+  /** A [[liveRows]] frame's data fields: the schema of an adopted
+    * snapshot that records none. */
+  private def dataSchema(live: DataFrame): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      live.schema.fields.filterNot(_.name.startsWith("__graft_")))
+
+  /** What one merge-on-read statement did: its published snapshot (the
+    * base id when it published nothing), hit and fresh file counts, its
+    * killed rows split into matched (of which `deleted` by a DELETE
+    * clause) and by-source, and the fresh files' row total. */
+  private final case class MorOutcome(published: Long, filesHit: Int,
+      filesAdded: Int, matched: Long, deleted: Long, bySource: Long,
+      freshRows: Long)
+
+  /** THE merge-on-read kernel behind MERGE, DELETE and UPDATE: one
+    * classify pass, one driver-written vector, one write and one OCC
+    * publish loop. `kept` holds the live candidate rows ([[liveRows]])
+    * the statement kills: the target's data fields, `__graft_dvk` and
+    * `__graft_dvp`, the `__graft_del` flag (killed with no successor)
+    * and, for MERGE, the source row id `__graft_srid` (NULL for a
+    * by-source kill). It is None when no file is a candidate. Phases,
+    * each job labelled `graft <verb> <table>: <phase>`:
+    *
+    *  - classify: one job folds the kept rows into per-file counts and
+    *    kill bitmaps ([[classifyPartition]]); the driver combines a
+    *    file's per-task bitmaps with [[DvCodec.union]], so its memory
+    *    tracks compressed vector bytes. The rows are cached as an RDD —
+    *    a cached Dataset costs adaptive execution a job of its own —
+    *    and only when something reads them again: successors or the
+    *    change feed;
+    *  - the driver writes one vector per hit file ([[writeDvLocal]])
+    *    and memoizes it once the commit publishes;
+    *  - cdc, with `graft.cdf`: delete and update pre/postimages from the
+    *    cached rows, plus `inserts`, in one sidecar;
+    *  - write: successors (`set` over the pre-statement row, each
+    *    assignment cast to the declared type, so the schema of record is
+    *    invariant) ∪ `inserts` (given the sorted matched source-row ids)
+    *    in one staged write;
+    *  - publish: a winner that removed, rewrote or re-vectored a hit
+    *    file conflicts, `conflict` adds the verb's own rule over the
+    *    winner's files and state, the constraint, mapping and spec
+    *    guards run when the statement writes files, and a replayed
+    *    `txn` ends the loop as a no-op.
+    *
+    * Nothing is published when no file is hit and there are no
+    * inserts. */
+  private def morCommit(s: SparkSession, table: String, verb: String,
+      partCols: Seq[String], baseId0: Long, baseFiles0: Seq[String],
+      m: Snapshot, tgtSchema: org.apache.spark.sql.types.StructType,
+      candidates: Seq[String], kept: Option[DataFrame],
+      set: Option[Map[String, org.apache.spark.sql.Column]],
+      inserts: Option[Array[Long] => DataFrame] = None,
+      txn: Option[(String, Long)] = None,
+      conflict: (Seq[String], Option[Snapshot]) => Unit = (_, _) => ())
+      : MorOutcome = {
+    val rid = "__graft_srid"
+    val cdfOn = cdfEnabled(table)
+    val cached = kept.map { df =>
+      val rdd = labelled(s, verb, table, "classify")(df.rdd)
+      (if (cdfOn || set.isDefined)
+        rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else rdd) -> df.schema
+    }
+    try {
+      val partials = cached.fold(Array.empty[(Seq[(String, Array[Long],
+          Array[Byte])], Array[Byte])]) { case (rows, sch) =>
+        val at = Seq("__graft_dvk", "__graft_dvp", "__graft_del")
+          .map(sch.fieldIndex)
+        val r = if (sch.fieldNames.contains(rid)) sch.fieldIndex(rid) else -1
+        labelled(s, verb, table, "classify")(rows.mapPartitions(it =>
+          classifyPartition(it, at(0), at(1), at(2), r)).collect())
+      }
+      val relOf = relIndex(table, candidates)
+      // per hit file: (matched, deleted, by-source) counts and the kill
+      // bitmaps of the tasks that saw it
+      val perFile = scala.collection.mutable.HashMap.empty[String,
+        (Array[Long], scala.collection.mutable.ArrayBuffer[Array[Byte]])]
+      partials.foreach(_._1.foreach { case (key, n, bmp) =>
+        val rel = relOf(key).getOrElse(sys.error(
+          s"$verb on $table: scanned file key $key resolves to no " +
+            "candidate file"))
+        val (c, blobs) = perFile.getOrElseUpdate(rel,
+          (new Array[Long](3), scala.collection.mutable.ArrayBuffer.empty))
+        (0 until 3).foreach(i => c(i) += n(i))
+        blobs += bmp
+      })
+      val hit = candidates.filter(perFile.contains)
+      val killed = perFile.map { case (rel, (c, _)) => rel -> (c(0) + c(2)) }
+      val Seq(matched, deleted, bySource) =
+        (0 until 3).map(i => perFile.valuesIterator.map(_._1(i)).sum)
+      if (hit.isEmpty && inserts.isEmpty)
+        return MorOutcome(baseId0, 0, 0, 0L, 0L, 0L, 0L)
+      val writerId = java.util.UUID.randomUUID().toString.take(8)
+      val (dvRel, dvDir) =
+        if (hit.isEmpty) (s"_dv/$writerId", None)
+        else {
+          val (rel, dir) = writeDvLocal(s, table, writerId,
+            perFile.map { case (f, (_, bs)) => f -> DvCodec.union(bs.toSeq) }
+              .toMap)
+          (rel, Some(dir))
+        }
+      val hits = cached.map { case (rows, sch) => s.createDataFrame(rows, sch) }
+      val survives = !col("__graft_del") &&
+        (if (kept.exists(_.columns.contains(rid))) col(rid).isNotNull
+         else lit(true))
+      val successors = for (h <- hits; st <- set)
+        yield h.filter(survives).select(tgtSchema.fields.map { f =>
+          st.get(f.name) match {
+            case Some(e) => e.cast(f.dataType).as(f.name)
+            case None => col(f.name)
+          }
+        }.toIndexedSeq: _*)
+      val ins = inserts.map(_(DvCodec.mergeDecoded(partials.toSeq.map(_._2))))
+      // writer-recorded CHANGE DATA: the four-way classification in one
+      // sidecar, cost ∝ the change set; OPT-IN via graft.cdf=true
+      // (Delta's default: off — zero extra commit work)
+      val cdcRel = s"_cdc/$writerId"
+      if (cdfOn) {
+        val tgtCols = tgtSchema.fields.toSeq.map(f => col(f.name))
+        def tagged(df: DataFrame, kind: String): DataFrame =
+          df.select(tgtCols :+ lit(kind).as("_change_type"): _*)
+        val parts = hits.toSeq.flatMap(h => Seq(
+          tagged(h.filter(!survives), "delete"),
+          tagged(h.filter(survives), "update_preimage"))) ++
+          successors.map(_.withColumn("_change_type",
+            lit("update_postimage"))) ++
+          ins.map(_.withColumn("_change_type", lit("insert")))
+        labelled(s, verb, table, "cdc")(parts.reduce(_.unionByName(_))
+          .write.mode("overwrite").parquet(s"$table/$cdcRel"))
+      }
+      // WRITE: successors ∪ inserts in one staged write, clustered on the
+      // manifest's leading stats column so the fresh files record tight
+      // stats; the guards re-check each publish attempt's base
+      val statsCols = statsOf(m).keysIterator.map(_._2).toSeq.distinct.sorted
+      val written = (successors ++ ins).reduceOption(_.unionByName(_)).map {
+        src =>
+          val specs = specColsOf(partCols)
+          val srcM = withSpecDirs(src, specs)
+          val pcols = specs.map(sc => col(sc.dirName))
+          val shaped = statsCols.headOption match {
+            case Some(c) => srcM.repartition(pcols: _*)
+              .sortWithinPartitions((pcols :+ col(c)): _*)
+            case None => srcM.repartition(pcols: _*)
+          }
+          val checked = constraints(table)
+          val wcols = shaped.columns.toSeq.filterNot(derivedDirNames(partCols))
+          val wmap = writeMapping(table, wcols)
+          labelled(s, verb, table, "write") {
+            val (fresh, bytes) = stageMove(table, writerId, shaped, partCols,
+              checkedConstraints = checked, wmap = wmap)
+            val (stats, rows) =
+              if (statsCols.nonEmpty && fresh.nonEmpty)
+                fileMeta(s, table, fresh, statsCols, wmap)
+              else (Map.empty[(String, String), (String, String)],
+                footerRows(table, fresh))
+            val guards = (c: Carried) => {
+              guardConstraints(table, checked, c.props)
+              guardMapping(table, wmap, wcols, c.schema, c.props)
+              guardSpec(table, partCols, c.props)
+            }
+            (fresh, bytes, stats, rows, guards)
+          }
+      }
+      val (fresh, freshBytes, freshStats, freshRows, guards) =
+        written.getOrElse((Seq.empty[String], Map.empty[String, Long],
+          Map.empty[(String, String), (String, String)],
+          Map.empty[String, Long], (_: Carried) => ()))
+      def alreadyApplied: Boolean = txn.exists { case (app, v) =>
+        lastTxnVersion(table, app).exists(_ >= v)
+      }
+      val hitSet = hit.toSet
+      val baseDvSig = dvOf(m).filter { case (rel, _) => hitSet(rel) }
+      var (baseId, baseFiles) = (baseId0, baseFiles0)
+      var published = baseId0
+      var committed = false
+      while (!committed) {
+        if (!hitSet.subsetOf(baseFiles.toSet))
+          throw new CommitConflictException(
+            s"concurrent commit of $table removed or rewrote file(s) this " +
+              s"$verb read — re-read and re-derive")
+        val baseM = manifests(table).find(_._1 == baseId).map(_._2)
+        if (baseM.map(dvOf).getOrElse(Map.empty)
+            .filter { case (rel, _) => hitSet(rel) } != baseDvSig)
+          throw new CommitConflictException(
+            s"concurrent commit of $table changed deletion-vector coverage " +
+              s"of file(s) this $verb read — re-read and re-derive")
+        conflict(baseFiles, baseM)
+        val c = carriedFrom(baseM, _ => true)
+        guards(c)
+        val nextDv = c.dv ++ hit.map(rel =>
+          rel -> (baseDvSig.getOrElse(rel, Seq.empty) :+ dvRel))
+        val nextRows = c.rows.map { case (rel, n) =>
+          rel -> (n - killed.getOrElse(rel, 0L)) } ++ freshRows
+        val nextTxns = txn.fold(c.txns) { case (app, v) =>
+          c.txns.updated(app, c.txns.get(app).fold(v)(math.max(_, v)))
+        }
+        if (publish(table, baseId + 1, baseFiles ++ fresh, nextTxns,
+            c.schema.map(_.json), c.stats ++ freshStats, nextRows, nextDv,
+            c.props, c.bytes ++ freshBytes,
+            cdc = if (cdfOn) Seq(cdcRel) else Nil,
+            op = Some(if (verb == "MERGE") verb else s"$verb (MOR)"))) {
+          // the published vector is already in hand: the next read of
+          // this snapshot opens no sidecar
+          dvDir.foreach(d => dvMemo.put((table, dvRel), d))
+          vacuum(table, baseId + 1)
+          published = baseId + 1
+          committed = true
+        } else if (alreadyApplied) {
+          // a racing replay of the same (appId, version) won the CAS:
+          // our staged files are orphans the age-gated sweep collects
+          committed = true
+        } else {
+          val (winId, winFiles) = resolve(table).get
+          baseId = winId
+          baseFiles = winFiles
+        }
+      }
+      MorOutcome(published, hit.length, fresh.length, matched, deleted,
+        bySource, freshRows.valuesIterator.sum)
+    } finally cached.foreach(_._1.unpersist())
   }
 
   /** [[mergeInto]]'s audit: matched old versions vectored dead in
@@ -5281,7 +5331,9 @@ object TableCommit {
     *
     * A statement over a local source runs at most four Spark jobs
     * (one more for any other source, one more with `graft.cdf`), each
-    * labelled `graft MERGE <table>: <phase>`:
+    * labelled `graft MERGE <table>: <phase>` — the
+    * source here, every later phase in the merge-on-read kernel
+    * ([[morCommit]]) that DELETE and UPDATE share:
     *  - source: the source is collected to the driver once (no job for
     *    a local relation, one otherwise); the cardinality guard and the
     *    pruning band are computed there ([[mergeGuard]]), and the rows
@@ -5386,231 +5438,56 @@ object TableCommit {
       keyCols.map(k => col(k) === col(s"src_$k")).reduce(_ && _))(_ && _)
     val delPred = deleteWhen.map(c => coalesce(c, lit(false)))
       .getOrElse(lit(false))
-    // phase 2, CLASSIFY: live candidate rows (prior vectors applied,
-    // positions tagged) against the broadcast source — an inner join,
-    // or a left-outer one when the BY SOURCE clause needs the
-    // unmatched rows too — keeping the rows this merge kills: matched
-    // rows (row id set; `__graft_del` when the DELETE clause takes
-    // them) and unmatched rows the clause deletes (row id NULL).
-    // PERSISTED: the classify pass, the update successors and the
-    // change feed all read it. It is NOT bounded by the source — the
-    // cardinality rule bounds source keys, and a target may hold a key
-    // many times — so it is cached, never collected. It is cached as
-    // an RDD of rows: adaptive execution would materialize a cached
-    // Dataset in a job of its own, and a fresh plan over the join
-    // would broadcast the source again
-    val kept: Option[(org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-        StructType)] =
-      if (candidates.isEmpty) None
-      else {
-        val raw = pinnedRead(s, table, m, candidates, withMeta = true)
-        val live = applyDv(s, table, m, candidates,
-          dvKeyCols(raw, depthsOf(candidates))).drop("_metadata")
-        val df = (notMatchedBySourceDelete match {
-          case None => live.join(srcR, onCond)
-          case Some(cond) => live.join(srcR, onCond, "left_outer")
-            // NULL keeps (SQL semantics)
-            .filter(col(rid).isNotNull || coalesce(cond, lit(false)))
-        }).withColumn("__graft_del", col(rid).isNotNull && delPred)
-        Some(labelled(s, table, "classify")(df.rdd)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) ->
-          df.schema)
-      }
-    try {
-      // ONE job (plus the source broadcast): every task folds its rows
-      // into per-file counts and a kill bitmap, and the driver merges
-      // the partials — no shuffle, and driver memory tracks compressed
-      // vector bytes plus |source|
-      val partials = kept.fold(Array.empty[(Seq[(String, Array[Long],
-          Array[Byte])], Array[Byte])]) { case (rows, sch) =>
-        val at = Seq("__graft_dvk", "__graft_dvp", rid, "__graft_del")
-          .map(sch.fieldIndex)
-        labelled(s, table, "classify")(rows.mapPartitions(it =>
-          classifyPartition(it, at(0), at(1), at(2), at(3))).collect())
-      }
-      val hits = kept.map { case (rows, sch) => s.createDataFrame(rows, sch) }
-      val relOf = relIndex(table, candidates)
-      // per hit file: (matched, deleted, by-source) counts and the
-      // kill bitmaps of the tasks that saw it
-      val perFile = scala.collection.mutable.HashMap.empty[String,
-        (Array[Long], scala.collection.mutable.ArrayBuffer[Array[Byte]])]
-      partials.foreach(_._1.foreach { case (key, n, bmp) =>
-        val rel = relOf(key).getOrElse(sys.error(
-          s"MERGE on $table: scanned file key $key resolves to no " +
-            "candidate file"))
-        val (c, blobs) = perFile.getOrElseUpdate(rel,
-          (new Array[Long](3), scala.collection.mutable.ArrayBuffer.empty))
-        (0 until 3).foreach(i => c(i) += n(i))
-        blobs += bmp
-      })
-      val matchedRids = DvCodec.mergeDecoded(partials.toSeq.map(_._2))
-      val hitCounts: Map[String, (Long, Long)] = perFile.collect {
-        case (rel, (c, _)) if c(0) > 0L => rel -> (c(0), c(1))
-      }.toMap
-      val bsCounts: Map[String, Long] = perFile.collect {
-        case (rel, (c, _)) if c(2) > 0L => rel -> c(2)
-      }.toMap
-      val hit = candidates.filter(perFile.contains)
-      val rowsMatched = hitCounts.valuesIterator.map(_._1).sum
-      val rowsDeleted = hitCounts.valuesIterator.map(_._2).sum
-      val rowsUpdated = rowsMatched - rowsDeleted
-      val rowsDeletedBySource = bsCounts.valuesIterator.sum
-      val writerId = java.util.UUID.randomUUID().toString.take(8)
-      // phase 3: every matched row's old version dies (updates get
-      // successors), by-source-clause rows die with no successor — one
-      // vector per hit file, written by the driver
-      val (dvRel, dvDir) =
-        if (hit.isEmpty) (s"_dv/$writerId", None)
-        else {
-          val (rel, dir) = writeDvLocal(s, table, writerId,
-            perFile.map { case (f, (_, bs)) =>
-              f -> (if (bs.length == 1) bs.head
-                else DvCodec.encode(DvCodec.mergeDecoded(bs.toSeq)))
-            }.toMap)
-          (rel, Some(dir))
-        }
-      // successors: the update clause over the pre-merge row, each
-      // assignment cast to the declared type (schema of record invariant)
-      val successors = hits.map(_.filter(col(rid).isNotNull &&
-          !col("__graft_del"))
-        .select(tgtSchema.fields.map { f =>
-          updateSet.get(f.name) match {
-            case Some(e) => e.cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        }.toIndexedSeq: _*))
-      // NOT MATCHED: source rows no candidate's live row matched
-      // (pruning proves non-candidates cannot hold one) — local rows,
-      // selected by row id on the driver
-      val inserts = s.createDataFrame(srcExt.indices
+    // phase 2, CLASSIFY: live candidate rows against the broadcast
+    // source — an inner join, or a left-outer one when the BY SOURCE
+    // clause needs the unmatched rows too — keeping the rows this merge
+    // kills: matched rows (row id set; `__graft_del` when the DELETE
+    // clause takes them) and unmatched rows the clause deletes (row id
+    // NULL). Not bounded by the source (a target may hold a key many
+    // times), so the kernel caches it, never collects it
+    val kept = if (candidates.isEmpty) None else Some {
+      val live = liveRows(s, table, m, candidates)
+      (notMatchedBySourceDelete match {
+        case None => live.join(srcR, onCond)
+        case Some(cond) => live.join(srcR, onCond, "left_outer")
+          // NULL keeps (SQL semantics)
+          .filter(col(rid).isNotNull || coalesce(cond, lit(false)))
+      }).withColumn("__graft_del", col(rid).isNotNull && delPred)
+    }
+    // NOT MATCHED: source rows no candidate's live row matched (pruning
+    // proves non-candidates cannot hold one) — local rows, selected by
+    // row id on the driver
+    def inserts(matchedRids: Array[Long]): DataFrame =
+      s.createDataFrame(srcExt.indices
           .filter(i => java.util.Arrays.binarySearch(matchedRids, i.toLong) < 0)
           .map(srcExt).asJava, srcSchema)
         .select(tgtSchema.fields.map(f =>
           col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-      // writer-recorded CHANGE DATA: the full four-way classification
-      // in one sidecar — delete preimages (either DELETE clause),
-      // update pre/postimages, inserts — cost ∝ |matched| + |inserted|;
-      // OPT-IN via graft.cdf=true (Delta's default: off)
-      val cdfOn = cdfEnabled(table)
-      val cdcRel = s"_cdc/$writerId"
-      if (cdfOn) {
-        val tgtCols = tgtSchema.fields.toSeq.map(f => col(f.name))
-        def tagged(df: DataFrame, kind: String): DataFrame =
-          df.select(tgtCols :+ lit(kind).as("_change_type"): _*)
-        val cdcParts = hits.toSeq.flatMap(h => Seq(
-          tagged(h.filter(col(rid).isNull || col("__graft_del")), "delete"),
-          tagged(h.filter(col(rid).isNotNull && !col("__graft_del")),
-            "update_preimage"))) ++
-          successors.map(_.withColumn("_change_type",
-            lit("update_postimage"))) :+
-          inserts.withColumn("_change_type", lit("insert"))
-        labelled(s, table, "cdc")(cdcParts.reduce(_.unionByName(_))
-          .write.mode("overwrite").parquet(s"$table/$cdcRel"))
-      }
-      // phase 4, WRITE: successors ∪ inserts in one staged write
-      val freshSrc = successors.fold(inserts)(_.unionByName(inserts))
-      val statsCols = statsOf(m).keysIterator.map(_._2).toSeq.distinct.sorted
-      val specs = specColsOf(partCols)
-      val freshSrcM = withSpecDirs(freshSrc, specs)
-      val fpcols = specs.map(sc => col(sc.dirName))
-      val shaped = statsCols.headOption match {
-        case Some(c) => freshSrcM.repartition(fpcols: _*)
-          .sortWithinPartitions((fpcols :+ col(c)): _*)
-        case None => freshSrcM.repartition(fpcols: _*)
-      }
-      val checked = constraints(table)
-      val wcols = shaped.columns.toSeq
-        .filterNot(derivedDirNames(partCols))
-      val wmap = writeMapping(table, wcols)
-      val (fresh, freshBytes, freshStats, freshRows) =
-        labelled(s, table, "write") {
-          val (fresh, freshBytes) = stageMove(table, writerId, shaped,
-            partCols, checkedConstraints = checked, wmap = wmap)
-          val (freshStats, freshRows) =
-            if (statsCols.nonEmpty && fresh.nonEmpty)
-              fileMeta(s, table, fresh, statsCols, wmap)
-            else (Map.empty[(String, String), (String, String)],
-              footerRows(table, fresh))
-          (fresh, freshBytes, freshStats, freshRows)
-        }
-      val rowsInserted = freshRows.valuesIterator.sum - rowsUpdated
-      val hitSet = hit.toSet
-      val baseDvSig = dvOf(m).filter { case (rel, _) => hitSet(rel) }
-      val known0 = baseFiles0.toSet
-      var (baseId, baseFiles) = (baseId0, baseFiles0)
-      var published = baseId0
-      var committed = false
-      while (!committed) {
-        if (!hitSet.subsetOf(baseFiles.toSet))
-          throw new CommitConflictException(
-            s"concurrent commit of $table removed or rewrote file(s) this " +
-              "MERGE read — re-read and re-derive")
-        val baseM = manifests(table).find(_._1 == baseId)
-        val winDv = baseM.map(bm => dvOf(bm._2)).getOrElse(Map.empty)
-        if (winDv.filter { case (rel, _) => hitSet(rel) } != baseDvSig)
-          throw new CommitConflictException(
-            s"concurrent commit of $table changed deletion-vector coverage " +
-              "of file(s) this MERGE read — re-read and re-derive")
-        // merge-specific rule: a winner's ADDED file whose recorded key
-        // range overlaps the source band (or records none) may hold
-        // source keys this merge classified as inserts — conflict
-        val winAdded = baseFiles.filterNot(known0)
-        if (winAdded.nonEmpty) {
-          val winStats = baseM.map(bm => statsOf(bm._2)).getOrElse(Map.empty)
-          val unsafe = winAdded.filter { rel =>
-            winStats.get((rel, leadKey)) match {
-              case Some((mn, mx)) => band match {
-                case Some(b) => b.keeps(mn, mx)
-                case None => true
-              }
-              case None => true
-            }
-          }
-          if (unsafe.nonEmpty)
-            throw new CommitConflictException(
-              s"concurrent commit of $table added file(s) that may hold " +
-                s"MERGE source keys (${unsafe.take(3).mkString(", ")}…) — " +
-                "matched/not-matched decisions are stale; re-read and re-derive")
-        }
-        val c = carriedFrom(baseM.map(_._2), _ => true)
-        guardConstraints(table, checked, c.props)
-        guardMapping(table, wmap, wcols, c.schema, c.props)
-        guardSpec(table, partCols, c.props)
-        val nextDv =
-          if (hit.isEmpty) c.dv
-          else c.dv ++ hit.map(rel =>
-            rel -> (baseDvSig.getOrElse(rel, Seq.empty) :+ dvRel))
-        val nextRows = c.rows.map { case (rel, n) =>
-          rel -> (n - hitCounts.get(rel).map(_._1).getOrElse(0L) -
-            bsCounts.getOrElse(rel, 0L)) } ++ freshRows
-        val nextTxns = txn.fold(c.txns) { case (app, v) =>
-          c.txns.updated(app, c.txns.get(app).fold(v)(math.max(_, v)))
-        }
-        if (publish(table, baseId + 1, baseFiles ++ fresh, nextTxns,
-            c.schema.map(_.json), c.stats ++ freshStats, nextRows, nextDv,
-            c.props, c.bytes ++ freshBytes,
-            cdc = if (cdfOn) Seq(cdcRel) else Nil,
-            op = Some("MERGE"))) {
-          // the published vector is already in hand: the next read of
-          // this snapshot opens no sidecar
-          dvDir.foreach(d => dvMemo.put((table, dvRel), d))
-          vacuum(table, baseId + 1)
-          published = baseId + 1
-          committed = true
-        } else if (alreadyApplied) {
-          // a racing replay of the same (appId, version) won the CAS:
-          // our staged files are orphans the age-gated sweep collects
-          committed = true
-        } else {
-          val (winId, winFiles) = resolve(table).get
-          baseId = winId
-          baseFiles = winFiles
+    // merge-specific conflict rule: a winner's ADDED file whose recorded
+    // key range overlaps the source band (or records none) may hold
+    // source keys this merge classified as inserts
+    val known0 = baseFiles0.toSet
+    def addedFileRule(baseFiles: Seq[String], baseM: Option[Snapshot]): Unit = {
+      val winStats = baseM.map(statsOf).getOrElse(Map.empty)
+      val unsafe = baseFiles.filterNot(known0).filter { rel =>
+        winStats.get((rel, leadKey)) match {
+          case Some((mn, mx)) => band.forall(_.keeps(mn, mx))
+          case None => true
         }
       }
-      MergeAudit(baseId0, published, total, candidates.length, hit.length,
-        fresh.length, rowsUpdated, rowsDeleted, rowsInserted,
-        rowsDeletedBySource)
-    } finally kept.foreach(_._1.unpersist())
+      if (unsafe.nonEmpty)
+        throw new CommitConflictException(
+          s"concurrent commit of $table added file(s) that may hold " +
+            s"MERGE source keys (${unsafe.take(3).mkString(", ")}…) — " +
+            "matched/not-matched decisions are stale; re-read and re-derive")
+    }
+    val o = morCommit(s, table, "MERGE", partCols, baseId0, baseFiles0, m,
+      tgtSchema, candidates, kept, Some(updateSet), Some(inserts _), txn,
+      addedFileRule)
+    val rowsUpdated = o.matched - o.deleted
+    MergeAudit(baseId0, o.published, total, candidates.length, o.filesHit,
+      o.filesAdded, rowsUpdated, o.deleted, o.freshRows - rowsUpdated,
+      o.bySource)
   }
 
   /** ROW-LEVEL UPDATE as a COPY-ON-WRITE commit — [[deleteWhere]]'s
@@ -5720,8 +5597,7 @@ object TableCommit {
     val all = manifestIds(table)
     if (all.isEmpty) return (Seq.empty, 0, 0, 0)
     val newest = all.max
-    val keep = retentionOf(table)
-    val (keepIds, dropIds) = all.partition(_ > newest - keep)
+    val (keepIds, dropIds) = all.partition(retains(newest, properties(table)))
     val retained = keepIds.flatMap(id => stateOf(table, id))
     val live = retained.flatMap(_.files).toSet
     // the executing verb's exact rule: only still-present files count
@@ -5790,14 +5666,11 @@ object TableCommit {
     val st = store(table)
     val all = manifestIds(table)
     val present = all.toSet
-    val keep = retentionOf(table)
     // TAGS ARE RETENTION LEASES: a tagged snapshot keeps its manifest
     // chain, data files and DV/CDC trees until the tag is dropped —
     // read from the newest snapshot's carried-forward properties, so
     // one metadata probe, never a scan
-    val leased = tags(table).values.toSet
-    val (keepIds, dropIds) =
-      all.partition(id => id > newest - keep || leased(id))
+    val (keepIds, dropIds) = all.partition(retains(newest, properties(table)))
     // snapshot file sets by RECONSTRUCTION (never raw lines: a delta's
     // directives are not paths, and a `#txn` line is not a data file)
     val retained = keepIds.flatMap(id => stateOf(table, id))

@@ -250,4 +250,36 @@ class DvCodecSpec extends GraftSpec {
     assert(merged.length == 1200000 && merged(0) == 0L &&
       merged(1199999) == 1199999L)
   }
+
+  test("union: the compressed-domain union equals encode(mergeDecoded) " +
+      "on seeded stacks with colliding chunk keys, array/bitmap " +
+      "crossovers and identical blobs") {
+    val rnd = new scala.util.Random(1663)
+    (0 until 30).foreach { trial =>
+      // a few shared chunk keys, so blobs collide; each chunk sparse
+      // (array) or dense (bitmap) at random, plus chunk-edge positions
+      val keys = Array.fill(1 + rnd.nextInt(6))(rnd.nextLong(1L << 20))
+      def blob(): Array[Byte] = DvCodec.encode(
+        keys.filter(_ => rnd.nextBoolean()).flatMap { hi =>
+          val n = if (rnd.nextBoolean()) 1 + rnd.nextInt(4096)
+            else 3000 + rnd.nextInt(20000)
+          Array.fill(n)((hi << 16) + rnd.nextInt(65536))
+        } ++ Array(0L, 65535L, 65536L).filter(_ => rnd.nextBoolean()))
+      val distinct = Seq.fill(1 + rnd.nextInt(4))(blob())
+      val blobs = distinct ++ distinct.take(rnd.nextInt(2))
+      assert(java.util.Arrays.equals(DvCodec.union(blobs),
+        DvCodec.encode(DvCodec.mergeDecoded(blobs))), s"trial $trial")
+    }
+    // two array chunks whose union passes 4096 slots becomes a bitmap
+    val a = DvCodec.encode((0L until 3000L).toArray)
+    val b = DvCodec.encode((2000L until 6000L).toArray)
+    assert(java.util.Arrays.equals(DvCodec.union(Seq(a, b)),
+      DvCodec.encode((0L until 6000L).toArray)))
+    // identical blobs, an empty blob and no blob at all
+    assert(java.util.Arrays.equals(DvCodec.union(Seq(a, a)), a))
+    assert(java.util.Arrays.equals(
+      DvCodec.union(Seq(DvCodec.encode(Array.empty[Long]), a)), a))
+    assert(java.util.Arrays.equals(DvCodec.union(Seq.empty),
+      DvCodec.encode(Array.empty[Long])))
+  }
 }

@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions._
 import graft.operators.{DvCodec, TableCommit}
 import graft.plans.GraftCatalog
 
-/** One-pass MERGE: a driver-local source, one classify pass that
-  * returns per-file counts and kill bitmaps, a driver-written vector
-  * and one write — at most 4 Spark jobs per statement, each labelled
-  * with its phase, with results, audit, manifest row counts and vector
-  * bytes equal to a model. */
+/** One merge-on-read kernel: a driver-local source (MERGE), one
+  * classify pass that returns per-file counts and kill bitmaps, a
+  * driver-written vector and one write — at most 4 Spark jobs per
+  * MERGE, 1 per DELETE and 3 per UPDATE (one more each with the change
+  * feed), each labelled with its verb and phase, with results, audit,
+  * manifest row counts, vector bytes and change feed equal to a
+  * model. */
 class MergeJobsSpec extends GraftSpec {
   import spark.implicits._
 
@@ -40,9 +42,11 @@ class MergeJobsSpec extends GraftSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** Jobs per MERGE phase; every job must carry a MERGE label. */
-  private def perPhase(t: String, descs: Seq[String]): Map[String, Int] = {
-    val prefix = s"graft MERGE $t: "
+  /** Jobs per phase of a `verb` statement; every job must carry its
+    * label. */
+  private def perPhase(t: String, descs: Seq[String],
+      verb: String = "MERGE"): Map[String, Int] = {
+    val prefix = s"graft $verb $t: "
     assert(descs.forall(_.startsWith(prefix)), s"unlabelled jobs: $descs")
     descs.groupBy(_.stripPrefix(prefix)).map { case (k, v) => k -> v.size }
   }
@@ -98,6 +102,25 @@ class MergeJobsSpec extends GraftSpec {
     else
       spark.read.parquet(s"$t/$dir").as[(String, Long)].collect().toSeq
         .groupBy(_._1).map { case (k, ps) => k -> ps.map(_._2).sorted.toArray }
+
+  /** The vector `dir` holds exactly `want`'s positions per file: on v2,
+    * each blob is the canonical encoding of the file's kill set. */
+  private def assertVector(t: String, dir: String,
+      want: Map[String, Array[Long]], v1: Boolean): Unit = {
+    assert(dir.endsWith(".v2") != v1, dir)
+    val onDisk = killsOnDisk(t, dir)
+    assert(onDisk.keySet == want.keySet)
+    want.foreach { case (rel, ps) =>
+      assert(onDisk(rel).toSeq == ps.sorted.toSeq, rel)
+    }
+    if (!v1) {
+      val blobs = spark.read.parquet(s"$t/$dir")
+        .as[(String, Array[Byte])].collect().toMap
+      want.foreach { case (rel, ps) =>
+        assert(blobs(rel).sameElements(DvCodec.encode(ps)), rel)
+      }
+    }
+  }
 
   private val upsert = "ON t.user_id = s.user_id WHEN MATCHED THEN UPDATE " +
     "SET n = t.n + s.n, cents = t.cents + s.cents WHEN NOT MATCHED THEN INSERT *"
@@ -254,5 +277,68 @@ class MergeJobsSpec extends GraftSpec {
         updateSet = Map("n" -> col("src_n")))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
     } finally sc.setJobDescription(null)
+  }
+
+  for (v1 <- Seq(false, true); cdf <- Seq(false, true)) {
+    val fmt = if (v1) "v1" else "v2"
+    val feed = if (cdf) "with" else "without"
+    test(s"SQL MoR DELETE then UPDATE ($fmt vectors, $feed graft.cdf): " +
+        "1 and 3 labelled jobs (one more each with the feed); rows, " +
+        "counts, manifest rows, vector bytes and change feed equal the " +
+        "model") {
+      val name = s"dml_${fmt}_${if (cdf) "cdf" else "plain"}"
+      val (t, model0) = mkState(name, v1)
+      if (cdf) TableCommit.setProperties(t, Map("graft.cdf" -> "true",
+        "graft.retention.generations" -> "10"))
+      val cdc = if (cdf) Map("cdc" -> 1) else Map.empty[String, Int]
+      val rows0 = TableCommit.scanMeta(t, None).get.rows
+      val id0 = TableCommit.resolve(t).get._1
+
+      // DELETE every 5th user: one classify job, no successor write
+      val dead = model0.keySet.filter(_ % 5 == 0)
+      val wantDel = positionsOf(t, dead, model0)
+      val before = dvDirs(t)
+      val (res, descs) = jobsDuring(spark.sql(
+        s"DELETE FROM graftmj.db.$name WHERE user_id % 5 = 0").collect())
+      assert(perPhase(t, descs, "DELETE") == Map("classify" -> 1) ++ cdc,
+        descs.toString)
+      assert(res.toSeq == Seq(Row(dead.size.toLong)))
+      val model1 = model0 -- dead
+      assert(rows(name) == model1)
+      val meta1 = TableCommit.scanMeta(t, None).get
+      wantDel.foreach { case (rel, ps) =>
+        assert(meta1.rows(rel) == rows0(rel) - ps.length, rel)
+      }
+      assert(TableCommit.rowCount(t, meta1.id).get == model1.size)
+      assertVector(t, newDvDir(t, before), wantDel, v1)
+
+      // UPDATE every 3rd live user: classify, then the successor write
+      val upd = model1.keySet.filter(_ % 3 == 0)
+      val wantUpd = positionsOf(t, upd, model1)
+      val before2 = dvDirs(t)
+      val (res2, descs2) = jobsDuring(spark.sql(
+        s"UPDATE graftmj.db.$name SET n = n + 10, cents = cents * 2 " +
+          "WHERE user_id % 3 = 0").collect())
+      assert(perPhase(t, descs2, "UPDATE") ==
+        Map("classify" -> 1, "write" -> 2) ++ cdc, descs2.toString)
+      assert(res2.toSeq == Seq(Row(upd.size.toLong)))
+      val model2 = model1 ++ upd.map(u => u -> (11L, 20L))
+      assert(rows(name) == model2)
+      val id2 = TableCommit.resolve(t).get._1
+      assert(TableCommit.rowCount(t, id2).get == model2.size)
+      assertVector(t, newDvDir(t, before2), wantUpd, v1)
+
+      if (cdf) {
+        def changes(from: Long, to: Long) =
+          TableCommit.changeFeedPrecise(spark, t, from, to)
+            .select("user_id", "n", "cents", "_change_type")
+            .as[(Long, Long, Long, String)].collect().toSeq.sorted
+        assert(changes(id0, meta1.id) ==
+          dead.toSeq.map(u => (u, 1L, 10L, "delete")).sorted)
+        assert(changes(meta1.id, id2) == upd.toSeq.flatMap(u => Seq(
+          (u, 1L, 10L, "update_preimage"),
+          (u, 11L, 20L, "update_postimage"))).sorted)
+      }
+    }
   }
 }

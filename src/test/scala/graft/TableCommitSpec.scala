@@ -1236,6 +1236,31 @@ class TableCommitSpec extends GraftSpec {
     assert(TableCommit.vacuumRun(t) == ((0, 0)))
   }
 
+  test("vacuumAudit on a TAGGED table: the tag's lease is part of the " +
+      "one retention rule, so the audit predicts the run's sweep and the " +
+      "tagged snapshot's file survives") {
+    val t = freshTable()
+    TableCommit.initIfAbsent(t)
+    TableCommit.replacePartitions(spark, t, "pt", Seq("pt=1"),
+      Seq((30L, "C", 1)).toDF("id", "v", "pt"))
+    val (id1, files1) = TableCommit.resolve(t).get
+    val tagged = files1.filter(_.startsWith("pt=1/"))
+    TableCommit.tag(t, "keep", id1)
+    // four more commits: the tagged snapshot's pt=1 file leaves every
+    // snapshot inside the window
+    TableCommit.replacePartitions(spark, t, "pt", Seq("pt=1"),
+      Seq((31L, "D", 1)).toDF("id", "v", "pt"))
+    (41L to 43L).foreach(i => TableCommit.appendRows(spark, t, "pt",
+      Seq((i, "x", 2)).toDF("id", "v", "pt")))
+    val (ids, _, dead, orphans) = TableCommit.vacuumAudit(t)
+    assert(TableCommit.vacuumRun(t) == ((dead, orphans)),
+      s"the audit predicted ($dead, $orphans)")
+    assert(ids.contains(id1), s"the audit dropped the tagged snapshot: $ids")
+    assert(tagged.nonEmpty && tagged.forall(f => new java.io.File(t, f).exists()))
+    assert(TableCommit.readAt(spark, t, id1).filter(col("pt") === 1)
+      .select(col("id")).as[Long].collect().toSeq == Seq(30L))
+  }
+
   test("DV read-path plan pins: a stats-pruned read reads ONLY the kept " +
       "files' deletion-vector sidecars (a pruned file's _dv tree is " +
       "never opened), the plan carries NO join arm for DVs (broadcast " +
@@ -1324,6 +1349,50 @@ class TableCommitSpec extends GraftSpec {
     assert(!plan.contains("Join"),
       s"dense-kill read must not plan a join arm:\n${plan.take(2000)}")
     graft.operators.Sinks.deleteRecursively(dir)
+  }
+
+  test("dense-kill MoR delete of a file SEVERAL tasks read: the per-task " +
+      "chunk bitmaps union on the driver into the same live set and the " +
+      "same compressed sidecar bound") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dvsplit").toFile
+    val t = new java.io.File(dir, "table").getAbsolutePath
+    val n = 1200000L
+    val confs = Seq("parquet.block.size", "spark.sql.files.maxPartitionBytes")
+    val prev = confs.map(k => k -> spark.conf.getOption(k))
+    // 1 MiB row groups and read splits: the file's rows, and so its
+    // 64Ki-position chunks, reach the classify pass from several tasks
+    confs.foreach(k => spark.conf.set(k, (1L << 20).toString))
+    try {
+      TableCommit.replacePartitions(spark, t, "pt", Seq("pt=0"),
+        spark.range(n).select(col("id"), lit("x").as("v"),
+          lit(0).cast("int").as("pt")),
+        clusterBy = Seq("id"), filesPerPartition = 1)
+      val rel = TableCommit.resolve(t).get._2.head
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.io.File(t, rel).toURI),
+          spark.sessionState.newHadoopConf()))
+      val rowGroups = try footer.getFooter.getBlocks.size finally footer.close()
+      assert(rowGroups >= 4, s"the file has $rowGroups row groups")
+      val audit = TableCommit.deleteWhereMor(spark, t, "pt", "id",
+        BigDecimal(0), BigDecimal(999999))
+      assert(audit.rowsDeleted == 1000000L, audit.toString)
+      val dvBytes = Option(new java.io.File(t, "_dv").listFiles())
+        .getOrElse(Array.empty).flatMap(d =>
+          Option(d.listFiles()).getOrElse(Array.empty)).map(_.length()).sum
+      assert(dvBytes > 0 && dvBytes < (1L << 20),
+        s"dense-kill sidecar is $dvBytes bytes — expected compressed bitmaps")
+      val df = TableCommit.read(spark, t)
+      assert(df.count() === n - 1000000L)
+      assert(df.agg(org.apache.spark.sql.functions.min(col("id")))
+        .collect()(0).getLong(0) == 1000000L)
+    } finally {
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      graft.operators.Sinks.deleteRecursively(dir)
+    }
   }
 
   test("explicit vacuum sweeps stale never-referenced orphans but spares " +
