@@ -45,8 +45,10 @@ object PlanDump {
       graft.sources.Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag")),
       clusterBy = Seq("l_orderkey"))
-    TableCommit.deleteWhereMorBy(spark, t, Seq("bucket(4,l_orderkey)"),
-      "l_orderkey", BigDecimal(1), BigDecimal(32))
+    TableCommit.delete(spark, t, Seq("bucket(4,l_orderkey)"),
+      col("l_orderkey") >= lit(BigDecimal(1)) &&
+        col("l_orderkey") <= lit(BigDecimal(32)),
+      TableCommit.MergeOnRead)
     dump("table_read", TableCommit.read(spark, t))
     dump("table_read_where",
       TableCommit.readWhere(spark, t, "l_orderkey", BigDecimal(100),

@@ -782,18 +782,6 @@ object TableCommit {
           lit(hi))
   }
 
-  /** The GENERAL-PREDICATE band behind [[deleteMatching]] and friends:
-    * no stats claim (an arbitrary predicate proves nothing about a
-    * file's bounds, so every file stays candidate) and the row
-    * predicate is the caller's Column verbatim — the whole banded DML
-    * pipeline (hit scan → narrow to hit files → rewrite-or-vector ∝
-    * hits → OCC) then serves SQL's unrestricted `WHERE`. */
-  private final case class PredBand(p: org.apache.spark.sql.Column)
-      extends StatBand {
-    def keeps(mn: String, mx: String): Boolean = true
-    def pred(column: String): org.apache.spark.sql.Column = p
-  }
-
   /** Per-file ROW COUNTS a manifest carries (`#rows <n>\t<relpath>`
     * directive lines — the Delta add-action's `numRecords`): every
     * commit records the count for its fresh files from the same
@@ -887,7 +875,7 @@ object TableCommit {
 
   /** DELETION-VECTOR directives a manifest carries (`#dv <dvdir>\t
     * <datafile-rel>` lines — Delta's deletion vectors / Iceberg v2
-    * position deletes): a MERGE-ON-READ delete ([[deleteWhereMor]])
+    * position deletes): a MERGE-ON-READ delete ([[delete]] with [[MergeOnRead]])
     * marks dead ROW POSITIONS of a data file in a parquet sidecar tree
     * under `_dv/<writerId>` instead of rewriting the file — write cost
     * ∝ deleted rows, zero data-file churn — and every snapshot read
@@ -1380,10 +1368,6 @@ object TableCommit {
       if (sc.transform.isEmpty) d
       else d.withColumn(sc.dirName, specDirExpr(df, sc)))
 
-  /** The table's ACTIVE partition spec, when one has been declared
-    * (`graft.partcols` property, comma-joined column names) — set by
-    * [[evolvePartitioningBy]]; None for tables that never evolved
-    * (their spec stays implicit in the layout, guarded by depth). */
   /** Parse a recorded `graft.partcols` value. Current format is
     * ';'-joined (transform entries carry commas); values recorded by
     * the earlier comma-joined identity-only format (no ';', no '(')
@@ -1393,11 +1377,32 @@ object TableCommit {
     v.split(sep).toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
+  /** The table's ACTIVE partition spec, when one has been declared
+    * (`graft.partcols`) — set by [[evolvePartitioningBy]]; None for
+    * tables that never evolved (their spec stays implicit in the
+    * layout, guarded by depth). */
+
   private[graft] def activePartCols(table: String): Option[Seq[String]] =
     manifests(table).sortBy(-_._1).headOption
       .flatMap(_._2.props.get("graft.partcols"))
       .map(parsePartColsProp)
       .filter(_.nonEmpty)
+
+  /** The spec a statement on `table` writes under: the declared
+    * `graft.partcols` in either recorded format ([[activePartCols]]) or,
+    * for a table that never declared one, its uniform identity layout.
+    * The one resolver behind SQL INSERT, DELETE, UPDATE, MERGE, the
+    * native write path and the `compact` procedure. */
+  private[graft] def partSpec(table: String): Seq[String] =
+    activePartCols(table).getOrElse {
+      resolve(table).map(_._2).getOrElse(Nil).map(layoutSig).distinct match {
+        case Seq(one) if one.nonEmpty => one
+        case _ => throw new UnsupportedOperationException(
+          s"$table declares no partition spec and its layout is not a " +
+            "uniform identity partitioning — declare one via " +
+            "evolvePartitioningBy")
+      }
+    }
 
   /** PARTITION EVOLUTION (Iceberg's evolve-spec, re-derived for the
     * Hive-dir layout): change the table's partition spec as a
@@ -2156,9 +2161,8 @@ object TableCommit {
     band match {
       case NumBand(lo, hi) => sidecarPruned(table, id, column, lo, hi)
       case LexBand(lo, hi) => sidecarPrunedLex(table, id, column, lo, hi)
-      // a band kind the sidecar cannot prune (PredBand's general
-      // predicate has no columnar min/max form): fall back to the text
-      // path, which keeps all files — never a MatchError
+      // a band kind the sidecar cannot prune (a zoned-timestamp
+      // band): fall back to the text path — never a MatchError
       case _ => None
     }
 
@@ -2517,8 +2521,8 @@ object TableCommit {
               s"${other.simpleString} renderings do not compare in " +
               "code-point order (lex '9' > '10', numerically 9 < 10) — " +
               "pruning against them silently loses rows; use the " +
-              "numeric band API (readWhere/deleteWhere/updateWhere) " +
-              "or filter after readAt")
+              "numeric band API (readWhere), filter after readAt, or " +
+              "give delete/update the predicate itself")
         }
       case _ => band
     }
@@ -4427,24 +4431,13 @@ object TableCommit {
       .map(d => partDir(d.file)).distinct.sorted
   }
 
-  /** Audit counters [[deleteWhere]] returns — every field derived from
-    * manifest metadata or a scalar aggregate; nothing table-sized. */
-  final case class DeleteAudit(snapshotBefore: Long, snapshotAfter: Long,
-      filesTotal: Int, filesCandidates: Int, filesRewritten: Int,
-      rowsDeleted: Long)
-
-  /** [[DeleteAudit]]'s twin for [[updateWhere]]. */
-  final case class UpdateAudit(snapshotBefore: Long, snapshotAfter: Long,
-      filesTotal: Int, filesCandidates: Int, filesRewritten: Int,
-      rowsUpdated: Long)
-
-  /** Stage-2 of a copy-on-write DML commit ([[deleteWhere]] and
-    * [[updateWhere]]; the merge-on-read verbs count in their classify
-    * pass instead): matching-row count per candidate file — one
-    * grouped scan over ONLY the candidates, |candidates| scalar rows to
-    * the driver. Paths map back to manifest-relative form by their last
-    * TWO segments (file names alone collide across partition dirs —
-    * the [[fileStats]] lesson), with the URI-vs-raw decode defence. */
+  /** Stage-2 of a copy-on-write [[delete]] or [[update]] (merge-on-read
+    * counts in [[morCommit]]'s classify pass instead): matching-row
+    * count per candidate file — one grouped scan over ONLY the
+    * candidates, |candidates| scalar rows to the driver. Paths map
+    * back to manifest-relative form by their last TWO segments (file
+    * names alone collide across partition dirs — the [[fileStats]]
+    * lesson), with the URI-vs-raw decode defence. */
   private def hitScan(s: SparkSession, table: String, m: Snapshot,
       candidates: Seq[String],
       pred: org.apache.spark.sql.Column): Map[String, Long] = {
@@ -4464,9 +4457,9 @@ object TableCommit {
       .toMap
   }
 
-  /** Stage-3 of a copy-on-write DML commit (shared by [[deleteWhere]]
-    * and [[updateWhere]]): write `replacement` — the hit files' FULL
-    * post-DML content — as fresh files range-clustered on the
+  /** Stage-3 of a copy-on-write [[delete]] or [[update]]: write
+    * `replacement` — the hit files' FULL post-DML content — as fresh
+    * files range-clustered on the
     * manifest's existing stats columns (so the rewrite re-records
     * tight `#stats` and skipping keeps working), then publish
     * (base − hit + fresh) through the FILE-granularity OCC loop: the
@@ -4478,12 +4471,13 @@ object TableCommit {
     * removed or rewrote a hit file (committing our rewrite would
     * resurrect rows that commit deleted or compacted away). Stats for
     * retained files, the txn ledger and the schema of record carry
-    * forward. Returns the published snapshot id. */
+    * forward. Returns the published snapshot id and the number of fresh
+    * files. */
   private def commitRewrite(s: SparkSession, table: String,
       partCols: Seq[String],
       baseId0: Long, baseFiles0: Seq[String], hit: Seq[String],
       replacement: DataFrame, statsCols: Seq[String],
-      op: String): Long = {
+      op: String): (Long, Int) = {
     // the hit files' DV coverage as this rewrite READ it: a winner that
     // registers a new vector on a hit file changes its live row set,
     // and committing our rewrite would resurrect those rows — conflict
@@ -4550,266 +4544,180 @@ object TableCommit {
         baseFiles = winFiles
       }
     }
-    published
+    (published, fresh.length)
   }
 
-  /** ROW-LEVEL DELETE as a COPY-ON-WRITE commit — the remaining DML
-    * verb (Delta's `DELETE FROM t WHERE k BETWEEN lo AND hi`, i.e. the
-    * remove-action/add-action pair of Armbrust VLDB 2020 §3.1): drop
-    * every row with `column` ∈ [lo, hi] from the newest snapshot by
-    * rewriting ONLY the files that actually hold such rows. Three-stage
-    * narrowing keeps write amplification proportional to the MATCHING
-    * data, never the table:
+  /** How a row-level [[delete]] or [[update]] writes its effect:
     *
-    *  1. `#stats` pruning (metadata-only): files whose recorded range
-    *     for `column` is disjoint from the band are untouched AND
-    *     unread — what makes a key-band delete a small job at 100 TB;
-    *     files without stats are conservatively candidates.
-    *  2. A hit scan over just the candidates (one grouped count by
-    *     `input_file_name`) drops candidates holding no matching row —
-    *     stats overlap is necessary, not sufficient; near-miss files
-    *     are retained untouched too.
-    *  3. The hit files' SURVIVOR rows (null-keyed rows survive — a
-    *     null never matches a band) are rewritten as fresh files,
-    *     range-clustered on the manifest's existing stats columns so
-    *     the rewrite re-records tight `#stats`, and the commit swaps
-    *     exactly (hit → fresh) in the manifest. Every other file entry,
-    *     its stats, the txn ledger and the schema of record carry
-    *     forward; a no-match delete publishes NOTHING.
+    *  - [[CopyOnWrite]] rewrites each hit file's full post-statement
+    *    content as fresh files ([[commitRewrite]]): the statement pays
+    *    the rewrite once and readers read clean files;
+    *  - [[MergeOnRead]] marks the matched rows' positions dead in a
+    *    deletion vector and appends an UPDATE's successors as fresh
+    *    files ([[morCommit]]): the commit costs O(matches), existing
+    *    data files are never rewritten, and readers pay a bitmap filter
+    *    until a compaction rewrite materializes the vectors (every
+    *    rewrite reads THROUGH [[readFiles]], and a replaced file's
+    *    `#dv` entries drop with it). */
+  sealed trait DmlMode
+  case object CopyOnWrite extends DmlMode
+  case object MergeOnRead extends DmlMode
+
+  /** ROW-LEVEL DELETE (Delta's `DELETE FROM t WHERE pred`): drop every
+    * row of the newest snapshot for which `pred` is TRUE — a NULL
+    * predicate keeps the row, SQL semantics. Three stages narrow the
+    * work, so write amplification tracks the MATCHING data, never the
+    * table:
     *
-    * Concurrency is FILE-granularity OCC: the predicate was evaluated
+    *  1. Metadata pruning, zero IO: `pred` resolves against the pinned
+    *     snapshot's schema and its translatable conjuncts prune files
+    *     by the DSv2 scan's own rule ([[graft.plans.GraftScan.filesKept]]:
+    *     `#stats` ranges and identity partition dirs), so a DML `WHERE`
+    *     prunes exactly as the same `WHERE` on a SQL read. A conjunct
+    *     with no filter form (`k % 7 = 0`) keeps every file. When no
+    *     file remains, no Spark job runs and nothing is published.
+    *  2. One scan over the candidates' LIVE rows (prior vectors
+    *     applied) finds the hit files and their match counts —
+    *     [[hitScan]] for copy-on-write, [[morCommit]]'s classify pass
+    *     for merge-on-read — so stats overlap, which is necessary but
+    *     not sufficient, never costs a near-miss file a write.
+    *  3. `mode` writes the effect ([[DmlMode]]). Copy-on-write rewrites
+    *     the hit files' survivors, range-clustered on the manifest's
+    *     stats columns so the fresh files record tight `#stats`;
+    *     merge-on-read vectors the matched positions and adjusts
+    *     `#rows` by the exact counts, so [[rowCount]] stays
+    *     metadata-exact and stacked deletes never double-count. Stats
+    *     of a shrunken file stay conservative bounds. A statement that
+    *     hits nothing publishes nothing.
+    *
+    * `partCols` is the layout the statement's fresh files take.
+    * Concurrency is file-granularity OCC: the predicate was evaluated
     * against the pinned base snapshot, so the commit REBASES over any
-    * winner that kept all hit files intact — a concurrent append to
-    * the same partition lands alongside, its rows deliberately not
-    * scanned (snapshot-predicate semantics, Delta's WriteSerializable
-    * append-vs-delete rule) — and CONFLICTS when a winner removed or
-    * rewrote a hit file (committing our survivors would resurrect rows
-    * that commit deleted or compacted away). */
-  def deleteWhere(s: SparkSession, table: String, partCol: String,
-      column: String, lo: BigDecimal, hi: BigDecimal): DeleteAudit =
-    deleteWhereBy(s, table, Seq(partCol), column, lo, hi)
+    * winner that kept every hit file and its vectors intact — a
+    * concurrent append lands alongside, its rows deliberately not
+    * touched (snapshot-predicate semantics, Delta's WriteSerializable
+    * rule) — and CONFLICTS when a winner removed, rewrote or
+    * re-vectored a hit file (committing would resurrect rows that
+    * commit deleted or compacted away). The audit is [[MergeAudit]]:
+    * `filesHit` files were rewritten or vectored, `filesAdded` fresh
+    * files written. */
+  def delete(s: SparkSession, table: String, partCols: Seq[String],
+      pred: org.apache.spark.sql.Column, mode: DmlMode): MergeAudit =
+    rowLevel(s, table, partCols, pred, None, mode)
 
-  /** [[deleteWhere]] over a multi-column partition layout. */
-  def deleteWhereBy(s: SparkSession, table: String, partCols: Seq[String],
-      column: String, lo: BigDecimal, hi: BigDecimal): DeleteAudit =
-    deleteWhereBandBy(s, table, partCols, column, NumBand(lo, hi))
+  /** ROW-LEVEL UPDATE (`UPDATE t SET … WHERE pred`): [[delete]]'s
+    * pruning, hit scan, modes and conflict rules, applying `set` to the
+    * matching rows. Every assignment sees the PRE-update row (one
+    * projection computes them all) and casts to the column's declared
+    * type, so the schema of record is invariant. Matches are decided
+    * once against the pinned snapshot, so updating the predicate's own
+    * column is safe from the Halloween problem, and fresh files record
+    * stats over the new values. The row count is invariant: copy-on-write
+    * rewrites every hit-file row, transformed or not, and merge-on-read
+    * kills each matched position and appends exactly one successor.
+    * Only merge-on-read may SET a partition column (any level of a
+    * multi-column spec) — the row is killed in place and appended where
+    * it now belongs; copy-on-write refuses it, its rows stay in their
+    * dirs (the Delta rule). */
+  def update(s: SparkSession, table: String, partCols: Seq[String],
+      pred: org.apache.spark.sql.Column,
+      set: Map[String, org.apache.spark.sql.Column],
+      mode: DmlMode): MergeAudit =
+    rowLevel(s, table, partCols, pred, Some(set), mode)
 
-  /** [[deleteWhere]] for a STRING key — the band is lexicographic
-    * (code-point order, matching the recorded truncated string stats),
-    * so a string-keyed delete prunes files exactly like a numeric
-    * one. */
-  def deleteWhereLex(s: SparkSession, table: String, partCol: String,
-      column: String, lo: String, hi: String): DeleteAudit =
-    deleteWhereBandBy(s, table, Seq(partCol), column, LexBand(lo, hi))
-
-  /** [[deleteWhereLex]] over a multi-column partition layout. */
-  def deleteWhereLexBy(s: SparkSession, table: String,
-      partCols: Seq[String],
-      column: String, lo: String, hi: String): DeleteAudit =
-    deleteWhereBandBy(s, table, partCols, column, LexBand(lo, hi))
-
-  /** SQL's unrestricted `DELETE FROM t WHERE <predicate>` — the
-    * general-predicate form of [[deleteWhere]]: every file is
-    * candidate (an arbitrary predicate has no stats band to prune
-    * with), the hit scan narrows to files actually holding matches,
-    * and only those rewrite — Delta's DELETE on a non-stats predicate,
-    * same cost shape. NULL-predicate rows are KEPT (SQL semantics;
-    * the survivor filter is null-safe). Prefer the banded verbs when
-    * the predicate IS a range on a stats column — they skip the
-    * candidate scan entirely. */
-  def deleteMatching(s: SparkSession, table: String,
-      partCols: Seq[String],
-      pred: org.apache.spark.sql.Column): DeleteAudit =
-    deleteWhereBandBy(s, table, partCols, "", PredBand(pred))
-
-  private def deleteWhereBandBy(s: SparkSession, table: String,
-      partCols: Seq[String], column: String, band0: StatBand): DeleteAudit = {
-    initIfAbsent(table)
-    val (baseId0, baseFiles0) = resolve(table).get
-    val m = manifests(table).find(_._1 == baseId0).get._2
-    val total = filesOf(m).length
-    val band = guardLexBand(table, column, band0, m.schema)
-    val candidates = pruneFilesBand(m, column, band)
-    def matchPred = band.pred(column)
-    if (candidates.isEmpty)
-      return DeleteAudit(baseId0, baseId0, total, 0, 0, 0L)
-    val hitCounts = hitScan(s, table, m, candidates, matchPred)
-    val hit = candidates.filter(hitCounts.contains)
-    val rowsDeleted = hitCounts.valuesIterator.sum
-    if (hit.isEmpty)
-      return DeleteAudit(baseId0, baseId0, total, candidates.length, 0, 0L)
-    // stage-3 rewrite: survivors of the hit files only — null-safe
-    // complement (filter(!pred) would also drop null-keyed rows)
-    val statsCols = statsOf(m).keysIterator.map(_._2).toSeq.distinct.sorted
-    val survivors = readFiles(s, table, m, hit)
-      .filter(not(coalesce(matchPred, lit(false))))
-    val published = commitRewrite(s, table, partCols, baseId0, baseFiles0,
-      hit, survivors, statsCols, op = "DELETE")
-    DeleteAudit(baseId0, published, total, candidates.length, hit.length,
-      rowsDeleted)
+  /** `pred`'s conjuncts as the data-source filters the DSv2 scan prunes
+    * with. `pred` is resolved against `schema` over an empty local
+    * relation — analysis only, no Spark job. Then, as the optimizer
+    * does before pushdown, replaceable expressions expand (`k BETWEEN
+    * a AND b` → `k >= a AND k <= b`), constants fold and casts unwrap
+    * (a BIGINT key compared with a fractional bound arrives as
+    * `cast(k AS DECIMAL) >= 12.5`), and each conjunct translates by
+    * Spark's own pushdown translation. A conjunct that does not
+    * translate is dropped: it keeps every file, as in the scan. */
+  private def pushedFilters(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      pred: org.apache.spark.sql.Column)
+      : Seq[org.apache.spark.sql.sources.Filter] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, ReplaceExpressions, RewriteWithExpression, UnwrapCastInBinaryComparison}
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val analyzed = s.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      .filter(pred).queryExecution.analyzed
+    Seq(ReplaceExpressions, RewriteWithExpression, ConstantFolding,
+        UnwrapCastInBinaryComparison)
+      .foldLeft(analyzed)((plan, rule) => rule(plan)) match {
+      case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, _) =>
+        conjuncts(cond).flatMap(org.apache.spark.sql.graft.ExpressionColumns
+          .sourceFilter)
+      case _ => Nil
+    }
   }
 
-  /** [[deleteWhereMor]]'s audit — `filesVectored` counts the hit files
-    * that gained a deletion vector; no data file is ever rewritten. */
-  final case class MorDeleteAudit(snapshotBefore: Long, snapshotAfter: Long,
-      filesTotal: Int, filesCandidates: Int, filesVectored: Int,
-      rowsDeleted: Long)
-
-  /** MERGE-ON-READ DELETE — [[deleteWhere]]'s deletion-vector twin
-    * (Delta deletion vectors / Iceberg v2 position deletes): instead of
-    * rewriting the hit files, mark their matching rows' POSITIONS dead
-    * in a vector sidecar (`_dv/<writerId>.v2`: one compressed position
-    * bitmap per hit file, [[DvCodec]]) and publish a manifest that
-    * keeps the SAME file list but registers the vector against each
-    * hit file. Write cost ∝ the compressed kill set — the
-    * latency-optimal half of the delete trade (copy-on-write pays the
-    * rewrite once and reads clean; merge-on-read commits in O(matches)
-    * and every reader pays a bitmap filter on the scan until a
-    * compaction rewrite materializes the vectors — which happens
-    * automatically here, because every rewrite reads THROUGH
-    * [[readFiles]] and the replaced file's `#dv` entries drop with it).
-    * Stats pruning is shared with [[deleteWhere]]; then ONE classify
-    * pass over the LIVE candidate rows (prior vectors applied) yields
-    * the hit files, their live match counts and their kill bitmaps
-    * ([[morCommit]]) — one Spark job, one more with `graft.cdf` — so
-    * repeated MoR deletes stack without double-counting, and `#rows`
-    * entries are adjusted by the exact counts so [[rowCount]] stays
-    * metadata-exact. Stats are left as-is: dead rows only shrink a
-    * file's content, so recorded min/max remain CONSERVATIVE bounds and
-    * pruning stays sound. Conflicts: a winner that removed, rewrote, or
-    * re-vectored a hit file invalidates our classify pass — conflict;
-    * anything else rebases (including appends and MoR deletes on OTHER
-    * files). */
-  def deleteWhereMor(s: SparkSession, table: String, partCol: String,
-      column: String, lo: BigDecimal, hi: BigDecimal): MorDeleteAudit =
-    deleteWhereMorBy(s, table, Seq(partCol), column, lo, hi)
-
-  /** [[deleteWhereMor]] over a multi-column partition layout (the
-    * vector sidecar is layout-independent; only the audit signature
-    * differs). */
-  def deleteWhereMorBy(s: SparkSession, table: String,
-      partCols: Seq[String],
-      column: String, lo: BigDecimal, hi: BigDecimal): MorDeleteAudit =
-    deleteWhereMorBandBy(s, table, partCols, column, NumBand(lo, hi))
-
-  /** [[deleteWhereMor]] for a STRING key (lexicographic band). */
-  def deleteWhereMorLex(s: SparkSession, table: String, partCol: String,
-      column: String, lo: String, hi: String): MorDeleteAudit =
-    deleteWhereMorBandBy(s, table, Seq(partCol), column, LexBand(lo, hi))
-
-  /** [[deleteWhereMorLex]] over a multi-column partition layout. */
-  def deleteWhereMorLexBy(s: SparkSession, table: String,
-      partCols: Seq[String],
-      column: String, lo: String, hi: String): MorDeleteAudit =
-    deleteWhereMorBandBy(s, table, partCols, column, LexBand(lo, hi))
-
-  /** [[deleteMatching]]'s merge-on-read twin: arbitrary-predicate
-    * DELETE committing in O(matches) via deletion vectors. */
-  def deleteMatchingMor(s: SparkSession, table: String,
-      partCols: Seq[String],
-      pred: org.apache.spark.sql.Column): MorDeleteAudit =
-    deleteWhereMorBandBy(s, table, partCols, "", PredBand(pred))
-
-  private def deleteWhereMorBandBy(s: SparkSession, table: String,
-      partCols: Seq[String], column: String,
-      band0: StatBand): MorDeleteAudit = {
-    initIfAbsent(table)
-    val (baseId0, baseFiles0) = resolve(table).get
-    val m = manifests(table).find(_._1 == baseId0).get._2
-    val total = filesOf(m).length
-    val band = guardLexBand(table, column, band0, m.schema)
-    val candidates = pruneFilesBand(m, column, band)
-    if (candidates.isEmpty)
-      return MorDeleteAudit(baseId0, baseId0, total, 0, 0, 0L)
-    val live = liveRows(s, table, m, candidates)
-    val o = morCommit(s, table, "DELETE", partCols, baseId0, baseFiles0, m,
-      schemaOf(m).getOrElse(dataSchema(live)), candidates,
-      Some(live.filter(coalesce(band.pred(column), lit(false)))
-        .withColumn("__graft_del", lit(true))), set = None)
-    MorDeleteAudit(baseId0, o.published, total, candidates.length, o.filesHit,
-      o.deleted)
-  }
-
-  /** [[updateWhereMor]]'s audit — the old versions are vectored dead
-    * in `filesVectored` files and the new versions land in
-    * `filesAdded` fresh files; no existing file is rewritten. */
-  final case class MorUpdateAudit(snapshotBefore: Long, snapshotAfter: Long,
-      filesTotal: Int, filesCandidates: Int, filesVectored: Int,
-      filesAdded: Int, rowsUpdated: Long)
-
-  /** MERGE-ON-READ UPDATE — the deletion-vector form of UPDATE and the
-    * kernel of a MoR MERGE (how Delta/Iceberg write-optimized updates
-    * work): ONE commit that (a) marks the matching rows' positions
-    * dead in a new vector and (b) appends their transformed versions
-    * as fresh files — commit cost ∝ matching rows, zero data-file
-    * churn, row count invariant by construction (every killed position
-    * has exactly one appended successor). SET semantics match
-    * [[updateWhere]] (all assignments see the pre-update row; each
-    * casts to the column's declared type so the schema of record is
-    * invariant) with one MoR-only capability: the PARTITION column may
-    * be SET — a merge-on-read update moves a row across partitions by
-    * killing it in place and appending it where it now belongs, which
-    * the copy-on-write form refuses. It runs on [[morCommit]]: one
-    * classify job, then the successor write (two jobs with its
-    * repartition), one more with `graft.cdf`. Conflicts are
-    * [[deleteWhereMor]]'s (a winner that removed, rewrote, or
-    * re-vectored a hit file) plus the constraint, column-mapping and
-    * partition-spec guards of every row-writing commit. */
-  def updateWhereMor(s: SparkSession, table: String, partCol: String,
-      column: String, lo: BigDecimal, hi: BigDecimal,
-      set: Map[String, org.apache.spark.sql.Column]): MorUpdateAudit =
-    updateWhereMorBy(s, table, Seq(partCol), column, lo, hi, set)
-
-  /** [[updateWhereMor]] over a multi-column partition layout — SET of
-    * ANY partition level moves rows across partition dirs (the MoR
-    * kill-and-re-add kernel is layout-agnostic). */
-  def updateWhereMorBy(s: SparkSession, table: String,
-      partCols: Seq[String],
-      column: String, lo: BigDecimal, hi: BigDecimal,
-      set: Map[String, org.apache.spark.sql.Column]): MorUpdateAudit =
-    updateWhereMorBandBy(s, table, partCols, column, NumBand(lo, hi), set)
-
-  /** [[updateWhereMor]] for a STRING key (lexicographic band). */
-  def updateWhereMorLex(s: SparkSession, table: String, partCol: String,
-      column: String, lo: String, hi: String,
-      set: Map[String, org.apache.spark.sql.Column]): MorUpdateAudit =
-    updateWhereMorBandBy(s, table, Seq(partCol), column, LexBand(lo, hi), set)
-
-  /** [[updateWhereMorLex]] over a multi-column partition layout. */
-  def updateWhereMorLexBy(s: SparkSession, table: String,
-      partCols: Seq[String],
-      column: String, lo: String, hi: String,
-      set: Map[String, org.apache.spark.sql.Column]): MorUpdateAudit =
-    updateWhereMorBandBy(s, table, partCols, column, LexBand(lo, hi), set)
-
-  /** [[updateMatching]]'s merge-on-read twin: arbitrary-predicate
-    * UPDATE committing in O(matches) — kill vectors + successors. */
-  def updateMatchingMor(s: SparkSession, table: String,
+  /** The one body behind [[delete]] (`set` None) and [[update]]: init,
+    * resolve, prune, the empty-candidate return, then [[morCommit]] or
+    * [[hitScan]] + [[commitRewrite]] by `mode`. */
+  private def rowLevel(s: SparkSession, table: String,
       partCols: Seq[String], pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): MorUpdateAudit =
-    updateWhereMorBandBy(s, table, partCols, "", PredBand(pred), set)
-
-  private def updateWhereMorBandBy(s: SparkSession, table: String,
-      partCols: Seq[String], column: String, band0: StatBand,
-      set: Map[String, org.apache.spark.sql.Column]): MorUpdateAudit = {
+      set: Option[Map[String, org.apache.spark.sql.Column]],
+      mode: DmlMode): MergeAudit = {
+    val verb = if (set.isEmpty) "DELETE" else "UPDATE"
     initIfAbsent(table)
     val (baseId0, baseFiles0) = resolve(table).get
     val m = manifests(table).find(_._1 == baseId0).get._2
-    val total = filesOf(m).length
-    val band = guardLexBand(table, column, band0, m.schema)
-    val candidates = pruneFilesBand(m, column, band)
-    if (candidates.isEmpty)
-      return MorUpdateAudit(baseId0, baseId0, total, 0, 0, 0, 0L)
-    val live = liveRows(s, table, m, candidates)
-    val tgtSchema = schemaOf(m).getOrElse(dataSchema(live))
-    set.keys.foreach(c => require(tgtSchema.fieldNames.contains(c),
-      s"SET column $c is not a column of $table"))
-    val o = morCommit(s, table, "UPDATE", partCols, baseId0, baseFiles0, m,
-      tgtSchema, candidates,
-      Some(live.filter(coalesce(band.pred(column), lit(false)))
-        .withColumn("__graft_del", lit(false))), Some(set))
-    MorUpdateAudit(baseId0, o.published, total, candidates.length, o.filesHit,
-      o.filesAdded, o.matched)
+    // an adopted snapshot records no schema and no stats: nothing prunes
+    val candidates = m.schema.fold(m.files)(sch => graft.plans.GraftScan
+      .filesKept(m.files, m.stats, sch, pushedFilters(s, sch, pred)))
+    def audit(after: Long, hit: Int, added: Int, n: Long): MergeAudit =
+      MergeAudit(baseId0, after, m.files.length, candidates.length, hit,
+        added, rowsUpdated = if (set.isDefined) n else 0L,
+        rowsDeleted = if (set.isEmpty) n else 0L, rowsInserted = 0L)
+    if (candidates.isEmpty) return audit(baseId0, 0, 0, 0L)
+    val matches = coalesce(pred, lit(false))
+    mode match {
+      case MergeOnRead =>
+        val live = liveRows(s, table, m, candidates)
+        val tgtSchema = schemaOf(m).getOrElse(dataSchema(live))
+        set.foreach(_.keys.foreach(c => require(
+          tgtSchema.fieldNames.contains(c),
+          s"SET column $c is not a column of $table")))
+        val o = morCommit(s, table, verb, partCols, baseId0, baseFiles0, m,
+          tgtSchema, candidates, Some(live.filter(matches)
+            .withColumn("__graft_del", lit(set.isEmpty))), set)
+        audit(o.published, o.filesHit, o.filesAdded, o.matched)
+      case CopyOnWrite =>
+        val hitCounts = hitScan(s, table, m, candidates, pred)
+        val hit = candidates.filter(hitCounts.contains)
+        if (hit.isEmpty) return audit(baseId0, 0, 0, 0L)
+        val src = readFiles(s, table, m, hit)
+        // survivors are the null-safe complement: filter(!pred) would
+        // also drop rows whose predicate is NULL
+        val replacement = set.fold(src.filter(not(matches))) { st =>
+          st.keys.foreach(c => require(src.columns.contains(c),
+            s"SET column $c is not a column of $table"))
+          specColsOf(partCols).foreach { sc =>
+            require(!st.contains(sc.dirName) && !st.contains(sc.source),
+              s"SET of partition column ${sc.raw} (or its source " +
+                s"${sc.source}) would move rows across partition dirs — " +
+                "use delete + append (the Delta rule)")
+          }
+          src.select(src.schema.fields.map { f =>
+            st.get(f.name) match {
+              case Some(e) =>
+                when(matches, e.cast(f.dataType)).otherwise(col(f.name))
+                  .as(f.name)
+              case None => col(f.name)
+            }
+          }.toIndexedSeq: _*)
+        }
+        val statsCols = statsOf(m).keysIterator.map(_._2).toSeq.distinct.sorted
+        val (published, added) = commitRewrite(s, table, partCols, baseId0,
+          baseFiles0, hit, replacement, statsCols, op = verb)
+        audit(published, hit.length, added, hitCounts.valuesIterator.sum)
+    }
   }
 
   /** Run `f` with its Spark jobs labelled `graft <verb> <table>: <phase>`
@@ -5204,10 +5112,12 @@ object TableCommit {
     } finally cached.foreach(_._1.unpersist())
   }
 
-  /** [[mergeInto]]'s audit: matched old versions vectored dead in
-    * `filesHit` files, successors + inserts landed in `filesAdded`
-    * fresh files; `rowsInserted` is metadata-derived (fresh `#rows`
-    * minus the update successors), nothing table-sized. */
+  /** The audit of every row-level statement — [[mergeInto]],
+    * [[delete]] and [[update]]: matched old versions rewritten or
+    * vectored dead in `filesHit` files, successors + inserts landed in
+    * `filesAdded` fresh files; `rowsInserted` is metadata-derived
+    * (fresh `#rows` minus the update successors), nothing
+    * table-sized. */
   final case class MergeAudit(snapshotBefore: Long, snapshotAfter: Long,
       filesTotal: Int, filesCandidates: Int, filesHit: Int, filesAdded: Int,
       rowsUpdated: Long, rowsDeleted: Long, rowsInserted: Long,
@@ -5221,7 +5131,7 @@ object TableCommit {
     *  - WHEN MATCHED AND `deleteWhen`  THEN DELETE — the old version's
     *    position is vectored dead, no successor;
     *  - WHEN MATCHED (otherwise)       THEN UPDATE — vectored dead AND
-    *    a transformed successor appended ([[updateWhereMor]]'s
+    *    a transformed successor appended (merge-on-read [[update]]'s
     *    kill-and-re-add kernel, so SET of the partition column moves
     *    rows across partitions);
     *  - WHEN NOT MATCHED               THEN INSERT — the source row
@@ -5258,7 +5168,7 @@ object TableCommit {
     * are REFUSED (a target row matching two source rows would be
     * killed once but succeeded twice — Delta raises the same error).
     *
-    * Concurrency: [[deleteWhereMor]]'s file-granularity rules (a
+    * Concurrency: merge-on-read [[delete]]'s file-granularity rules (a
     * winner that removed, rewrote, or re-vectored a hit file
     * conflicts) PLUS the merge-specific one: a winner that ADDED a
     * file whose key range overlaps the source band invalidates this
@@ -5488,103 +5398,6 @@ object TableCommit {
     MergeAudit(baseId0, o.published, total, candidates.length, o.filesHit,
       o.filesAdded, rowsUpdated, o.deleted, o.freshRows - rowsUpdated,
       o.bySource)
-  }
-
-  /** ROW-LEVEL UPDATE as a COPY-ON-WRITE commit — [[deleteWhere]]'s
-    * sibling, completing the DML surface (append, replace, merge,
-    * compact, Z-order, delete, update): apply `set` to every row with
-    * `column` ∈ [lo, hi] by rewriting ONLY the files that actually
-    * hold such rows, through the same three-stage narrowing (stats
-    * prune → hit scan → hit-file rewrite) and the same
-    * file-granularity OCC publish — write amplification ∝ matching
-    * data, row COUNT invariant by construction (the rewrite keeps
-    * every hit-file row, transformed or not).
-    *
-    * SQL UPDATE semantics: every SET expression is evaluated against
-    * the PRE-update row (one projection computes all assignments — a
-    * sequential `withColumn` chain would let a later assignment read
-    * an earlier one's result), and each assignment is cast to the
-    * column's declared type so the table's schema of record is
-    * INVARIANT across the commit (Delta's implicit-cast rule — a
-    * widening SET cannot silently fork the schema between retained
-    * and fresh files). Updating the stats column itself is safe from
-    * the Halloween problem by construction — matches are decided ONCE
-    * against the pinned base snapshot, never against the rewrite —
-    * and the fresh files re-record stats over the NEW values, so a
-    * post-update band read finds the moved rows. */
-  def updateWhere(s: SparkSession, table: String, partCol: String,
-      column: String, lo: BigDecimal, hi: BigDecimal,
-      set: Map[String, org.apache.spark.sql.Column]): UpdateAudit =
-    updateWhereBy(s, table, Seq(partCol), column, lo, hi, set)
-
-  /** [[updateWhere]] over a multi-column partition layout (SET of any
-    * partition level is refused — copy-on-write rows stay in their
-    * dirs; use the MoR form to move rows). */
-  def updateWhereBy(s: SparkSession, table: String, partCols: Seq[String],
-      column: String, lo: BigDecimal, hi: BigDecimal,
-      set: Map[String, org.apache.spark.sql.Column]): UpdateAudit =
-    updateWhereBandBy(s, table, partCols, column, NumBand(lo, hi), set)
-
-  /** [[updateWhere]] for a STRING key (lexicographic band). */
-  def updateWhereLex(s: SparkSession, table: String, partCol: String,
-      column: String, lo: String, hi: String,
-      set: Map[String, org.apache.spark.sql.Column]): UpdateAudit =
-    updateWhereBandBy(s, table, Seq(partCol), column, LexBand(lo, hi), set)
-
-  /** [[updateWhereLex]] over a multi-column partition layout. */
-  def updateWhereLexBy(s: SparkSession, table: String,
-      partCols: Seq[String],
-      column: String, lo: String, hi: String,
-      set: Map[String, org.apache.spark.sql.Column]): UpdateAudit =
-    updateWhereBandBy(s, table, partCols, column, LexBand(lo, hi), set)
-
-  /** SQL's unrestricted `UPDATE t SET … WHERE <predicate>` — the
-    * general-predicate form of [[updateWhere]] (see [[deleteMatching]]
-    * for the candidacy/cost discussion). */
-  def updateMatching(s: SparkSession, table: String,
-      partCols: Seq[String], pred: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column]): UpdateAudit =
-    updateWhereBandBy(s, table, partCols, "", PredBand(pred), set)
-
-  private def updateWhereBandBy(s: SparkSession, table: String,
-      partCols: Seq[String], column: String, band0: StatBand,
-      set: Map[String, org.apache.spark.sql.Column]): UpdateAudit = {
-    initIfAbsent(table)
-    val (baseId0, baseFiles0) = resolve(table).get
-    val m = manifests(table).find(_._1 == baseId0).get._2
-    val total = filesOf(m).length
-    val band = guardLexBand(table, column, band0, m.schema)
-    val candidates = pruneFilesBand(m, column, band)
-    def matchPred = band.pred(column)
-    if (candidates.isEmpty)
-      return UpdateAudit(baseId0, baseId0, total, 0, 0, 0L)
-    val hitCounts = hitScan(s, table, m, candidates, matchPred)
-    val hit = candidates.filter(hitCounts.contains)
-    val rowsUpdated = hitCounts.valuesIterator.sum
-    if (hit.isEmpty)
-      return UpdateAudit(baseId0, baseId0, total, candidates.length, 0, 0L)
-    val statsCols = statsOf(m).keysIterator.map(_._2).toSeq.distinct.sorted
-    val src = readFiles(s, table, m, hit)
-    set.keys.foreach(c => require(src.columns.contains(c),
-      s"SET column $c is not a column of $table"))
-    specColsOf(partCols).foreach { sc =>
-      require(!set.contains(sc.dirName) && !set.contains(sc.source),
-        s"SET of partition column ${sc.raw} (or its source " +
-          s"${sc.source}) would move rows across partition dirs — " +
-          "use delete + append (the Delta rule)")
-    }
-    val pred = coalesce(matchPred, lit(false))
-    val replacement = src.select(src.schema.fields.map { f =>
-      set.get(f.name) match {
-        case Some(expr) => org.apache.spark.sql.functions
-          .when(pred, expr.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }.toIndexedSeq: _*)
-    val published = commitRewrite(s, table, partCols, baseId0, baseFiles0,
-      hit, replacement, statsCols, op = "UPDATE")
-    UpdateAudit(baseId0, published, total, candidates.length, hit.length,
-      rowsUpdated)
   }
 
   /** VACUUM DRY-RUN (Delta's `VACUUM … DRY RUN`): what retention would

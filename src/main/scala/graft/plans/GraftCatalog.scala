@@ -185,7 +185,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"column ${c.fieldNames().head} already exists in $path")
         val extended = StructType(base.fields :+
           StructField(c.fieldNames().head, c.dataType(), nullable = true))
-        TableCommit.appendRowsBy(s, path, GraftSqlDml.specOf(path),
+        TableCommit.appendRowsBy(s, path, TableCommit.partSpec(path),
           s.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](), extended))
       case other => throw new UnsupportedOperationException(

@@ -102,14 +102,7 @@ object GraftProcedures {
         pd("files_per_partition", IntegerType, "1")),
       StructType(Seq(StructField("snapshot_id", LongType)))) { (s, in) =>
       val t = resolve(str(in, 0))
-      val spec = TableCommit.properties(t).get("graft.partcols")
-        .map(_.split(';').toSeq.map(_.trim).filter(_.nonEmpty))
-        .getOrElse(TableCommit.resolve(t).map(_._2).getOrElse(Nil)
-          .map(TableCommit.layoutSigOf).distinct match {
-            case Seq(one) if one.nonEmpty => one
-            case _ => sys.error(s"$t declares no partition spec and its " +
-              "layout is not a uniform identity partitioning")
-          })
+      val spec = TableCommit.partSpec(t)
       val dirs = str(in, 1).split(',').toSeq.map(_.trim).filter(_.nonEmpty)
       val cluster = str(in, 2).split(',').toSeq.map(_.trim).filter(_.nonEmpty)
       TableCommit.compactPartitionsBy(s, t, spec, dirs, cluster,

@@ -2,13 +2,13 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, EqualTo, Expression, InheritAnalysisRules, LeafExpression, Unevaluable}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, LongType, NullType}
 
 import graft.operators.TableCommit
 
@@ -33,9 +33,9 @@ import graft.operators.TableCommit
   *
   * Lowered surface (unsupported shapes refuse LOUDLY, never silently
   * reinterpret):
-  *  - DELETE FROM t WHERE p           → deleteMatchingMor (CoW via
+  *  - DELETE FROM t WHERE p           → delete, merge-on-read (CoW via
   *    the `graft.dml.mode=cow` table property)
-  *  - UPDATE t SET … WHERE p          → updateMatchingMor / CoW twin
+  *  - UPDATE t SET … WHERE p          → update, in the same mode
   *  - MERGE INTO t USING s ON <equality conjunction over same-named
   *    columns> with clauses:
   *      WHEN MATCHED [AND c] THEN DELETE      (must precede UPDATE)
@@ -89,8 +89,8 @@ object GraftSqlDml {
     * comparisons/arithmetic/literals/functions, all of which render
     * losslessly). */
   private def colFor(e: Expression, tgt: AttributeSet,
-      src: AttributeSet): Column =
-    org.apache.spark.sql.functions.expr(e.transform {
+      src: AttributeSet): Column = {
+    def remap(x: Expression): Expression = x.transform {
       // the analyzer's NOT NULL shim (a nullable source value assigned to
       // a non-nullable column) has no SQL spelling: fail the same way
       case n: org.apache.spark.sql.catalyst.expressions.objects
@@ -100,27 +100,25 @@ object GraftSqlDml {
             "raise_error", Seq(org.apache.spark.sql.catalyst.expressions
               .Literal(s"NULL value assigned to a non-nullable column: " +
                 n.child.sql)), isDistinct = false)))
+      // a replaceable call (BETWEEN, ifnull, …) renders its SQL from
+      // parameters that are not its children: render them remapped
+      case r: InheritAnalysisRules =>
+        RenderedSql(r.makeSQLString(r.parameters.map(remap(_).sql)))
       case a: AttributeReference if src.contains(a) =>
         UnresolvedAttribute.quoted("src_" + a.name)
       case a: AttributeReference if tgt.contains(a) =>
         UnresolvedAttribute.quoted(a.name)
-    }.sql)
-
-  /** The table's declared spec (or its uniform identity layout) — what
-    * the partition-aware verbs take as `partCols`. */
-  private[plans] def specOf(path: String): Seq[String] =
-    TableCommit.properties(path).get("graft.partcols") match {
-      case Some(v) => v.split(';').toSeq.map(_.trim).filter(_.nonEmpty)
-      case None =>
-        val files = TableCommit.resolve(path).map(_._2).getOrElse(Nil)
-        val sigs = files.map(TableCommit.layoutSigOf).distinct
-        sigs match {
-          case Seq(one) if one.nonEmpty => one
-          case _ => refuse(s"$path declares no partition spec and its " +
-            "layout is not a uniform identity partitioning — declare one " +
-            "via evolvePartitioningBy")
-        }
     }
+    org.apache.spark.sql.functions.expr(remap(e).sql)
+  }
+
+  /** SQL text already rendered, standing in its expression's place. */
+  private final case class RenderedSql(text: String) extends LeafExpression
+      with Unevaluable {
+    override def dataType: DataType = NullType
+    override def nullable: Boolean = true
+    override def sql: String = text
+  }
 
   private def audit1(name: String, v: Long): (Seq[Attribute], Seq[Row]) =
     (Seq(AttributeReference(name, LongType, nullable = false)()),
@@ -154,7 +152,8 @@ object GraftSqlDml {
             s"INSERT query produces ${df0.columns.length} columns; " +
               s"${t.path} has ${tgtNames.length}")
           val df = df0.toDF(tgtNames: _*)
-          Seq(Row(TableCommit.appendRowsBy(s, t.path, specOf(t.path), df)))
+          Seq(Row(TableCommit.appendRowsBy(s, t.path,
+            TableCommit.partSpec(t.path), df)))
         })
     }
 
@@ -196,7 +195,7 @@ object GraftSqlDml {
                     java.util.Collections.emptyMap[String, String]())
                     .asInstanceOf[GraftTable]
                   Seq(Row(TableCommit.appendRowsBy(s, table.path,
-                    specOf(table.path), df)))
+                    TableCommit.partSpec(table.path), df)))
                 }
               }))
           case _ => None
@@ -204,23 +203,21 @@ object GraftSqlDml {
       case _ => None
     }
 
+  /** The table's `graft.dml.mode`: `cow` is copy-on-write, anything
+    * else merge-on-read. */
+  private def dmlMode(path: String): TableCommit.DmlMode =
+    if (TableCommit.properties(path).get("graft.dml.mode").contains("cow"))
+      TableCommit.CopyOnWrite
+    else TableCommit.MergeOnRead
+
   private[plans] def lowerDelete(d: DeleteFromTable): Option[LogicalPlan] =
     graftRelOf(d.table).map { case (rel, t) =>
       val tgt = rel.outputSet
       val cond = colFor(d.condition, tgt, AttributeSet.empty)
       GraftDmlCommand("DELETE",
         Seq(AttributeReference("rows_deleted", LongType, nullable = false)()),
-        s => {
-          val n =
-            if (TableCommit.properties(t.path).get("graft.dml.mode")
-                .contains("cow"))
-              TableCommit.deleteMatching(s, t.path, specOf(t.path), cond)
-                .rowsDeleted
-            else
-              TableCommit.deleteMatchingMor(s, t.path, specOf(t.path), cond)
-                .rowsDeleted
-          Seq(Row(n))
-        })
+        s => Seq(Row(TableCommit.delete(s, t.path,
+          TableCommit.partSpec(t.path), cond, dmlMode(t.path)).rowsDeleted)))
     }
 
   private[plans] def lowerUpdate(u: UpdateTable): Option[LogicalPlan] =
@@ -238,17 +235,9 @@ object GraftSqlDml {
       }.toMap
       GraftDmlCommand("UPDATE",
         Seq(AttributeReference("rows_updated", LongType, nullable = false)()),
-        s => {
-          val n =
-            if (TableCommit.properties(t.path).get("graft.dml.mode")
-                .contains("cow"))
-              TableCommit.updateMatching(s, t.path, specOf(t.path), cond, set)
-                .rowsUpdated
-            else
-              TableCommit.updateMatchingMor(s, t.path, specOf(t.path), cond,
-                set).rowsUpdated
-          Seq(Row(n))
-        })
+        s => Seq(Row(TableCommit.update(s, t.path,
+          TableCommit.partSpec(t.path), cond, set, dmlMode(t.path))
+          .rowsUpdated)))
     }
 
   private[plans] def lowerMerge(m: MergeIntoTable): Option[LogicalPlan] =
@@ -443,9 +432,9 @@ object GraftSqlDml {
               (restricted, Some(id))
             }
           val (srcDf, pin) = srcAndPin
-          val a = TableCommit.mergeIntoKeys(s, t.path, specOf(t.path),
-            keyCols, srcDf, updateSet, deleteWhen,
-            readSnapshot = pin,
+          val a = TableCommit.mergeIntoKeys(s, t.path,
+            TableCommit.partSpec(t.path), keyCols, srcDf, updateSet,
+            deleteWhen, readSnapshot = pin,
             notMatchedBySourceDelete = bySourceDelete,
             onResidual = onResidual)
           Seq(Row(a.rowsUpdated, a.rowsDeleted, a.rowsInserted,

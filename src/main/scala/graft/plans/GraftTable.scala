@@ -386,28 +386,8 @@ class GraftScan(path: String, meta: TableCommit.ScanMeta,
   @volatile private var runtimeDropped: Set[String] = Set.empty
 
   // ---------------- manifest-level pruning (zero IO) ----------------
-  private lazy val keptFiles: Seq[String] = {
-    val colType = logicalSchema.fields.map(f => f.name -> f.dataType).toMap
-    val bands = rangeBands(pushed)
-    meta.files.filter { rel =>
-      val sig = TableCommit.layoutSigOf(rel)
-      val dirVals = dirValuesOf(rel)
-      bands.forall { case (c, (lo, hi)) =>
-        colType.get(c) match {
-          case _ if sig.contains(c) =>
-            // identity partition dir: the file holds EXACTLY this value
-            dirVals.get(c).forall(v =>
-              keepsValue(colType.get(c), v, lo, hi))
-          case Some(t) =>
-            meta.stats.get((rel, c)) match {
-              case Some((mn, mx)) => keepsStats(t, mn, mx, lo, hi)
-              case None => true
-            }
-          case None => true
-        }
-      }
-    }
-  }
+  private lazy val keptFiles: Seq[String] =
+    filesKept(meta.files, meta.stats, logicalSchema, pushed)
 
   // ------------------- layout groups (mid-evolution) ----------------
   private lazy val sigGroups: Seq[Seq[String]] =
@@ -782,6 +762,38 @@ private[graft] object GraftScan {
     case _ => false
   }
 
+  /** THE manifest-level pruning rule (zero IO), shared by the scan and
+    * `TableCommit.delete`/`update`, so a DML `WHERE` prunes exactly as
+    * a SQL read of it does: a file is dropped only when a band the
+    * filters imply ([[rangeBands]]) provably misses it — by its
+    * identity partition dir value ([[keepsValue]]) or by its recorded
+    * `#stats` range ([[keepsStats]]). A column `schema` does not type,
+    * or a file with no stats for it, keeps the file. */
+  def filesKept(files: Seq[String],
+      stats: Map[(String, String), (String, String)], schema: StructType,
+      filters: Seq[sources.Filter]): Seq[String] = {
+    val colType = schema.fields.map(f => f.name -> f.dataType).toMap
+    val bands = rangeBands(filters)
+    files.filter { rel =>
+      val sig = TableCommit.layoutSigOf(rel)
+      val dirVals = dirValuesOf(rel)
+      bands.forall { case (c, (lo, hi)) =>
+        colType.get(c) match {
+          case _ if sig.contains(c) =>
+            // identity partition dir: the file holds EXACTLY this value
+            dirVals.get(c).forall(v =>
+              keepsValue(colType.get(c), v, lo, hi))
+          case Some(t) =>
+            stats.get((rel, c)) match {
+              case Some((mn, mx)) => keepsStats(t, mn, mx, lo, hi)
+              case None => true
+            }
+          case None => true
+        }
+      }
+    }
+  }
+
   /** column → (lo, hi) closed bands implied by the pushed filters
     * (open ends None; equality = degenerate band; conjunctions
     * intersect — the strictest bound wins). */
@@ -854,7 +866,9 @@ private[graft] object GraftScan {
     * ZONED timestamps prune through [[tsMicrosOf]] instead — their
     * stats are epoch-micros renderings (round-15). */
   private def isoDateOf(v: Any): Option[String] = (v match {
-    case d: java.sql.Date => Some(d.toString)
+    // not Date.toString: it renders year 10000 as "0000", lex-safe and
+    // below every real date, which would prune every file
+    case d: java.sql.Date => Some(d.toLocalDate.toString)
     case d: java.time.LocalDate => Some(d.toString)
     case _ => None
   }).filter(TableCommit.isoLexSafe)

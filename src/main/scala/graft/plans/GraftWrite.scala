@@ -83,7 +83,7 @@ class GraftWriteBuilder(table: GraftTable, info: LogicalWriteInfo)
     * the dirty-dir set replacePartitions takes. */
   override def overwrite(filters: Array[sources.Filter]): WriteBuilder = {
     if (filters.forall(_ == sources.AlwaysTrue)) return truncate()
-    val spec = GraftSqlDml.specOf(table.path).map(TableCommit.parseSpecCol)
+    val spec = TableCommit.partSpec(table.path).map(TableCommit.parseSpecCol)
     val eq: Map[String, Any] = filters.toSeq.map {
       case sources.EqualTo(c, v) if v != null => c -> v
       case sources.EqualNullSafe(c, v) if v != null => c -> v
@@ -128,7 +128,7 @@ class GraftWrite(path: String, writeSchema: StructType,
     mode: GraftWriteMode, queryId: String = "") extends Write
     with RequiresDistributionAndOrdering {
 
-  private val spec: Seq[String] = GraftSqlDml.specOf(path)
+  private val spec: Seq[String] = TableCommit.partSpec(path)
   private val specCols = spec.map(TableCommit.parseSpecCol)
 
   /** Cluster + order by the declared partition transforms: bucket,

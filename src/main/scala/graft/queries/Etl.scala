@@ -535,7 +535,7 @@ object Etl {
   /** ROW-LEVEL DELETE as a copy-on-write commit (round-10; the DML verb
     * the protocol still lacked — append, replace, merge, compact and
     * Z-order all existed, but "drop these rows" forced a whole-
-    * partition rewrite): `TableCommit.deleteWhere` drops a central
+    * partition rewrite): copy-on-write `TableCommit.delete` drops a central
     * event_id band from a COMMITTED, event_id-clustered events table,
     * rewriting only the files that actually hold matching rows.
     * Scaffolding (content-tag-keyed artifact): the fragmented events
@@ -568,12 +568,13 @@ object Etl {
       // compacted artifact's files are all protocol-written, so the
       // metadata covers both snapshots and the invariant costs no scan
       val before = metaRowCount(s, table, id0)
-      val a = graft.operators.TableCommit.deleteWhere(
-        s, table, "event_type", "event_id", lo, hi)
+      val a = graft.operators.TableCommit.delete(s, table, Seq("event_type"),
+        col("event_id") >= lit(lo) && col("event_id") <= lit(hi),
+        graft.operators.TableCommit.CopyOnWrite)
       val after = metaRowCount(s, table, a.snapshotAfter)
       import s.implicits._
       Seq((a.filesTotal.toLong, a.filesCandidates.toLong,
-          a.filesRewritten.toLong, before, a.rowsDeleted, after))
+          a.filesHit.toLong, before, a.rowsDeleted, after))
         .toDF("n_files", "n_candidates", "n_rewritten",
           "rows_before", "rows_deleted", "rows_after")
     } finally graft.operators.Sinks.deleteRecursively(base)
@@ -582,7 +583,7 @@ object Etl {
   // ------------------------------------------------------------- n_table_update
   /** ROW-LEVEL UPDATE as a copy-on-write commit ([[tableDeleteQ]]'s
     * sibling — together they complete the DML triad on the committed
-    * table): `TableCommit.updateWhere` rewrites a central event_id
+    * table): copy-on-write `TableCommit.update` rewrites a central event_id
     * band's hit files with `value` negated and `user_id` shifted,
     * touching nothing else. Shares the delete query's content-tag-keyed
     * scaffold (the compacted, event_id-clustered committed events
@@ -609,16 +610,17 @@ object Etl {
       val (lo, hi) = (mn + (mx - mn) * 7 / 16, mn + (mx - mn) * 9 / 16)
       val marker = 10000000L
       val before = metaRowCount(s, table, id0)
-      val a = graft.operators.TableCommit.updateWhere(
-        s, table, "event_type", "event_id", lo, hi,
+      val a = graft.operators.TableCommit.update(s, table, Seq("event_type"),
+        col("event_id") >= lit(lo) && col("event_id") <= lit(hi),
         Map("user_id" -> (col("user_id") + lit(marker)),
-          "value" -> -col("value")))
+          "value" -> -col("value")),
+        graft.operators.TableCommit.CopyOnWrite)
       val after = metaRowCount(s, table, a.snapshotAfter)
       val shifted = graft.operators.TableCommit.read(s, table)
         .filter(col("user_id") >= lit(marker)).count()
       import s.implicits._
       Seq((a.filesTotal.toLong, a.filesCandidates.toLong,
-          a.filesRewritten.toLong, a.rowsUpdated, shifted, before - after))
+          a.filesHit.toLong, a.rowsUpdated, shifted, before - after))
         .toDF("n_files", "n_candidates", "n_rewritten",
           "rows_updated", "rows_marked", "rows_lost")
     } finally graft.operators.Sinks.deleteRecursively(base)
@@ -627,7 +629,7 @@ object Etl {
   // ---------------------------------------------------------- n_table_delete_dv
   /** MERGE-ON-READ DELETE over the committed events table —
     * [[tableDeleteQ]]'s deletion-vector twin (same scaffold, same
-    * band): `TableCommit.deleteWhereMor` marks the matching rows'
+    * band): merge-on-read `TableCommit.delete` marks the matching rows'
     * positions dead in a parquet sidecar and publishes a manifest that
     * keeps the SAME data files, so the commit's write cost is the
     * vector, not a rewrite. The emitted row carries the narrowing
@@ -651,15 +653,16 @@ object Etl {
         .statsRange(table, id0, "event_id").get
       val (lo, hi) = (mn + (mx - mn) * 7 / 16, mn + (mx - mn) * 9 / 16)
       val before = metaRowCount(s, table, id0)
-      val a = graft.operators.TableCommit.deleteWhereMor(
-        s, table, "event_type", "event_id", lo, hi)
+      val a = graft.operators.TableCommit.delete(s, table, Seq("event_type"),
+        col("event_id") >= lit(lo) && col("event_id") <= lit(hi),
+        graft.operators.TableCommit.MergeOnRead)
       val after = metaRowCount(s, table, a.snapshotAfter)
       val files1 = graft.operators.TableCommit.resolve(table).get._2
       val touched = files1.count(rel =>
         sig0.get(rel).forall(_ != fileSig(table, Seq(rel))(rel)))
       import s.implicits._
       Seq((a.filesTotal.toLong, a.filesCandidates.toLong,
-          a.filesVectored.toLong, before, a.rowsDeleted, after,
+          a.filesHit.toLong, before, a.rowsDeleted, after,
           touched.toLong))
         .toDF("n_files", "n_candidates", "n_vectored",
           "rows_before", "rows_deleted", "rows_after", "n_files_touched")
@@ -669,7 +672,7 @@ object Etl {
   // ---------------------------------------------------------- n_table_update_dv
   /** MERGE-ON-READ UPDATE over the committed events table —
     * [[tableUpdateQ]]'s deletion-vector twin and the MoR-MERGE kernel:
-    * one `TableCommit.updateWhereMor` commit vectors the matching
+    * one merge-on-read `TableCommit.update` commit vectors the matching
     * rows' old versions dead and appends their transformed versions as
     * fresh files — commit cost ∝ matching rows, zero churn of existing
     * files (`n_files_touched` = 0 by the same byte sweep as the MoR
@@ -691,9 +694,9 @@ object Etl {
         .statsRange(table, id0, "event_id").get
       val (lo, hi) = (mn + (mx - mn) * 7 / 16, mn + (mx - mn) * 9 / 16)
       val before = metaRowCount(s, table, id0)
-      val a = graft.operators.TableCommit.updateWhereMor(
-        s, table, "event_type", "event_id", lo, hi,
-        Map("value" -> -col("value")))
+      val a = graft.operators.TableCommit.update(s, table, Seq("event_type"),
+        col("event_id") >= lit(lo) && col("event_id") <= lit(hi),
+        Map("value" -> -col("value")), graft.operators.TableCommit.MergeOnRead)
       val after = metaRowCount(s, table, a.snapshotAfter)
       val retained = graft.operators.TableCommit.resolve(table).get._2
         .filter(sig0.contains)
@@ -701,7 +704,7 @@ object Etl {
         sig0(rel) != fileSig(table, Seq(rel))(rel))
       import s.implicits._
       Seq((a.filesTotal.toLong, a.filesCandidates.toLong,
-          a.filesVectored.toLong, a.filesAdded.toLong, a.rowsUpdated,
+          a.filesHit.toLong, a.filesAdded.toLong, a.rowsUpdated,
           before - after, touched.toLong))
         .toDF("n_files", "n_candidates", "n_vectored", "n_added",
           "rows_updated", "rows_lost", "n_files_touched")
@@ -935,9 +938,10 @@ object Etl {
         } catch { case _: IllegalStateException => true }
       // one numeric band covers the old domain's top 50 AND the new
       // generation's bottom 50 — the per-file keys must vector both
-      val del = TableCommit.deleteWhereMorBy(s, table,
-        Seq("lang", "source"), "doc_id",
-        BigDecimal(maxId - 49), BigDecimal(shift + 49))
+      val del = TableCommit.delete(s, table, Seq("lang", "source"),
+        col("doc_id") >= lit(BigDecimal(maxId - 49)) &&
+          col("doc_id") <= lit(BigDecimal(shift + 49)),
+        TableCommit.MergeOnRead)
       // gradual migration: the lang=en subtree moves to the new layout
       TableCommit.compactPartitionsBy(s, table, Seq("lang", "source"),
         Seq("lang=en"), clusterBy = Seq("doc_id"), filesPerPartition = 1)
@@ -1462,8 +1466,10 @@ object Etl {
       val rowsClone = metaRowCount(s, clone, cloneId)
       // mutate the CLONE: key-band delete; the SOURCE must be untouched
       val (mn, mx) = TableCommit.statsRange(clone, cloneId, "event_id").get
-      val a = TableCommit.deleteWhere(s, clone, "event_type", "event_id",
-        mn + (mx - mn) * 7 / 16, mn + (mx - mn) * 9 / 16)
+      val (lo, hi) = (mn + (mx - mn) * 7 / 16, mn + (mx - mn) * 9 / 16)
+      val a = TableCommit.delete(s, clone, Seq("event_type"),
+        col("event_id") >= lit(lo) && col("event_id") <= lit(hi),
+        TableCommit.CopyOnWrite)
       val srcTouched = srcFiles.count(rel =>
         srcSig(rel) != fileSig(srcT, Seq(rel))(rel))
       val rowsSrcAfter = metaRowCount(s, srcT,
@@ -1511,8 +1517,10 @@ object Etl {
       val (id0, _) = TableCommit.resolve(table).get
       val before = metaRowCount(s, table, id0)
       val (mn, mx) = TableCommit.statsRange(table, id0, "event_id").get
-      val a = TableCommit.deleteWhereMor(s, table, "event_type", "event_id",
-        mn + (mx - mn) * 7 / 16, mn + (mx - mn) * 9 / 16)
+      val (lo, hi) = (mn + (mx - mn) * 7 / 16, mn + (mx - mn) * 9 / 16)
+      val a = TableCommit.delete(s, table, Seq("event_type"),
+        col("event_id") >= lit(lo) && col("event_id") <= lit(hi),
+        TableCommit.MergeOnRead)
       val tpl = TableCommit.readWhereAt(s, table, a.snapshotAfter,
         "event_id", mn, mn).limit(1)
       TableCommit.appendRows(s, table, "event_type",
@@ -1574,9 +1582,10 @@ object Etl {
       TableCommit.replacePartitions(s, table, "o_orderstatus", dirs, seed,
         clusterBy = Seq("o_orderkey"), filesPerPartition = 4)
       val (fromId, _) = TableCommit.resolve(table).get
-      TableCommit.updateWhereMor(s, table, "o_orderstatus", "o_orderkey",
-        BigDecimal(500), BigDecimal(999),
-        Map("o_totalprice" -> lit(-1.0)))
+      TableCommit.update(s, table, Seq("o_orderstatus"),
+        col("o_orderkey") >= lit(BigDecimal(500)) &&
+          col("o_orderkey") <= lit(BigDecimal(999)),
+        Map("o_totalprice" -> lit(-1.0)), TableCommit.MergeOnRead)
       val (toId, _) = TableCommit.resolve(table).get
       graft.plans.TableFunctions.register(s)
       // the scratch tree is deleted on return — collect the (band-sized,
@@ -1647,11 +1656,14 @@ object Etl {
       // four-way recording is OPT-IN, the Delta default
       TableCommit.setProperties(table, Map("graft.cdf" -> "true"))
       val (fromId, _) = TableCommit.resolve(table).get
-      TableCommit.updateWhereMor(s, table, "o_orderstatus", "o_orderkey",
-        BigDecimal(500), BigDecimal(999),
-        Map("o_totalprice" -> lit(-1.0)))
-      TableCommit.deleteWhereMor(s, table, "o_orderstatus", "o_orderkey",
-        BigDecimal(1500), BigDecimal(1599))
+      TableCommit.update(s, table, Seq("o_orderstatus"),
+        col("o_orderkey") >= lit(BigDecimal(500)) &&
+          col("o_orderkey") <= lit(BigDecimal(999)),
+        Map("o_totalprice" -> lit(-1.0)), TableCommit.MergeOnRead)
+      TableCommit.delete(s, table, Seq("o_orderstatus"),
+        col("o_orderkey") >= lit(BigDecimal(1500)) &&
+          col("o_orderkey") <= lit(BigDecimal(1599)),
+        TableCommit.MergeOnRead)
       val (toId, _) = TableCommit.resolve(table).get
       graft.plans.TableFunctions.register(s)
       // scratch tree dies on return — collect the band-sized feed first
@@ -1786,8 +1798,10 @@ object Etl {
         combineFn(cur, aggFn(dead).select(col("bkt"), col("event_type"),
           (-col("n")).as("n"), (-col("id_sum")).as("id_sum")))
           .filter(col("n") =!= 0L)
-      TableCommit.deleteWhereMor(s, src, "bkt", "event_id",
-        BigDecimal(5L * b), BigDecimal(5L * b + b / 4))
+      TableCommit.delete(s, src, Seq("bkt"),
+        col("event_id") >= lit(BigDecimal(5L * b)) &&
+          col("event_id") <= lit(BigDecimal(5L * b + b / 4)),
+        TableCommit.MergeOnRead)
       val a2 = IncrementalView.sync(s, src, view, "ev_counts", "bkt",
         aggFn, combineFn, retract = Some(retractFn))
       // end-state audit, PARTITION-LOCAL like the maintenance itself:

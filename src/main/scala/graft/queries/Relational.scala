@@ -337,8 +337,10 @@ object Relational {
       awaitBoth(fLi, fOrd)
       // the composition the view trick refuses: vector some lineitem
       // rows dead, then join THROUGH the vectors
-      TableCommit.deleteWhereMorBy(s, liT, Seq("bucket(8,l_orderkey)"),
-        "l_orderkey", BigDecimal(1), BigDecimal(32))
+      TableCommit.delete(s, liT, Seq("bucket(8,l_orderkey)"),
+        col("l_orderkey") >= lit(BigDecimal(1)) &&
+          col("l_orderkey") <= lit(BigDecimal(32)),
+        TableCommit.MergeOnRead)
       conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
         "true")

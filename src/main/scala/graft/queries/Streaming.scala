@@ -495,10 +495,14 @@ object Streaming {
       // four-way recording is OPT-IN, the Delta default
       TableCommit.setProperties(table, Map("graft.cdf" -> "true"))
       val (fromId, _) = TableCommit.resolve(table).get
-      TableCommit.updateWhereMor(s, table, "o_orderstatus", "o_orderkey",
-        BigDecimal(500), BigDecimal(999), Map("o_totalprice" -> lit(-1.0)))
-      TableCommit.deleteWhereMor(s, table, "o_orderstatus", "o_orderkey",
-        BigDecimal(1500), BigDecimal(1599))
+      TableCommit.update(s, table, Seq("o_orderstatus"),
+        col("o_orderkey") >= lit(BigDecimal(500)) &&
+          col("o_orderkey") <= lit(BigDecimal(999)),
+        Map("o_totalprice" -> lit(-1.0)), TableCommit.MergeOnRead)
+      TableCommit.delete(s, table, Seq("o_orderstatus"),
+        col("o_orderkey") >= lit(BigDecimal(1500)) &&
+          col("o_orderkey") <= lit(BigDecimal(1599)),
+        TableCommit.MergeOnRead)
       val (toId, _) = TableCommit.resolve(table).get
       // one AvailableNow drain over the whole commit range (the
       // default admission) — the multiset check below is range-wide

@@ -31,8 +31,8 @@ class CatalogStreamSpec extends GraftSpec {
     append(t, 0, 20)
     // vector some rows dead BEFORE the stream starts — the first
     // batch's inner scan must apply them
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(4))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(4)), TableCommit.MergeOnRead)
     val q = spark.readStream.table("graftstr.db.tail")
       .writeStream.format("memory").queryName("cat_tail").start()
     try {
@@ -71,8 +71,8 @@ class CatalogStreamSpec extends GraftSpec {
       // a rewrite (MoR delete registers a vector on an existing file —
       // the diff carries it on both sides) breaks the append-only
       // contract: the stream must FAIL, not emit phantom rows
-      TableCommit.deleteWhereMor(spark, t, "pt", "id",
-        BigDecimal(50), BigDecimal(51))
+      TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(50), BigDecimal(51)), TableCommit.MergeOnRead)
       intercept[Exception] { q.processAllAvailable() }
       val msg = q.exception.map(_.toString).getOrElse("")
       assert(msg.contains("APPEND-ONLY") && msg.contains("ignoreChanges"),

@@ -74,8 +74,9 @@ class ColumnMappingSpec extends GraftSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(all == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"), (9L, "z")))
     // DML on the mapped table: a CoW update through the renamed key
-    TableCommit.updateWhere(spark, t, "pt", "doc_id",
-      BigDecimal(2), BigDecimal(2), Map("label" -> lit("B")))
+    TableCommit.update(spark, t, Seq("pt"),
+      band("doc_id", BigDecimal(2), BigDecimal(2)), Map("label" -> lit("B")),
+      TableCommit.CopyOnWrite)
     assert(TableCommit.read(spark, t).filter(col("doc_id") === 2)
       .select(col("label")).collect().map(_.getString(0)).toSeq == Seq("B"))
   }
@@ -99,8 +100,8 @@ class ColumnMappingSpec extends GraftSpec {
     assert(Seq(1L, 2L, 3L, 4L).forall(got(_).isEmpty),
       s"dropped values resurrected: $got")
     // and a MoR delete on the evolved mapped table still works
-    val a = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(1), BigDecimal(1))
+    val a = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(1), BigDecimal(1)), TableCommit.MergeOnRead)
     assert(a.rowsDeleted == 1L)
     assert(TableCommit.read(spark, t).count() == 4L)
   }
@@ -299,8 +300,8 @@ class ColumnMappingSpec extends GraftSpec {
     // CHANGE FEED across a post-rename MoR delete: change rows carry
     // the renamed struct
     val (fromId, _) = TableCommit.resolve(t).get
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(2), BigDecimal(2))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(2), BigDecimal(2)), TableCommit.MergeOnRead)
     val (toId, _) = TableCommit.resolve(t).get
     val feed = TableCommit.changeFeed(spark, t, fromId, toId)
       .select(col("id"), col("props.score"), col("_change_type"))

@@ -249,8 +249,8 @@ class DeltaManifestSpec extends GraftSpec {
       (0 until 200).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "pt"),
       clusterBy = Seq("id"), filesPerPartition = 10)
     val nFiles = TableCommit.resolve(t).get._2.length
-    val a = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(50), BigDecimal(59))
+    val a = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(50), BigDecimal(59)), TableCommit.MergeOnRead)
     assert(a.rowsDeleted == 10L)
     val (_, m) = manifestFilesOf(t).maxBy(_._1)
     assert(isDelta(m), "MoR delete wrote a full checkpoint")
@@ -258,10 +258,10 @@ class DeltaManifestSpec extends GraftSpec {
     assert(!lines.exists(l => l.startsWith("+") || l.startsWith("-")),
       s"MoR delete changed the file list: ${lines.filter(l =>
         l.startsWith("+") || l.startsWith("-"))}")
-    assert(lines.count(_.startsWith("#dv ")) == a.filesVectored,
+    assert(lines.count(_.startsWith("#dv ")) == a.filesHit,
       "one #dv line per vectored file expected")
     // #rows overrides only for the vectored files
-    assert(lines.count(_.startsWith("#rows ")) == a.filesVectored)
+    assert(lines.count(_.startsWith("#rows ")) == a.filesHit)
     // constant-per-commit annotations (#delta/#len/#require/#op/#schema)
     // are not write-set-proportional — measure the lines that are
     val proportional = lines.filterNot(l => l.startsWith("#delta") ||
@@ -287,8 +287,8 @@ class DeltaManifestSpec extends GraftSpec {
       (0 until 40).map(i => (100L + i, s"v$i", i % 2)).toDF("id", "v", "pt"),
       clusterBy = Seq("id"), filesPerPartition = 4,
       txn = Some(("pc_app", 3L)))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(104), BigDecimal(106))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(104), BigDecimal(106)), TableCommit.MergeOnRead)
     val id = TableCommit.resolve(t).get._1
     val fromSidecar = TableCommit.sidecarStateOf(t, id)
     assert(fromSidecar.isDefined, "no sidecar for a checkpoint commit")

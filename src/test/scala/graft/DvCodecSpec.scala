@@ -104,16 +104,16 @@ class DvCodecSpec extends GraftSpec {
     val t = freshTable(None)
     assert(TableCommit.dvDebt(spark, t).isEmpty)
     // dense kill: ids [5000, 44999] — 20k dead per pt file (25k rows)
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(5000), BigDecimal(44999))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(5000), BigDecimal(44999)), TableCommit.MergeOnRead)
     val debt1 = TableCommit.dvDebt(spark, t)
     assert(debt1.length == 2 && debt1.forall(d =>
       d.deadRows == 20000L && d.liveRows == 5000L), debt1.toString)
     assert(debt1.forall(d => math.abs(d.deadRatio - 0.8) < 1e-9))
     // a stacked v1 delete on top: debts SUM across encodings
     TableCommit.setProperties(t, Map("graft.dv.format" -> "v1"))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(999))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(999)), TableCommit.MergeOnRead)
     val debt2 = TableCommit.dvDebt(spark, t)
     assert(debt2.forall(d => d.deadRows == 20500L && d.liveRows == 4500L),
       debt2.toString)
@@ -134,8 +134,8 @@ class DvCodecSpec extends GraftSpec {
       "applies roaring vectors carried by the sidecar's (path, dv) rows") {
     val t = freshTable(None)
     TableCommit.setProperties(t, Map("graft.checkpoint.interval" -> "1"))
-    val mor = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(10000), BigDecimal(19999))
+    val mor = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(10000), BigDecimal(19999)), TableCommit.MergeOnRead)
     assert(mor.rowsDeleted == 10000L, mor.toString)
     val (id, _) = TableCommit.resolve(t).get
     // the fast path serves this read (interval=1 → every commit is a
@@ -157,10 +157,10 @@ class DvCodecSpec extends GraftSpec {
     def liveRows(t: String): Set[Long] = TableCommit.read(spark, t)
       .select("id").collect().map(_.getLong(0)).toSet
     // dense kill: 40k contiguous ids across both partition files
-    val a1 = TableCommit.deleteWhereMor(spark, t1, "pt", "id",
-      BigDecimal(5000), BigDecimal(44999))
-    val a2 = TableCommit.deleteWhereMor(spark, t2, "pt", "id",
-      BigDecimal(5000), BigDecimal(44999))
+    val a1 = TableCommit.delete(spark, t1, Seq("pt"),
+      band("id", BigDecimal(5000), BigDecimal(44999)), TableCommit.MergeOnRead)
+    val a2 = TableCommit.delete(spark, t2, Seq("pt"),
+      band("id", BigDecimal(5000), BigDecimal(44999)), TableCommit.MergeOnRead)
     assert(a1.rowsDeleted == 40000L && a2.rowsDeleted == 40000L)
     val want = ((0 until 5000) ++ (45000 until 50000)).map(_.toLong).toSet
     assert(liveRows(t1) == want && liveRows(t2) == want,
@@ -190,10 +190,10 @@ class DvCodecSpec extends GraftSpec {
     // second MoR delete; reads apply a v1 vector AND a v2 vector on the
     // same files
     TableCommit.setProperties(t1, Map("graft.dv.format" -> "v2"))
-    val a1b = TableCommit.deleteWhereMor(spark, t1, "pt", "id",
-      BigDecimal(0), BigDecimal(999))
-    val a2b = TableCommit.deleteWhereMor(spark, t2, "pt", "id",
-      BigDecimal(0), BigDecimal(999))
+    val a1b = TableCommit.delete(spark, t1, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(999)), TableCommit.MergeOnRead)
+    val a2b = TableCommit.delete(spark, t2, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(999)), TableCommit.MergeOnRead)
     assert(a1b.rowsDeleted == 1000L && a2b.rowsDeleted == 1000L)
     val want2 = ((1000 until 5000) ++ (45000 until 50000))
       .map(_.toLong).toSet

@@ -80,13 +80,13 @@ class DvMemoSpec extends GraftSpec {
     val twin = mkTable("dv_jobs_twin")
     var model = (0L until 200L).toSet
     for ((lo, hi) <- Seq((10, 19), (40, 49), (100, 109), (150, 159))) {
-      TableCommit.deleteWhereMor(spark, t, "pt", "id",
-        BigDecimal(lo), BigDecimal(hi))
+      TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(lo), BigDecimal(hi)), TableCommit.MergeOnRead)
       model --= (lo.toLong to hi.toLong)
     }
     TableCommit.setProperties(t, Map("graft.dv.format" -> "v1"))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(60), BigDecimal(69))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(60), BigDecimal(69)), TableCommit.MergeOnRead)
     model --= (60L to 69L)
     val dvTree = new java.io.File(t, "_dv")
     val dirs = dvTree.list().toSeq
@@ -121,8 +121,8 @@ class DvMemoSpec extends GraftSpec {
       "one DV broadcast (the dir's memoized broadcast)") {
     val t = mkTable("dv_bc")
     val twin = mkTable("dv_bc_twin")
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(20), BigDecimal(29))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(20), BigDecimal(29)), TableCommit.MergeOnRead)
     val want = (0L until 200L).toSet -- (20L to 29L)
     TableCommit.forgetDvUnder(t)
     // broadcast ids are sequential per context: the distance between
@@ -148,8 +148,8 @@ class DvMemoSpec extends GraftSpec {
     val t = mkTable("dv_evict")
     def dvDirs(): Set[String] = Option(new java.io.File(t, "_dv").list())
       .getOrElse(Array.empty[String]).map("_dv/" + _).toSet
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(30), BigDecimal(39))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(30), BigDecimal(39)), TableCommit.MergeOnRead)
     val swept = dvDirs().head
     val want = (0L until 200L).toSet -- (30L to 39L)
     assert(ids(TableCommit.read(spark, t)) == want)
@@ -172,8 +172,8 @@ class DvMemoSpec extends GraftSpec {
       s"memo still holds the swept dir $swept")
     assert(ids(TableCommit.read(spark, t)) == want)
     // DROP evicts every dir of the table
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(4))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(4)), TableCommit.MergeOnRead)
     assert(ids(TableCommit.read(spark, t)) == want -- (0L to 4L))
     assert(TableCommit.dvMemoDirs(t).nonEmpty)
     spark.sql("DROP TABLE graftdvm.db.dv_evict")

@@ -125,9 +125,10 @@ class ExtensionsSpec extends GraftSpec {
         (0 until 200).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "pt"),
         clusterBy = Seq("id"), filesPerPartition = 5)
       val (fromId, filesFrom) = TableCommit.resolve(t2).get
-      TableCommit.updateWhereMor(s2, t2, "pt", "id",
-        BigDecimal(20), BigDecimal(39),
-        Map("v" -> org.apache.spark.sql.functions.lit("X")))
+      TableCommit.update(s2, t2, Seq("pt"),
+        band("id", BigDecimal(20), BigDecimal(39)),
+        Map("v" -> org.apache.spark.sql.functions.lit("X")),
+        TableCommit.MergeOnRead)
       val (toId, filesTo) = TableCommit.resolve(t2).get
       val feedDf = s2.sql(
         s"SELECT _change_type, id, v FROM graft_table_feed('$t2', " +

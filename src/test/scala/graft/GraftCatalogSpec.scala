@@ -121,12 +121,12 @@ class GraftCatalogSpec extends GraftSpec {
       "rows by position with no materialization — v1+v2 stacks included") {
     val t = mkTable("vectored")
     TableCommit.setProperties(t, Map("graft.retention.generations" -> "6"))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(299))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(299)), TableCommit.MergeOnRead)
     // stack a v1 vector on top (the mixed-fleet shape)
     TableCommit.setProperties(t, Map("graft.dv.format" -> "v1"))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(9))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(9)), TableCommit.MergeOnRead)
     val got = spark.sql("SELECT id FROM graftcat.db.vectored")
       .collect().map(_.getLong(0)).toSet
     val want = ((10 until 100) ++ (300 until 400)).map(_.toLong).toSet
@@ -161,8 +161,8 @@ class GraftCatalogSpec extends GraftSpec {
     seed(fact, 4000, "f")
     seed(dim, 500, "d")
     // the DV twist the bucketed VIEW must refuse: vector some fact rows
-    TableCommit.deleteWhereMor(spark, fact, "bucket(8,k)", "k",
-      BigDecimal(490), BigDecimal(499))
+    TableCommit.delete(spark, fact, Seq("bucket(8,k)"),
+      band("k", BigDecimal(490), BigDecimal(499)), TableCommit.MergeOnRead)
     val joined = spark.sql(
       """SELECT f.k, f.f, d.d
         |FROM graftcat.db.fact_spj f JOIN graftcat.db.dim_spj d ON f.k = d.k
@@ -202,8 +202,8 @@ class GraftCatalogSpec extends GraftSpec {
       "zero data IO; filters or non-count shapes fall back") {
     val t = mkTable("counted")
     TableCommit.setProperties(t, Map("graft.retention.generations" -> "6"))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(49))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(49)), TableCommit.MergeOnRead)
     def planOf(sql: String): String = {
       val df = spark.sql(sql)
       (df.queryExecution.executedPlan.toString, df)._1
@@ -337,8 +337,8 @@ class GraftCatalogSpec extends GraftSpec {
       "the same TableCommit verb, audits as result rows") {
     val t = mkTable("proc")
     TableCommit.setProperties(t, Map("graft.retention.generations" -> "2"))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(199))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(199)), TableCommit.MergeOnRead)
     // compact = the REORG purge; reads THROUGH the vectors
     val cid = spark.sql(
       "CALL graftcat.system.compact('db.proc', 'pt=0,pt=1,pt=2', 'id', 1)")
@@ -393,8 +393,8 @@ class GraftCatalogSpec extends GraftSpec {
       .queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     // vector some rows: the row-index filter needs the row path — and
     // the rows served stay exactly the live set
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(99))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(99)), TableCommit.MergeOnRead)
     val vectored = spark.sql(q)
     assert(!vectored.queryExecution.executedPlan.toString
       .contains("ColumnarToRow"),

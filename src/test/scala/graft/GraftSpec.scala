@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (Spark sessions are
@@ -29,6 +30,15 @@ object TestSession {
 abstract class GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfTiny: String = TestSession.sfTiny
+
+  /** The row predicate of the closed numeric band [lo, hi] on `c` —
+    * how a key-band DELETE or UPDATE spells its WHERE. */
+  def band(c: String, lo: BigDecimal, hi: BigDecimal): Column =
+    col(c) >= lit(lo.underlying) && col(c) <= lit(hi.underlying)
+
+  /** [[band]] with string bounds, compared in the column's own order. */
+  def lexBand(c: String, lo: String, hi: String): Column =
+    col(c) >= lit(lo) && col(c) <= lit(hi)
 
   /** Run `f` with session confs set, restoring prior values after —
     * the shared session makes leaked conf changes cross-suite hazards. */

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.operators.TableCommit
 import graft.plans.GraftCatalog
@@ -330,5 +332,64 @@ class GraftSqlDmlSpec extends GraftSpec {
               |WHEN MATCHED AND s.v = 'a' THEN UPDATE SET v = s.v
               |WHEN MATCHED THEN DELETE""".stripMargin)
     assert(rows(t) == before, "a refused statement mutated the table")
+  }
+
+  /** Rows the tasks `f` starts read from their input. */
+  private def recordsReadDuring(f: => Unit): Long = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          n.addAndGet(m.inputMetrics.recordsRead))
+    }
+    GraftTestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; GraftTestBus.drain(spark.sparkContext); n.get }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("SQL DELETE and UPDATE prune as the SQL read does: a BETWEEN on " +
+      "the clustered key and pt = 1 read only their candidate files, and " +
+      "the rows equal the model") {
+    val t = s"$wh/db/pruned"
+    // four appends of 150 contiguous ids: four stats-disjoint files per
+    // partition, each append's files known by diffing the file list
+    val rows0 = (0 until 600).map(i => (i.toLong, s"v$i", i % 2))
+    val batches = rows0.grouped(150).toSeq.map { g =>
+      val before = TableCommit.resolve(t).map(_._2.toSet).getOrElse(Set.empty)
+      TableCommit.appendRowsBy(spark, t, Seq("pt"), g.toDF("id", "v", "pt"),
+        clusterBy = Seq("id"))
+      TableCommit.resolve(t).get._2.toSet -- before
+    }
+    // merge-on-read deletes rewrite no file: these counts stay physical
+    val (id0, files0) = TableCommit.resolve(t).get
+    val fileRows = TableCommit.fileRowsAt(t, id0)
+    def physicalRows(keep: String => Boolean): Long =
+      files0.filter(keep).map(fileRows).sum
+    var model = rows0.toSet
+    // id 100..160 lies in the first two appends' files
+    val band = physicalRows(f => batches(0)(f) || batches(1)(f))
+    assert(band == 300L)
+    val read1 = recordsReadDuring(assert(spark.sql(
+      "DELETE FROM graftdml.db.pruned WHERE id BETWEEN 100 AND 160")
+      .head().getLong(0) == 61L))
+    assert(read1 == band, s"read $read1 rows, candidates hold $band")
+    model = model.filterNot(r => r._1 >= 100 && r._1 <= 160)
+    val pt1 = physicalRows(_.startsWith("pt=1/"))
+    val read2 = recordsReadDuring(assert(spark.sql(
+      "DELETE FROM graftdml.db.pruned WHERE pt = 1 AND id % 3 = 0")
+      .head().getLong(0) == model.count(r => r._3 == 1 && r._1 % 3 == 0)))
+    assert(read2 == pt1 && pt1 < physicalRows(_ => true),
+      s"read $read2 rows, pt=1 files hold $pt1")
+    model = model.filterNot(r => r._3 == 1 && r._1 % 3 == 0)
+    assert(spark.sql("UPDATE graftdml.db.pruned SET v = upper(v) " +
+      "WHERE id BETWEEN 400 AND 420").head().getLong(0) ==
+      model.count(r => r._1 >= 400 && r._1 <= 420))
+    model = model.map { case (i, v, p) =>
+      (i, if (i >= 400 && i <= 420) v.toUpperCase else v, p) }
+    assert(spark.sql("UPDATE graftdml.db.pruned SET v = concat(v, '!') " +
+      "WHERE pt = 0").head().getLong(0) == model.count(_._3 == 0))
+    model = model.map { case (i, v, p) => (i, if (p == 0) v + "!" else v, p) }
+    assert(rows(t) == model)
   }
 }

@@ -108,12 +108,12 @@ class HadoopStoreSpec extends GraftSpec {
       seed(t)
       TableCommit.initIfAbsent(t)
       TableCommit.setProperties(t, Map("graft.retention.generations" -> "8"))
-      val da = TableCommit.deleteWhere(spark, t, "pt", "id",
-        BigDecimal(4), BigDecimal(4))
+      val da = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(4), BigDecimal(4)), TableCommit.CopyOnWrite)
       assert(da.rowsDeleted == 1L)
-      val ma = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-        BigDecimal(3), BigDecimal(3))
-      assert(ma.rowsDeleted == 1L && ma.filesVectored == 1)
+      val ma = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(3), BigDecimal(3)), TableCommit.MergeOnRead)
+      assert(ma.rowsDeleted == 1L && ma.filesHit == 1)
       assert(new java.io.File(t, "_dv").isDirectory &&
         Option(new java.io.File(t, "_dv").list()).get.exists(_.endsWith(".v2")),
         "MoR delete did not land a v2 vector dir through the adapter")

@@ -84,9 +84,9 @@ class IncrementalViewSpec extends GraftSpec {
     val (src, view) = freshPair()
     seed(src)
     IncrementalView.sync(spark, src, view, "v2", "pt", aggFn, combineFn)
-    val d = TableCommit.deleteWhere(spark, src, "pt", "id",
-      BigDecimal(50), BigDecimal(80))
-    assert(d.filesRewritten > 0)
+    val d = TableCommit.delete(spark, src, Seq("pt"),
+      band("id", BigDecimal(50), BigDecimal(80)), TableCommit.CopyOnWrite)
+    assert(d.filesHit > 0)
     val a = IncrementalView.sync(spark, src, view, "v2", "pt",
       aggFn, combineFn)
     assert(a.mode == "incremental" && a.partsRecomputed > 0, a.toString)
@@ -107,9 +107,9 @@ class IncrementalViewSpec extends GraftSpec {
     val (src, view) = freshPair()
     seed(src)
     IncrementalView.sync(spark, src, view, "v4", "pt", aggFn, combineFn)
-    val a = TableCommit.deleteWhereMor(spark, src, "pt", "id",
-      BigDecimal(50), BigDecimal(80))
-    assert(a.filesVectored > 0 && a.rowsDeleted > 0, a.toString)
+    val a = TableCommit.delete(spark, src, Seq("pt"),
+      band("id", BigDecimal(50), BigDecimal(80)), TableCommit.MergeOnRead)
+    assert(a.filesHit > 0 && a.rowsDeleted > 0, a.toString)
     val b = IncrementalView.sync(spark, src, view, "v4", "pt",
       aggFn, combineFn)
     assert(b.mode == "incremental" && b.partsRecomputed > 0, b.toString)
@@ -128,9 +128,9 @@ class IncrementalViewSpec extends GraftSpec {
     IncrementalView.sync(spark, src, view, "v7", "pt", aggFn, combineFn,
       retract = Some(retractFn))
     // MoR delete inside pt-spread band: vectors only, no file removed
-    val d = TableCommit.deleteWhereMor(spark, src, "pt", "id",
-      BigDecimal(50), BigDecimal(80))
-    assert(d.filesVectored > 0 && d.rowsDeleted > 0)
+    val d = TableCommit.delete(spark, src, Seq("pt"),
+      band("id", BigDecimal(50), BigDecimal(80)), TableCommit.MergeOnRead)
+    assert(d.filesHit > 0 && d.rowsDeleted > 0)
     val a = IncrementalView.sync(spark, src, view, "v7", "pt",
       aggFn, combineFn, retract = Some(retractFn))
     assert(a.mode == "incremental" && a.partsRecomputed == 0 &&
@@ -142,8 +142,8 @@ class IncrementalViewSpec extends GraftSpec {
       Map("graft.retention.generations" -> "5"))
     TableCommit.appendRows(spark, src, "pt",
       Seq((5000L, 0), (5001L, 1)).toDF("id", "pt"), clusterBy = Seq("id"))
-    TableCommit.deleteWhereMor(spark, src, "pt", "id",
-      BigDecimal(100), BigDecimal(110))
+    TableCommit.delete(spark, src, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(110)), TableCommit.MergeOnRead)
     val b = IncrementalView.sync(spark, src, view, "v7", "pt",
       aggFn, combineFn, retract = Some(retractFn))
     assert(b.mode == "incremental" && b.partsRecomputed == 0 &&
@@ -151,8 +151,8 @@ class IncrementalViewSpec extends GraftSpec {
     assert(viewRows(view) == recompute(src), "mixed fold diverged")
     // a group deleted to ZERO disappears from the view, exactly as a
     // recompute would drop it: empty pt=2 entirely via MoR
-    TableCommit.deleteWhereMor(spark, src, "pt", "id",
-      BigDecimal(0), BigDecimal(100000))
+    TableCommit.delete(spark, src, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(100000)), TableCommit.MergeOnRead)
     val c = IncrementalView.sync(spark, src, view, "v7", "pt",
       aggFn, combineFn, retract = Some(retractFn))
     assert(c.partsRecomputed == 0 && c.partsRetracted > 0, c.toString)

@@ -341,4 +341,32 @@ class MergeJobsSpec extends GraftSpec {
       }
     }
   }
+
+  test("a predicate that prunes every file: delete and update in both " +
+      "modes, and SQL DELETE and UPDATE, start 0 Spark jobs and publish " +
+      "nothing") {
+    val t = s"$wh/db/pruned_all"
+    TableCommit.appendRowsBy(spark, t, Seq("pt"),
+      (0L until 400L).map(u => (u, 1L, (u % 4).toInt))
+        .toDF("user_id", "n", "pt"), clusterBy = Seq("user_id"))
+    val id0 = TableCommit.resolve(t).get._1
+    val miss = "user_id BETWEEN 1000 AND 2000"
+    for (mode <- Seq(TableCommit.CopyOnWrite, TableCommit.MergeOnRead)) {
+      val (d, descs) = jobsDuring(
+        TableCommit.delete(spark, t, Seq("pt"), expr(miss), mode))
+      assert(descs.isEmpty && d.filesCandidates == 0 &&
+        d.snapshotAfter == id0, s"$mode $d $descs")
+      val (u, descs2) = jobsDuring(TableCommit.update(spark, t, Seq("pt"),
+        expr(miss), Map("n" -> lit(0L)), mode))
+      assert(descs2.isEmpty && u.filesCandidates == 0 &&
+        u.snapshotAfter == id0, s"$mode $u $descs2")
+    }
+    val (del, descs3) = jobsDuring(
+      spark.sql(s"DELETE FROM graftmj.db.pruned_all WHERE $miss").collect())
+    assert(descs3.isEmpty && del.toSeq == Seq(Row(0L)), descs3.toString)
+    val (upd, descs4) = jobsDuring(spark.sql(
+      s"UPDATE graftmj.db.pruned_all SET n = 0 WHERE $miss").collect())
+    assert(descs4.isEmpty && upd.toSeq == Seq(Row(0L)), descs4.toString)
+    assert(TableCommit.resolve(t).get._1 == id0)
+  }
 }

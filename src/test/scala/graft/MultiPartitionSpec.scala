@@ -112,8 +112,8 @@ class MultiPartitionSpec extends GraftSpec {
       "levels — only the banded rows die, every leaf keeps its files") {
     val t = freshTable(); seed(t)
     val filesBefore = TableCommit.resolve(t).get._2.toSet
-    val a = TableCommit.deleteWhereMorBy(spark, t, Seq("d", "s"), "id",
-      BigDecimal(3), BigDecimal(6))
+    val a = TableCommit.delete(spark, t, Seq("d", "s"),
+      band("id", BigDecimal(3), BigDecimal(6)), TableCommit.MergeOnRead)
     assert(a.rowsDeleted == 4L)
     assert(TableCommit.resolve(t).get._2.toSet == filesBefore,
       "MoR delete rewrote a data file")
@@ -125,14 +125,16 @@ class MultiPartitionSpec extends GraftSpec {
   test("MoR update SET of a partition LEVEL moves rows across nested " +
       "dirs (kill-and-re-add); CoW update refuses it") {
     val t = freshTable(); seed(t)
-    val a = TableCommit.updateWhereMorBy(spark, t, Seq("d", "s"), "id",
-      BigDecimal(1), BigDecimal(2), Map("s" -> lit("b")))
+    val a = TableCommit.update(spark, t, Seq("d", "s"),
+      band("id", BigDecimal(1), BigDecimal(2)), Map("s" -> lit("b")),
+      TableCommit.MergeOnRead)
     assert(a.rowsUpdated == 2L)
     assert(rows(t).contains((1L, 10L, 1, "b")))
     assert(rows(t).contains((2L, 20L, 1, "b")))
     intercept[IllegalArgumentException] {
-      TableCommit.updateWhereBy(spark, t, Seq("d", "s"), "id",
-        BigDecimal(7), BigDecimal(7), Map("s" -> lit("a")))
+      TableCommit.update(spark, t, Seq("d", "s"),
+        band("id", BigDecimal(7), BigDecimal(7)), Map("s" -> lit("a")),
+        TableCommit.CopyOnWrite)
     }
   }
 
@@ -154,8 +156,8 @@ class MultiPartitionSpec extends GraftSpec {
       "equation; clone of the nested table shares bytes and diverges") {
     val t = freshTable(); seed(t)
     val (fromId, _) = TableCommit.resolve(t).get
-    TableCommit.deleteWhereMorBy(spark, t, Seq("d", "s"), "id",
-      BigDecimal(5), BigDecimal(6))
+    TableCommit.delete(spark, t, Seq("d", "s"),
+      band("id", BigDecimal(5), BigDecimal(6)), TableCommit.MergeOnRead)
     val (toId, _) = TableCommit.resolve(t).get
     val feed = TableCommit.changeFeed(spark, t, fromId, toId)
       .select(col("id"), col("_change_type"))

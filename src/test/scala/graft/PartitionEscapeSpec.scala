@@ -49,26 +49,28 @@ class PartitionEscapeSpec extends GraftSpec {
       model ++= Map(1L -> "x2", 3L -> "x3")
       check("MERGE")
 
-      val md = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-        BigDecimal(5), BigDecimal(5))
+      val md = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(5), BigDecimal(5)), TableCommit.MergeOnRead)
       assert(md.rowsDeleted == 1, md.toString)
       model -= 5L
       check("MoR DELETE")
 
-      val cd = TableCommit.deleteWhere(spark, t, "pt", "id",
-        BigDecimal(7), BigDecimal(7))
+      val cd = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(7), BigDecimal(7)), TableCommit.CopyOnWrite)
       assert(cd.rowsDeleted == 1, cd.toString)
       model -= 7L
       check("CoW DELETE")
 
-      val mu = TableCommit.updateWhereMor(spark, t, "pt", "id",
-        BigDecimal(9), BigDecimal(9), Map("v" -> lit("u9")))
+      val mu = TableCommit.update(spark, t, Seq("pt"),
+        band("id", BigDecimal(9), BigDecimal(9)), Map("v" -> lit("u9")),
+        TableCommit.MergeOnRead)
       assert(mu.rowsUpdated == 1, mu.toString)
       model += 9L -> "u9"
       check("MoR UPDATE")
 
-      val cu = TableCommit.updateWhere(spark, t, "pt", "id",
-        BigDecimal(11), BigDecimal(11), Map("v" -> lit("u11")))
+      val cu = TableCommit.update(spark, t, Seq("pt"),
+        band("id", BigDecimal(11), BigDecimal(11)), Map("v" -> lit("u11")),
+        TableCommit.CopyOnWrite)
       assert(cu.rowsUpdated == 1, cu.toString)
       model += 11L -> "u11"
       check("CoW UPDATE")

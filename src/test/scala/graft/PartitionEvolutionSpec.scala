@@ -106,8 +106,8 @@ class PartitionEvolutionSpec extends GraftSpec {
       rowsOf(60, from = 200).toDF("id", "v", "g", "pt"),
       clusterBy = Seq("id"))
     // band [150, 219] covers 50 old-generation + 20 new-generation rows
-    val mor = TableCommit.deleteWhereMorBy(spark, t, Seq("pt", "g"), "id",
-      BigDecimal(150), BigDecimal(219))
+    val mor = TableCommit.delete(spark, t, Seq("pt", "g"),
+      band("id", BigDecimal(150), BigDecimal(219)), TableCommit.MergeOnRead)
     assert(mor.rowsDeleted == 70, mor.toString)
     assert(TableCommit.read(spark, t).count() == 190L)
     assert(TableCommit.read(spark, t)
@@ -115,8 +115,9 @@ class PartitionEvolutionSpec extends GraftSpec {
     // CoW update across the remaining mixed band [100, 239]:
     // 50 old + 20 new live rows get v negated; the rewrite lays the
     // old files' survivors out under the NEW spec (DML as migration)
-    val upd = TableCommit.updateWhereBy(spark, t, Seq("pt", "g"), "id",
-      BigDecimal(100), BigDecimal(239), Map("v" -> -col("v")))
+    val upd = TableCommit.update(spark, t, Seq("pt", "g"),
+      band("id", BigDecimal(100), BigDecimal(239)), Map("v" -> -col("v")),
+      TableCommit.CopyOnWrite)
     assert(upd.rowsUpdated == 70, upd.toString)
     val got = TableCommit.read(spark, t)
       .filter(col("v") < 0).select(col("id")).collect()

@@ -98,8 +98,8 @@ class PartitionTransformSpec extends GraftSpec {
     }
     assert(e.getMessage.contains("bucket(4,id)"), e.getMessage)
     // MoR delete across old-identity and new-bucket generations
-    val mor = TableCommit.deleteWhereMorBy(spark, t, Seq("bucket(4,id)"),
-      "id", BigDecimal(90), BigDecimal(109))
+    val mor = TableCommit.delete(spark, t, Seq("bucket(4,id)"),
+      band("id", BigDecimal(90), BigDecimal(109)), TableCommit.MergeOnRead)
     assert(mor.rowsDeleted == 20, mor.toString)
     assert(TableCommit.read(spark, t).count() == 100L)
     assert(TableCommit.read(spark, t)
@@ -169,9 +169,9 @@ class PartitionTransformSpec extends GraftSpec {
     assert(e2.getMessage.contains("derived partition dir"), e2.getMessage)
     // CoW SET of the transform's source moves rows across day dirs
     val e3 = intercept[IllegalArgumentException] {
-      TableCommit.updateWhereBy(spark, t, Seq("pt", "days(d)"), "id",
-        BigDecimal(0), BigDecimal(10),
-        Map("d" -> date_add(col("d"), 30)))
+      TableCommit.update(spark, t, Seq("pt", "days(d)"),
+        band("id", BigDecimal(0), BigDecimal(10)),
+        Map("d" -> date_add(col("d"), 30)), TableCommit.CopyOnWrite)
     }
     assert(e3.getMessage.contains("its source"), e3.getMessage)
   }
@@ -184,6 +184,33 @@ class PartitionTransformSpec extends GraftSpec {
     TableCommit.appendRowsBy(spark, t, Seq("pt"),
       rowsOf(3, from = 500).toDF("id", "v", "d", "pt"))
     assert(TableCommit.read(spark, t).count() == 103L)
+  }
+
+  test("legacy comma-joined graft.partcols on a TWO-level table: SQL " +
+      "INSERT, UPDATE and CALL compact resolve it as two columns") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_ptleg").toFile
+    graft.plans.GraftCatalog.register(spark, "graftleg",
+      Some(wh.getAbsolutePath))
+    val t = new java.io.File(wh, "db/leg").getAbsolutePath
+    TableCommit.appendRowsBy(spark, t, Seq("pt", "b"),
+      (0 until 40).map(i => (i.toLong, s"v$i", i % 2, i % 3))
+        .toDF("id", "v", "pt", "b"), clusterBy = Seq("id"))
+    // what the earlier identity-only format persisted
+    TableCommit.setProperties(t, Map("graft.partcols" -> "pt,b"))
+    spark.sql("INSERT INTO graftleg.db.leg (id, v, pt, b) " +
+      "VALUES (100, 'new', 1, 2)")
+    assert(spark.sql("UPDATE graftleg.db.leg SET v = 'upd' WHERE id < 4")
+      .head().getLong(0) == 4L)
+    spark.sql("CALL graftleg.system.compact('db.leg', 'pt=0', 'id', 1)")
+    val got = TableCommit.read(spark, t)
+      .select(col("id"), col("v"), col("pt").cast("int"), col("b").cast("int"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
+        r.getInt(3))).toSet
+    val want = (0 until 40).map(i =>
+      (i.toLong, if (i < 4) "upd" else s"v$i", i % 2, i % 3)).toSet +
+      ((100L, "new", 1, 2))
+    assert(got == want)
+    assert(TableCommit.resolve(t).get._2.forall(_.count(_ == '/') == 2))
   }
 
   test("truncate() transform: prefix dirs; derived dir name colliding " +

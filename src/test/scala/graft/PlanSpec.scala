@@ -390,8 +390,8 @@ class PlanSpec extends GraftSpec {
       (0 until 400 by 2).map(i => (i.toLong, s"r$i")).toDF("k", "rv"))
     TableCommit.evolvePartitioningBy(spark, bT, Seq("bucket(8,k)"))
     // the composition registerBucketedView refuses: a vectored side
-    TableCommit.deleteWhereMorBy(spark, aT, Seq("bucket(8,k)"), "k",
-      BigDecimal(100), BigDecimal(109))
+    TableCommit.delete(spark, aT, Seq("bucket(8,k)"),
+      band("k", BigDecimal(100), BigDecimal(109)), TableCommit.MergeOnRead)
     graft.plans.GraftCatalog.register(spark)
     val conf = spark.conf
     val prevBc = conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
@@ -540,8 +540,8 @@ class PlanSpec extends GraftSpec {
     }
     assert(e1.getMessage.contains("bucket(8,k)"), e1.getMessage)
     // (2) live deletion vectors on the snapshot
-    val mor = TableCommit.deleteWhereMorBy(spark, aT, Seq("bucket(8,k)"),
-      "k", BigDecimal(0), BigDecimal(10))
+    val mor = TableCommit.delete(spark, aT, Seq("bucket(8,k)"),
+      band("k", BigDecimal(0), BigDecimal(10)), TableCommit.MergeOnRead)
     assert(mor.rowsDeleted == 11L, mor.toString)
     val e2 = intercept[Exception] {
       TableCommit.registerBucketedView(spark, aT, "cbv_a2", "k", 8,

@@ -123,12 +123,12 @@ class S3StoreSpec extends GraftSpec {
     withS3Table { t =>
       seed(t)
       TableCommit.initIfAbsent(t)
-      val da = TableCommit.deleteWhere(spark, t, "pt", "id",
-        BigDecimal(4), BigDecimal(4))
+      val da = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(4), BigDecimal(4)), TableCommit.CopyOnWrite)
       assert(da.rowsDeleted == 1L)
-      val ma = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-        BigDecimal(3), BigDecimal(3))
-      assert(ma.rowsDeleted == 1L && ma.filesVectored == 1)
+      val ma = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(3), BigDecimal(3)), TableCommit.MergeOnRead)
+      assert(ma.rowsDeleted == 1L && ma.filesHit == 1)
       assert(rows(t) == Set((1L, "a", 0), (2L, "b", 0), (5L, "e", 2)))
       // the registered vector is the v2 roaring encoding
       val mid = TableCommit.resolve(t).get._1
@@ -271,8 +271,8 @@ class S3StoreSpec extends GraftSpec {
       TableCommit.appendRowsBy(spark, t, Seq("bucket(4,id)"),
         Seq((100L, "zz1", 0), (101L, "zz2", 1)).toDF("id", "v", "pt"))
       assert(TableCommit.read(spark, t).count() == 62L)
-      val mor = TableCommit.deleteWhereMorBy(spark, t, Seq("bucket(4,id)"),
-        "id", BigDecimal(50), BigDecimal(100))
+      val mor = TableCommit.delete(spark, t, Seq("bucket(4,id)"),
+        band("id", BigDecimal(50), BigDecimal(100)), TableCommit.MergeOnRead)
       assert(mor.rowsDeleted == 11L, mor.toString)
       assert(TableCommit.read(spark, t).count() == 51L)
       // exactly-once ledger

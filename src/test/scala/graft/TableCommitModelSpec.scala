@@ -69,7 +69,7 @@ class TableCommitModelSpec extends GraftSpec {
       var hist: Map[Long, Map[Long, (Long, Int)]] =
         Map(TableCommit.resolve(t).get._1 -> model)
 
-      def band(): (Long, Long) = {
+      def randomBand(): (Long, Long) = {
         val ids = model.keys
         val mx = if (ids.isEmpty) 10L else ids.max
         val lo = math.abs(rnd.nextLong()) % (mx + 1)
@@ -85,7 +85,7 @@ class TableCommitModelSpec extends GraftSpec {
           TableCommit.setProperties(t, Map("graft.dv.format" ->
             (if (rnd.nextBoolean()) "v1" else "v2")))
         val op = rnd.nextInt(7)
-        val (lo, hi) = band()
+        val (lo, hi) = randomBand()
         op match {
           case 6 => // three-clause MERGE: update a band slice, delete a
             // sub-slice, insert fresh ids — one MoR commit
@@ -121,24 +121,26 @@ class TableCommitModelSpec extends GraftSpec {
               df3(fresh), clusterBy = Seq("id"))
             model ++= fresh.map { case (id, v, pt) => id -> (v, pt) }
           case 1 => // copy-on-write delete
-            TableCommit.deleteWhereBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi))
+            TableCommit.delete(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              TableCommit.CopyOnWrite)
             model = model.filter { case (id, _) => id < lo || id > hi }
           case 2 => // merge-on-read delete
-            TableCommit.deleteWhereMorBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi))
+            TableCommit.delete(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              TableCommit.MergeOnRead)
             model = model.filter { case (id, _) => id < lo || id > hi }
           case 3 => // copy-on-write update
-            TableCommit.updateWhereBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi),
-              Map("v" -> (col("v") + lit(1L))))
+            TableCommit.update(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              Map("v" -> (col("v") + lit(1L))), TableCommit.CopyOnWrite)
             model = model.map { case (id, (v, pt)) =>
               if (id >= lo && id <= hi) id -> (v + 1, pt) else id -> (v, pt)
             }
           case 4 => // merge-on-read update
-            TableCommit.updateWhereMorBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi),
-              Map("v" -> (col("v") + lit(1L))))
+            TableCommit.update(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              Map("v" -> (col("v") + lit(1L))), TableCommit.MergeOnRead)
             model = model.map { case (id, (v, pt)) =>
               if (id >= lo && id <= hi) id -> (v + 1, pt) else id -> (v, pt)
             }
@@ -207,7 +209,7 @@ class TableCommitModelSpec extends GraftSpec {
         Seq("pt=0", "pt=1", "pt=2"),
         df3(model.toSeq.map { case (id, (v, pt)) => (id, v, pt) }),
         clusterBy = Seq("id"), filesPerPartition = 2)
-      def band(): (Long, Long) = {
+      def randomBand(): (Long, Long) = {
         val ids = model.keys
         val mx = if (ids.isEmpty) 10L else ids.max
         val lo = math.abs(rnd.nextLong()) % (mx + 1)
@@ -223,7 +225,7 @@ class TableCommitModelSpec extends GraftSpec {
           partCols = evolvedSpec
         }
         val op = rnd.nextInt(6)
-        val (lo, hi) = band()
+        val (lo, hi) = randomBand()
         op match {
           case 0 => // blind append of fresh ids under the ACTIVE spec
             val k = 1 + rnd.nextInt(15)
@@ -234,24 +236,26 @@ class TableCommitModelSpec extends GraftSpec {
               df3(fresh), clusterBy = Seq("id"))
             model ++= fresh.map { case (id, v, pt) => id -> (v, pt) }
           case 1 =>
-            TableCommit.deleteWhereBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi))
+            TableCommit.delete(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              TableCommit.CopyOnWrite)
             model = model.filter { case (id, _) => id < lo || id > hi }
           case 2 =>
-            TableCommit.deleteWhereMorBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi))
+            TableCommit.delete(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              TableCommit.MergeOnRead)
             model = model.filter { case (id, _) => id < lo || id > hi }
           case 3 =>
-            TableCommit.updateWhereBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi),
-              Map("v" -> (col("v") + lit(1L))))
+            TableCommit.update(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              Map("v" -> (col("v") + lit(1L))), TableCommit.CopyOnWrite)
             model = model.map { case (id, (v, pt)) =>
               if (id >= lo && id <= hi) id -> (v + 1, pt) else id -> (v, pt)
             }
           case 4 =>
-            TableCommit.updateWhereMorBy(spark, t, partCols, "id",
-              BigDecimal(lo), BigDecimal(hi),
-              Map("v" -> (col("v") + lit(1L))))
+            TableCommit.update(spark, t, partCols,
+              band("id", BigDecimal(lo), BigDecimal(hi)),
+              Map("v" -> (col("v") + lit(1L))), TableCommit.MergeOnRead)
             model = model.map { case (id, (v, pt)) =>
               if (id >= lo && id <= hi) id -> (v + 1, pt) else id -> (v, pt)
             }
@@ -365,20 +369,22 @@ class TableCommitModelSpec extends GraftSpec {
               df3(fresh), clusterBy = Seq("k"))
             model ++= fresh.map { case (k, v, pt) => k -> (v, pt) }
           case 1 => // copy-on-write delete over a lex band
-            TableCommit.deleteWhereLexBy(spark, t, partCols, "k", lo, hi)
+            TableCommit.delete(spark, t, partCols, lexBand("k", lo, hi),
+              TableCommit.CopyOnWrite)
             model = model.filter { case (k, _) => !inBand(k, lo, hi) }
           case 2 => // merge-on-read delete
-            TableCommit.deleteWhereMorLexBy(spark, t, partCols, "k", lo, hi)
+            TableCommit.delete(spark, t, partCols, lexBand("k", lo, hi),
+              TableCommit.MergeOnRead)
             model = model.filter { case (k, _) => !inBand(k, lo, hi) }
           case 3 => // copy-on-write update
-            TableCommit.updateWhereLexBy(spark, t, partCols, "k", lo, hi,
-              Map("v" -> (col("v") + lit(1L))))
+            TableCommit.update(spark, t, partCols, lexBand("k", lo, hi),
+              Map("v" -> (col("v") + lit(1L))), TableCommit.CopyOnWrite)
             model = model.map { case (k, (v, pt)) =>
               if (inBand(k, lo, hi)) k -> (v + 1, pt) else k -> (v, pt)
             }
           case 4 => // merge-on-read update
-            TableCommit.updateWhereMorLexBy(spark, t, partCols, "k", lo, hi,
-              Map("v" -> (col("v") + lit(1L))))
+            TableCommit.update(spark, t, partCols, lexBand("k", lo, hi),
+              Map("v" -> (col("v") + lit(1L))), TableCommit.MergeOnRead)
             model = model.map { case (k, (v, pt)) =>
               if (inBand(k, lo, hi)) k -> (v + 1, pt) else k -> (v, pt)
             }

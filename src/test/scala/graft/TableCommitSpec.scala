@@ -86,8 +86,8 @@ class TableCommitSpec extends GraftSpec {
     val t = freshTable()
     TableCommit.initIfAbsent(t)
     // CoW UPDATE across partitions on a non-band predicate
-    val u = TableCommit.updateMatching(spark, t, Seq("pt"),
-      col("v").isin("a", "d"), Map("v" -> upper(col("v"))))
+    val u = TableCommit.update(spark, t, Seq("pt"), col("v").isin("a", "d"),
+      Map("v" -> upper(col("v"))), TableCommit.CopyOnWrite)
     assert(u.rowsUpdated == 2L && u.filesCandidates == u.filesTotal,
       u.toString)
     assert(snapshot(t) == Set((1L, "A", 0), (2L, "b", 0), (3L, "c", 1),
@@ -95,19 +95,20 @@ class TableCommitSpec extends GraftSpec {
     // MoR DELETE whose predicate is NULL for one row: SQL keeps it
     val nullish = when(col("id") === 2L,
       lit(null).cast("boolean")).otherwise(col("id") === 3L)
-    val d = TableCommit.deleteMatchingMor(spark, t, Seq("pt"), nullish)
+    val d = TableCommit.delete(spark, t, Seq("pt"), nullish,
+      TableCommit.MergeOnRead)
     assert(d.rowsDeleted == 1L, d.toString)
     assert(snapshot(t) == Set((1L, "A", 0), (2L, "b", 0),
       (4L, "D", 1), (5L, "e", 2)))
     // CoW DELETE on a value-only predicate; hit scan narrows the
     // rewrite to the one file holding the match
-    val d2 = TableCommit.deleteMatching(spark, t, Seq("pt"),
-      col("v") === "e")
-    assert(d2.rowsDeleted == 1L && d2.filesRewritten == 1, d2.toString)
+    val d2 = TableCommit.delete(spark, t, Seq("pt"), col("v") === "e",
+      TableCommit.CopyOnWrite)
+    assert(d2.rowsDeleted == 1L && d2.filesHit == 1, d2.toString)
     // MoR UPDATE, arbitrary predicate
-    val u2 = TableCommit.updateMatchingMor(spark, t, Seq("pt"),
+    val u2 = TableCommit.update(spark, t, Seq("pt"),
       col("v").startsWith("A") || col("v").startsWith("b"),
-      Map("v" -> concat(col("v"), lit("!"))))
+      Map("v" -> concat(col("v"), lit("!"))), TableCommit.MergeOnRead)
     assert(u2.rowsUpdated == 2L, u2.toString)
     assert(snapshot(t) == Set((1L, "A!", 0), (2L, "b!", 0), (4L, "D", 1)))
     // the metadata row count tracked every verb
@@ -127,12 +128,13 @@ class TableCommitSpec extends GraftSpec {
       Seq((6L, "f", 2)).toDF("id", "v", "pt"))
     TableCommit.replacePartitions(spark, t, "pt", Seq("pt=0"), // 3
       Seq((10L, "A", 0)).toDF("id", "v", "pt"))
-    TableCommit.deleteWhere(spark, t, "pt", "id", // 4: DELETE
-      BigDecimal(4), BigDecimal(4))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id", // 5: DELETE (MOR)
-      BigDecimal(3), BigDecimal(3))
-    TableCommit.updateWhereMor(spark, t, "pt", "id", // 6: UPDATE (MOR)
-      BigDecimal(5), BigDecimal(5), Map("v" -> upper(col("v"))))
+    TableCommit.delete(spark, t, Seq("pt"), // 4: DELETE
+      band("id", BigDecimal(4), BigDecimal(4)), TableCommit.CopyOnWrite)
+    TableCommit.delete(spark, t, Seq("pt"), // 5: DELETE (MOR)
+      band("id", BigDecimal(3), BigDecimal(3)), TableCommit.MergeOnRead)
+    TableCommit.update(spark, t, Seq("pt"), // 6: UPDATE (MOR)
+      band("id", BigDecimal(5), BigDecimal(5)), Map("v" -> upper(col("v"))),
+      TableCommit.MergeOnRead)
     TableCommit.mergeInto(spark, t, "pt", "id", // 7: MERGE
       Seq((10L, "A2", 0), (7L, "g", 2)).toDF("id", "v", "pt"),
       updateSet = Map("v" -> col("src_v")))
@@ -556,6 +558,62 @@ class TableCommitSpec extends GraftSpec {
       "overlapping pt=0 race touched other partitions")
   }
 
+  test("delete/update derive pruning from the predicate, in both modes: " +
+      "a key BETWEEN keeps exactly the files whose #stats overlap it, " +
+      "pt = 1 keeps only pt=1 files, a modulo keeps every file; rows " +
+      "equal the model") {
+    for (mode <- Seq(TableCommit.CopyOnWrite, TableCommit.MergeOnRead)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_dp").toFile
+      val t = new java.io.File(dir, "table").getAbsolutePath
+      // four appends of 150 contiguous ids: four stats-disjoint files per
+      // partition
+      val rows0 = (0 until 600).map(i => (i.toLong, s"v$i", i % 3))
+      rows0.grouped(150).foreach(g => TableCommit.appendRowsBy(spark, t,
+        Seq("pt"), g.toDF("id", "v", "pt"), clusterBy = Seq("id")))
+      var model = rows0.toSet
+      def statsKept(lo: Int, hi: Int): Int = {
+        val (id, files) = TableCommit.resolve(t).get
+        val (kept, total) = TableCommit.pruneAudit(t, id, "id", lo, hi)
+        assert(kept < total && total == files.length, s"$kept of $total")
+        kept
+      }
+      def ptFiles(p: Int): Int = {
+        val files = TableCommit.resolve(t).get._2
+        val n = files.count(_.startsWith(s"pt=$p/"))
+        assert(n > 0 && n < files.length, files.toString)
+        n
+      }
+      val k1 = statsKept(100, 160)
+      val u1 = TableCommit.update(spark, t, Seq("pt"),
+        expr("id BETWEEN 100 AND 160"), Map("v" -> upper(col("v"))), mode)
+      assert(u1.filesCandidates == k1 && u1.rowsUpdated == 61, s"$mode $u1")
+      model = model.map { case (i, v, p) =>
+        (i, if (i >= 100 && i <= 160) v.toUpperCase else v, p) }
+      val k2 = statsKept(300, 340)
+      val d1 = TableCommit.delete(spark, t, Seq("pt"),
+        expr("id BETWEEN 300 AND 340"), mode)
+      assert(d1.filesCandidates == k2 && d1.rowsDeleted == 41, s"$mode $d1")
+      model = model.filterNot(r => r._1 >= 300 && r._1 <= 340)
+      val p1 = ptFiles(1)
+      val u2 = TableCommit.update(spark, t, Seq("pt"), expr("pt = 1"),
+        Map("v" -> concat(col("v"), lit("!"))), mode)
+      assert(u2.filesCandidates == p1 &&
+        u2.rowsUpdated == model.count(_._3 == 1), s"$mode $u2")
+      model = model.map { case (i, v, p) => (i, if (p == 1) v + "!" else v, p) }
+      val p2 = ptFiles(2)
+      val d2 = TableCommit.delete(spark, t, Seq("pt"), expr("pt = 2"), mode)
+      assert(d2.filesCandidates == p2 &&
+        d2.rowsDeleted == model.count(_._3 == 2), s"$mode $d2")
+      model = model.filterNot(_._3 == 2)
+      val d3 = TableCommit.delete(spark, t, Seq("pt"), expr("id % 7 = 0"),
+        mode)
+      assert(d3.filesCandidates == d3.filesTotal &&
+        d3.rowsDeleted == model.count(_._1 % 7 == 0), s"$mode $d3")
+      model = model.filterNot(_._1 % 7 == 0)
+      assert(snapshot(t) == model, mode.toString)
+    }
+  }
+
   test("row-level delete: copy-on-write of only the hit files — rows " +
       "equal the filtered read, untouched files byte-identical, the " +
       "three-stage narrowing audit holds, a no-match band publishes " +
@@ -576,8 +634,8 @@ class TableCommitSpec extends GraftSpec {
       .filter(col("id").isNull || col("id") < 100 || col("id") > 150)
       .select(col("id"), col("v"), col("pt").cast("int"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    val a = TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(150))
+    val a = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(150)), TableCommit.CopyOnWrite)
     // audit: manifest bumped once; 51 matching rows; the narrowing
     // chain is strict at both stages (band-disjoint files pruned by
     // stats; the stats-less pt=2 candidate holds no matching row)
@@ -585,7 +643,7 @@ class TableCommitSpec extends GraftSpec {
     assert(a.rowsDeleted == 51L, s"rowsDeleted=${a.rowsDeleted}")
     assert(a.filesCandidates < a.filesTotal,
       s"stats pruned nothing (${a.filesCandidates} of ${a.filesTotal})")
-    assert(a.filesRewritten < a.filesCandidates,
+    assert(a.filesHit < a.filesCandidates,
       "the no-match candidate was rewritten anyway")
     assert(snapshot(t) == expect, "post-delete rows diverged")
     // every retained pre-delete file is byte-untouched
@@ -594,7 +652,7 @@ class TableCommitSpec extends GraftSpec {
     assert(retained.nonEmpty)
     assert(fileIds(retained) == beforeIds.filter(kv => retained.contains(kv._1)),
       "a retained file was modified in place")
-    assert(files1.toSet.diff(files2.toSet).size == a.filesRewritten)
+    assert(files1.toSet.diff(files2.toSet).size == a.filesHit)
     // fresh files re-recorded #stats: a later band still prunes and
     // matches the filtered read
     val (kept, total) = TableCommit.pruneAudit(t, id2, "id",
@@ -605,9 +663,9 @@ class TableCommitSpec extends GraftSpec {
       .select(col("id")).collect().map(_.getLong(0)).toSet
     assert(pruned == (300L to 350L).toSet, "post-delete pruned read diverged")
     // no-match band: nothing published, audit reports the unchanged id
-    val b = TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(5000), BigDecimal(6000))
-    assert(b.snapshotAfter == b.snapshotBefore && b.filesRewritten == 0 &&
+    val b = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(5000), BigDecimal(6000)), TableCommit.CopyOnWrite)
+    assert(b.snapshotAfter == b.snapshotBefore && b.filesHit == 0 &&
       b.rowsDeleted == 0L)
     assert(TableCommit.resolve(t).get._1 == id2, "no-match delete committed")
   }
@@ -640,13 +698,14 @@ class TableCommitSpec extends GraftSpec {
     assert(TableCommit.rowCount(t, TableCommit.resolve(t).get._1)
       .contains(203L))
     // delete rewrites hit files; metadata tracks the survivors
-    val d = TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(50), BigDecimal(59))
+    val d = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(50), BigDecimal(59)), TableCommit.CopyOnWrite)
     assert(d.rowsDeleted == 10L)
     assert(TableCommit.rowCount(t, d.snapshotAfter).contains(193L))
     // update keeps the count invariant
-    val u = TableCommit.updateWhere(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(9), Map("v" -> lit("x")))
+    val u = TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(9)), Map("v" -> lit("x")),
+      TableCommit.CopyOnWrite)
     assert(TableCommit.rowCount(t, u.snapshotAfter).contains(193L))
     // and the metadata agrees with a real count throughout
     assert(TableCommit.read(spark, t).count() == 193L)
@@ -670,8 +729,8 @@ class TableCommitSpec extends GraftSpec {
       Seq((10L, "x", 0)).toDF("id", "v", "pt"), clusterBy = Seq("id"))
     TableCommit.appendRows(spark, t, "pt",
       Seq((11L, "y", 0)).toDF("id", "v", "pt"))
-    TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(11), BigDecimal(11))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(11), BigDecimal(11)), TableCommit.CopyOnWrite)
     assert(TableCommit.properties(t)("owner") == "pipeline-b")
     // retention 4: the last four snapshots are retained and readable —
     // under the default (2) only newest and newest-1 would survive
@@ -730,8 +789,8 @@ class TableCommitSpec extends GraftSpec {
       txn = Some(("app-r", 1L)))
     val stateA = snapshot(t)
     val idA = TableCommit.resolve(t).get._1
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(1), BigDecimal(1))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(1), BigDecimal(1)), TableCommit.MergeOnRead)
     TableCommit.appendRows(spark, t, "pt",
       Seq((7L, "seven", 0)).toDF("id", "v", "pt"),
       txn = Some(("app-r", 2L)))
@@ -781,11 +840,11 @@ class TableCommitSpec extends GraftSpec {
         rel -> (f.length(), f.lastModified())
       }.toMap
     val before = fileIds(files1)
-    val a = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(150))
+    val a = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(150)), TableCommit.MergeOnRead)
     assert(a.snapshotBefore == id1 && a.snapshotAfter == id1 + 1)
     assert(a.rowsDeleted == 51L, a.toString)
-    assert(a.filesVectored <= a.filesCandidates &&
+    assert(a.filesHit <= a.filesCandidates &&
       a.filesCandidates < a.filesTotal, a.toString)
     val (id2, files2) = TableCommit.resolve(t).get
     assert(files2.toSet == files1.toSet, "MoR delete changed the file list")
@@ -796,8 +855,8 @@ class TableCommitSpec extends GraftSpec {
     assert(TableCommit.rowCount(t, id2).contains(350L),
       "#rows not adjusted by the vector")
     // stacked vectors: the overlapping band kills only LIVE matches
-    val b = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(140), BigDecimal(160))
+    val b = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(140), BigDecimal(160)), TableCommit.MergeOnRead)
     assert(b.rowsDeleted == 10L, b.toString)
     val expect2 = rows.filterNot(r => r._1 >= 100 && r._1 <= 160).toSet +
       ((900L, "z", 2))
@@ -809,9 +868,9 @@ class TableCommitSpec extends GraftSpec {
       .select(col("id")).collect().map(_.getLong(0)).toSet
     assert(pruned == (161L to 200L).toSet, "pruned read ignored a vector")
     // no-match band publishes nothing
-    val c = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(5000), BigDecimal(6000))
-    assert(c.snapshotAfter == c.snapshotBefore && c.filesVectored == 0)
+    val c = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(5000), BigDecimal(6000)), TableCommit.MergeOnRead)
+    assert(c.snapshotAfter == c.snapshotBefore && c.filesHit == 0)
     // materialization: compaction reads THROUGH the vectors and drops
     // them with the replaced files — rows invariant, metadata exact
     TableCommit.compactPartitions(spark, t, "pt", Seq("pt=0", "pt=1"),
@@ -820,8 +879,8 @@ class TableCommitSpec extends GraftSpec {
     val idC = TableCommit.resolve(t).get._1
     assert(TableCommit.rowCount(t, idC).contains(340L))
     // and a copy-on-write delete now works on the clean files
-    val d = TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(9))
+    val d = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(9)), TableCommit.CopyOnWrite)
     assert(d.rowsDeleted == 10L)
     assert(TableCommit.rowCount(t, d.snapshotAfter).contains(330L))
   }
@@ -848,11 +907,11 @@ class TableCommitSpec extends GraftSpec {
     val sig1 = fileIds(files1)
     // SET w = id (the PRE-update id), id = id + 1000, pt = 5: the
     // matched rows MOVE to a brand-new partition
-    val a = TableCommit.updateWhereMor(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(150),
-      Map("w" -> col("id"), "id" -> (col("id") + lit(1000L)),
-        "pt" -> lit(5)))
-    assert(a.rowsUpdated == 51L && a.filesVectored > 0 && a.filesAdded > 0,
+    val a = TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(150)), Map("w" -> col("id"), "id" -> (col("id") + lit(1000L)),
+        "pt" -> lit(5)),
+      TableCommit.MergeOnRead)
+    assert(a.rowsUpdated == 51L && a.filesHit > 0 && a.filesAdded > 0,
       a.toString)
     val (id2, files2) = TableCommit.resolve(t).get
     assert(files1.toSet.subsetOf(files2.toSet),
@@ -886,13 +945,13 @@ class TableCommitSpec extends GraftSpec {
       rows.toDF("id", "v", "pt"), clusterBy = Seq("id"),
       filesPerPartition = 4)
     val (idA, _) = TableCommit.resolve(t).get
-    val a = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(150))
+    val a = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(150)), TableCommit.MergeOnRead)
     val (added, removed) = TableCommit.changedFileSets(t, idA,
       TableCommit.resolve(t).get._1)
     assert(added.toSet == removed.toSet && added.nonEmpty,
       s"vectored files must appear on BOTH diff sides: +$added -$removed")
-    assert(added.length == a.filesVectored, s"+$added vs $a")
+    assert(added.length == a.filesHit, s"+$added vs $a")
   }
 
   test("row-level update: copy-on-write of only the hit files with " +
@@ -914,9 +973,10 @@ class TableCommitSpec extends GraftSpec {
     val beforeIds = fileIds(files1)
     // SET w = id (the PRE-update id), id = id + 1000: if assignments
     // were applied sequentially, w would read the shifted id
-    val a = TableCommit.updateWhere(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(150),
-      Map("w" -> col("id"), "id" -> (col("id") + lit(1000L))))
+    val a = TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(150)),
+      Map("w" -> col("id"), "id" -> (col("id") + lit(1000L))),
+      TableCommit.CopyOnWrite)
     assert(a.snapshotBefore == id1 && a.snapshotAfter == id1 + 1)
     assert(a.rowsUpdated == 51L, s"rowsUpdated=${a.rowsUpdated}")
     assert(a.filesCandidates < a.filesTotal,
@@ -940,7 +1000,7 @@ class TableCommitSpec extends GraftSpec {
     assert(retained.nonEmpty)
     assert(fileIds(retained) == beforeIds.filter(kv => retained.contains(kv._1)),
       "a retained file was modified in place")
-    assert(files1.toSet.diff(files2.toSet).size == a.filesRewritten)
+    assert(files1.toSet.diff(files2.toSet).size == a.filesHit)
     // Halloween-safety + fresh stats over NEW values: the band moved to
     // [1100,1150] and a pruned read there finds exactly the moved rows
     val moved = TableCommit.readWhere(spark, t, "id",
@@ -951,19 +1011,22 @@ class TableCommitSpec extends GraftSpec {
       BigDecimal(300), BigDecimal(350))
     assert(kept < total, "post-update stats no longer skip")
     // no-match band: nothing published
-    val b = TableCommit.updateWhere(spark, t, "pt", "id",
-      BigDecimal(5000), BigDecimal(6000), Map("w" -> lit(0L)))
-    assert(b.snapshotAfter == b.snapshotBefore && b.filesRewritten == 0 &&
+    val b = TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(5000), BigDecimal(6000)), Map("w" -> lit(0L)),
+      TableCommit.CopyOnWrite)
+    assert(b.snapshotAfter == b.snapshotBefore && b.filesHit == 0 &&
       b.rowsUpdated == 0L)
     assert(TableCommit.resolve(t).get._1 == id2, "no-match update committed")
     // guard rails: unknown SET column and partition-column SET both refuse
     intercept[IllegalArgumentException] {
-      TableCommit.updateWhere(spark, t, "pt", "id",
-        BigDecimal(0), BigDecimal(10), Map("nope" -> lit(1)))
+      TableCommit.update(spark, t, Seq("pt"),
+        band("id", BigDecimal(0), BigDecimal(10)), Map("nope" -> lit(1)),
+        TableCommit.CopyOnWrite)
     }
     intercept[IllegalArgumentException] {
-      TableCommit.updateWhere(spark, t, "pt", "id",
-        BigDecimal(0), BigDecimal(10), Map("pt" -> lit(9)))
+      TableCommit.update(spark, t, Seq("pt"),
+        band("id", BigDecimal(0), BigDecimal(10)), Map("pt" -> lit(9)),
+        TableCommit.CopyOnWrite)
     }
   }
 
@@ -979,8 +1042,8 @@ class TableCommitSpec extends GraftSpec {
     val idPre = TableCommit.resolve(t).get._1
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val d1 = new Thread(() =>
-      try TableCommit.deleteWhere(spark, t, "pt", "id",
-        BigDecimal(100), BigDecimal(150))
+      try TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(100), BigDecimal(150)), TableCommit.CopyOnWrite)
       catch { case e: Throwable => errs.add(e) })
     val r1 = new Thread(() =>
       try TableCommit.replacePartitions(spark, t, "pt", Seq("pt=2"),
@@ -998,8 +1061,8 @@ class TableCommitSpec extends GraftSpec {
     val pre = snapshot(t)
     val errs2 = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val d2 = new Thread(() =>
-      try TableCommit.deleteWhere(spark, t, "pt", "id",
-        BigDecimal(200), BigDecimal(250))
+      try TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(200), BigDecimal(250)), TableCommit.CopyOnWrite)
       catch { case e: Throwable => errs2.add(e) })
     val r2 = new Thread(() =>
       try TableCommit.replacePartitions(spark, t, "pt", Seq("pt=0"),
@@ -1280,11 +1343,11 @@ class TableCommitSpec extends GraftSpec {
     // one vector in the LOW key range, one in the HIGH — different
     // files by construction (5 key-contiguous files per partition)
     val before = dvDirs()
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(10), BigDecimal(19))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(10), BigDecimal(19)), TableCommit.MergeOnRead)
     val dvLow = (dvDirs() -- before).head
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(180), BigDecimal(189))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(180), BigDecimal(189)), TableCommit.MergeOnRead)
     val dvHigh = (dvDirs() -- before - dvLow).head
     // a low-band pruned read: correct rows, and its blob collection
     // opens the low vector but NEVER the high files' vector
@@ -1331,8 +1394,8 @@ class TableCommitSpec extends GraftSpec {
         lit(0).cast("int").as("pt")),
       clusterBy = Seq("id"), filesPerPartition = 1)
     // kill the first million rows in one MoR commit
-    val audit = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(0), BigDecimal(999999))
+    val audit = TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(999999)), TableCommit.MergeOnRead)
     assert(audit.rowsDeleted == 1000000L, audit.toString)
     // the sidecar is compressed-bitmap-sized: ~8 KiB per 64Ki chunk for
     // a dense kill (~16 chunks => well under 1 MB), never 1M rows
@@ -1374,8 +1437,8 @@ class TableCommitSpec extends GraftSpec {
           spark.sessionState.newHadoopConf()))
       val rowGroups = try footer.getFooter.getBlocks.size finally footer.close()
       assert(rowGroups >= 4, s"the file has $rowGroups row groups")
-      val audit = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-        BigDecimal(0), BigDecimal(999999))
+      val audit = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(0), BigDecimal(999999)), TableCommit.MergeOnRead)
       assert(audit.rowsDeleted == 1000000L, audit.toString)
       val dvBytes = Option(new java.io.File(t, "_dv").listFiles())
         .getOrElse(Array.empty).flatMap(d =>
@@ -1551,8 +1614,8 @@ class TableCommitSpec extends GraftSpec {
       "conflicted merge left the table changed")
     // winner 3: a MoR delete that re-vectored the merge's hit file
     val (idPin3, _) = TableCommit.resolve(t).get
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(100))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(100)), TableCommit.MergeOnRead)
     intercept[TableCommit.CommitConflictException] {
       TableCommit.mergeInto(spark, t, "pt", "id", src,
         updateSet = Map("v" -> col("src_v")), readSnapshot = Some(idPin3))
@@ -1643,9 +1706,9 @@ class TableCommitSpec extends GraftSpec {
       "the source row; NULL residual = no match; BY SOURCE honors it") {
     val t = compositeBase()
     // residual: only rows with v not 'frozen' match. Freeze (1,5).
-    TableCommit.updateMatchingMor(spark, t, Seq("pt"),
-      col("tenant") === 1L && col("eid") === 5L,
-      Map("v" -> lit("frozen")))
+    TableCommit.update(spark, t, Seq("pt"),
+      col("tenant") === 1L && col("eid") === 5L, Map("v" -> lit("frozen")),
+      TableCommit.MergeOnRead)
     val src = Seq((1L, 5L, "U5", 1), (1L, 6L, "U6", 1))
       .toDF("tenant", "eid", "v", "pt")
     val a = TableCommit.mergeIntoKeys(spark, t, Seq("pt"),
@@ -1704,8 +1767,8 @@ class TableCommitSpec extends GraftSpec {
     assert(compositeRows(t) == rowsW, "conflicted merge changed the table")
     // winner 3: a MoR delete re-vectored the hit file
     val (idPin3, _) = TableCommit.resolve(t).get
-    TableCommit.deleteWhereMor(spark, t, "pt", "eid",
-      BigDecimal(5), BigDecimal(5))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("eid", BigDecimal(5), BigDecimal(5)), TableCommit.MergeOnRead)
     intercept[TableCommit.CommitConflictException] {
       TableCommit.mergeIntoKeys(spark, t, Seq("pt"), Seq("tenant", "eid"),
         src, updateSet = Map("v" -> col("src_v")),
@@ -1739,8 +1802,9 @@ class TableCommitSpec extends GraftSpec {
       .exists(_.getName.startsWith("_stage_")), "stage residue left behind")
     // violating UPDATE (the CoW rewrite goes through the same gate)
     intercept[TableCommit.ConstraintViolationException] {
-      TableCommit.updateWhere(spark, t, "pt", "id",
-        BigDecimal(0), BigDecimal(10), Map("id" -> -col("id")))
+      TableCommit.update(spark, t, Seq("pt"),
+        band("id", BigDecimal(0), BigDecimal(10)), Map("id" -> -col("id")),
+        TableCommit.CopyOnWrite)
     }
     assert(snapshot(t) == rows0, "violating update changed the table")
     // NULL predicate result passes (SQL CHECK semantics): a constraint
@@ -1835,8 +1899,8 @@ class TableCommitSpec extends GraftSpec {
     assert(f1.filter(col("_change_type") === "delete").count() == 0)
     applyEq(id0, id1)
     // MoR delete: precise — feed is exactly the vectored rows
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(10), BigDecimal(20))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(10), BigDecimal(20)), TableCommit.MergeOnRead)
     val id2 = TableCommit.resolve(t).get._1
     val f2 = changeFeed(spark, t, id1, id2)
     assert(f2.filter(col("_change_type") === "insert").count() == 0)
@@ -1844,8 +1908,9 @@ class TableCommitSpec extends GraftSpec {
       (10L to 20L).map(i => (i, s"v$i", (i % 2).toInt)).toSet)
     applyEq(id1, id2)
     // MoR update: precise — old versions delete, successors insert
-    TableCommit.updateWhereMor(spark, t, "pt", "id",
-      BigDecimal(30), BigDecimal(35), Map("v" -> lit("upd")))
+    TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(30), BigDecimal(35)), Map("v" -> lit("upd")),
+      TableCommit.MergeOnRead)
     val id3 = TableCommit.resolve(t).get._1
     val f3 = changeFeed(spark, t, id2, id3)
     assert(multiset(f3.filter(col("_change_type") === "delete")).keySet ==
@@ -1854,8 +1919,9 @@ class TableCommitSpec extends GraftSpec {
       (30L to 35L).map(i => (i, "upd", (i % 2).toInt)).toSet)
     applyEq(id2, id3)
     // CoW update + compaction: coarse but the apply equation holds
-    TableCommit.updateWhere(spark, t, "pt", "id",
-      BigDecimal(100), BigDecimal(110), Map("v" -> lit("cow")))
+    TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(100), BigDecimal(110)), Map("v" -> lit("cow")),
+      TableCommit.CopyOnWrite)
     val id4 = TableCommit.resolve(t).get._1
     applyEq(id3, id4)
     TableCommit.compactPartitions(spark, t, "pt", Seq("pt=0", "pt=1"),
@@ -1919,8 +1985,8 @@ class TableCommitSpec extends GraftSpec {
     // the clone side; its vacuum then unlinks old generations) — the
     // SOURCE reads byte-identically
     val srcRows = snapshot(t)
-    TableCommit.deleteWhere(spark, dst, "pt", "id",
-      BigDecimal(0), BigDecimal(50))
+    TableCommit.delete(spark, dst, Seq("pt"),
+      band("id", BigDecimal(0), BigDecimal(50)), TableCommit.CopyOnWrite)
     // push the clone's vacuum past the shared generation
     TableCommit.appendRows(spark, dst, "pt",
       Seq((9002L, "y", 1)).toDF("id", "v", "pt"), clusterBy = Seq("id"))
@@ -1931,8 +1997,8 @@ class TableCommitSpec extends GraftSpec {
     assert(TableCommit.readAt(spark, t, srcId).count() == srcRows.size)
     // and the other direction: mutate the source, clone unaffected
     val cloneRows = snapshot(dst)
-    TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(200), BigDecimal(250))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(200), BigDecimal(250)), TableCommit.CopyOnWrite)
     assert(snapshot(dst) == cloneRows,
       "mutating the source changed the clone")
     // cloning onto an existing table refuses
@@ -2054,8 +2120,9 @@ class TableCommitSpec extends GraftSpec {
       "graft.retention.generations" -> "10", "graft.cdf" -> "true"))
     val id0 = TableCommit.resolve(t).get._1
     // MoR update: ids 2..3 get v -> V
-    TableCommit.updateWhereMor(spark, t, "pt", "id",
-      BigDecimal(2), BigDecimal(3), Map("v" -> upper(col("v"))))
+    TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(2), BigDecimal(3)), Map("v" -> upper(col("v"))),
+      TableCommit.MergeOnRead)
     val id1 = TableCommit.resolve(t).get._1
     val f1 = TableCommit.changeFeedPrecise(spark, t, id0, id1)
       .select(col("id"), col("v"), col("_change_type"),
@@ -2066,8 +2133,8 @@ class TableCommitSpec extends GraftSpec {
       (2L, "b", "update_preimage", id1), (3L, "c", "update_preimage", id1),
       (2L, "B", "update_postimage", id1), (3L, "C", "update_postimage", id1)))
     // MoR delete: id 5
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(5), BigDecimal(5))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(5), BigDecimal(5)), TableCommit.MergeOnRead)
     val id2 = TableCommit.resolve(t).get._1
     val f2 = TableCommit.changeFeedPrecise(spark, t, id1, id2)
       .select(col("id"), col("_change_type"))
@@ -2093,8 +2160,8 @@ class TableCommitSpec extends GraftSpec {
     assert(TableCommit.changeFeedPrecise(spark, t, id0, id3).count() == 9L)
     // CoW delete records no sidecar — the per-commit step synthesizes
     // (delete of dead rows, re-insert of survivors from the rewrite)
-    TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(9), BigDecimal(9))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(9), BigDecimal(9)), TableCommit.CopyOnWrite)
     val id4 = TableCommit.resolve(t).get._1
     val f4 = TableCommit.changeFeedPrecise(spark, t, id3, id4)
       .select(col("id"), col("_change_type"))

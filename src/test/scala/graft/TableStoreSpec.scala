@@ -114,13 +114,13 @@ class TableStoreSpec extends GraftSpec {
       seed(t)
       TableCommit.initIfAbsent(t)
       // CoW delete id in [4,4]
-      val da = TableCommit.deleteWhere(spark, t, "pt", "id",
-        BigDecimal(4), BigDecimal(4))
+      val da = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(4), BigDecimal(4)), TableCommit.CopyOnWrite)
       assert(da.rowsDeleted == 1L)
       // MoR delete id in [3,3] — vector sidecar + manifest registration
-      val ma = TableCommit.deleteWhereMor(spark, t, "pt", "id",
-        BigDecimal(3), BigDecimal(3))
-      assert(ma.rowsDeleted == 1L && ma.filesVectored == 1)
+      val ma = TableCommit.delete(spark, t, Seq("pt"),
+        band("id", BigDecimal(3), BigDecimal(3)), TableCommit.MergeOnRead)
+      assert(ma.rowsDeleted == 1L && ma.filesHit == 1)
       assert(rows(t) == Set((1L, "a", 0), (2L, "b", 0), (5L, "e", 2)))
       // MERGE: update id=1, insert id=7
       val src = Seq((1L, "a2", 0), (7L, "g", 2)).toDF("id", "v", "pt")
@@ -216,8 +216,8 @@ class TableStoreSpec extends GraftSpec {
         Seq((100L, "zz1", 0), (101L, "zz2", 1)).toDF("id", "v", "pt"))
       assert(TableCommit.read(spark, t).count() == 62L)
       // mixed-generation MoR delete through the seam
-      val mor = TableCommit.deleteWhereMorBy(spark, t, Seq("pt", "v"),
-        "id", BigDecimal(50), BigDecimal(100))
+      val mor = TableCommit.delete(spark, t, Seq("pt", "v"),
+        band("id", BigDecimal(50), BigDecimal(100)), TableCommit.MergeOnRead)
       assert(mor.rowsDeleted == 11L, mor.toString)
       assert(TableCommit.read(spark, t).count() == 51L)
       assert(!new java.io.File(t, "_manifests").exists,

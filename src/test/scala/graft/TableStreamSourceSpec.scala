@@ -116,8 +116,8 @@ class TableStreamSourceSpec extends GraftSpec {
     assert(sunk(out).size == 4)
     // a copy-on-write DELETE rewrites pt=0's file in place (id=1
     // survives into a FRESH file, id=2 drops)
-    TableCommit.deleteWhere(spark, t, "pt", "id",
-      BigDecimal(2), BigDecimal(2))
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(2), BigDecimal(2)), TableCommit.CopyOnWrite)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain(t, ckpt, out)
     }
@@ -535,10 +535,11 @@ class TableStreamSourceSpec extends GraftSpec {
     assert(first == Set(1L, 2L, 3L, 4L).map(id => (id, "insert", snapId)))
     // two NON-APPEND commits: MoR update + MoR delete — the plain
     // source would throw; the change feed consumes them
-    TableCommit.updateWhereMor(spark, t, "pt", "id",
-      BigDecimal(2), BigDecimal(2), Map("v" -> lit("B")))
-    TableCommit.deleteWhereMor(spark, t, "pt", "id",
-      BigDecimal(3), BigDecimal(3))
+    TableCommit.update(spark, t, Seq("pt"),
+      band("id", BigDecimal(2), BigDecimal(2)), Map("v" -> lit("B")),
+      TableCommit.MergeOnRead)
+    TableCommit.delete(spark, t, Seq("pt"),
+      band("id", BigDecimal(3), BigDecimal(3)), TableCommit.MergeOnRead)
     val toId = TableCommit.resolve(t).get._1
     drainCdf() // tail: one commit per trigger
     val drained = spark.read.parquet(out)

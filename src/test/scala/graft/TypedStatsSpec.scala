@@ -184,20 +184,21 @@ class TypedStatsSpec extends GraftSpec {
   test("deleteWhereLex / updateWhereMorLex: band verbs prune files for a " +
       "string key and produce exactly the banded effect") {
     val t = freshLexTable(i => f"doc-$i%05d")
-    val upd = TableCommit.updateWhereMorLex(spark, t, "pt", "k",
-      "doc-00100", "doc-00119", Map("v" -> upper(col("v"))))
+    val upd = TableCommit.update(spark, t, Seq("pt"),
+      lexBand("k", "doc-00100", "doc-00119"), Map("v" -> upper(col("v"))),
+      TableCommit.MergeOnRead)
     assert(upd.filesCandidates < upd.filesTotal, upd.toString)
     assert(upd.rowsUpdated == 20, upd.toString)
     val uppered = TableCommit.read(spark, t)
       .filter(col("v").rlike("^V")).count()
     assert(uppered == 20L)
-    val del = TableCommit.deleteWhereLex(spark, t, "pt", "k",
-      "doc-00200", "doc-00249")
+    val del = TableCommit.delete(spark, t, Seq("pt"),
+      lexBand("k", "doc-00200", "doc-00249"), TableCommit.CopyOnWrite)
     assert(del.filesCandidates < del.filesTotal, del.toString)
     assert(del.rowsDeleted == 50, del.toString)
     assert(TableCommit.read(spark, t).count() == 350L)
-    val mor = TableCommit.deleteWhereMorLex(spark, t, "pt", "k",
-      "doc-00000", "doc-00009")
+    val mor = TableCommit.delete(spark, t, Seq("pt"),
+      lexBand("k", "doc-00000", "doc-00009"), TableCommit.MergeOnRead)
     assert(mor.rowsDeleted == 10, mor.toString)
     assert(TableCommit.read(spark, t).count() == 340L)
   }
@@ -248,14 +249,17 @@ class TypedStatsSpec extends GraftSpec {
         "+10000-01-01", "+10000-12-31").count()
     }
     assert(e.getMessage.contains("four-digit-year"), e.getMessage)
-    // the DML twins refuse the same band (the silent-no-op trap: an
-    // era-unsafe band inverts under cpCompare and would prune every
-    // candidate, reporting 0 rows deleted)
-    val e2 = intercept[IllegalArgumentException] {
-      TableCommit.deleteWhereLex(spark, t, "pt", "d",
-        "2020-01-01", "+10000-01-01")
-    }
-    assert(e2.getMessage.contains("four-digit-year"), e2.getMessage)
+    // the DML form of the same band is a predicate: its bounds cast to
+    // DATE and pruning is typed by the column, so an era-unsafe bound
+    // keeps its files instead of inverting under cpCompare (the
+    // silent-no-op trap, 0 rows deleted) — the delete kills exactly the
+    // model's rows, every date in [2020-01-01, +10000-01-01]
+    val model = rows.count { case (d, _, _) =>
+      !d.toLocalDate.isBefore(java.time.LocalDate.of(2020, 1, 1)) }
+    val del = TableCommit.delete(spark, t, Seq("pt"),
+      lexBand("d", "2020-01-01", "+10000-01-01"), TableCommit.CopyOnWrite)
+    assert(del.rowsDeleted == model && model == 200, del.toString)
+    assert(TableCommit.read(spark, t).count() == 0L)
   }
 
   test("ZONED timestamp stats (round-14 verdict item 7): epoch-micros " +
@@ -355,8 +359,8 @@ class TypedStatsSpec extends GraftSpec {
     // DML twin: a banded MoR delete through the same prefix bound
     // kills exactly the 23 rows (the pre-fix code pruned the Feb file
     // out of candidacy and under-deleted)
-    val mor = TableCommit.deleteWhereMorLex(spark, t, "pt", "ts",
-      "2026-01-10", "2026-02-01")
+    val mor = TableCommit.delete(spark, t, Seq("pt"),
+      lexBand("ts", "2026-01-10", "2026-02-01"), TableCommit.MergeOnRead)
     assert(mor.rowsDeleted == 23L, mor.toString)
     assert(TableCommit.read(spark, t).count() == 36L)
   }
@@ -370,18 +374,22 @@ class TypedStatsSpec extends GraftSpec {
       TableCommit.readWhereLexAt(spark, t, id, "pt", "0", "1").count()
     }
     assert(e.getMessage.contains("code-point"), e.getMessage)
-    val e2 = intercept[RuntimeException] {
-      TableCommit.deleteWhereLex(spark, t, "pt", "pt", "0", "1")
-    }
-    assert(e2.getMessage.contains("code-point"), e2.getMessage)
-    val e3 = intercept[RuntimeException] {
-      TableCommit.updateWhereMorLex(spark, t, "pt", "pt", "0", "1",
-        Map("v" -> upper(col("v"))))
-    }
-    assert(e3.getMessage.contains("code-point"), e3.getMessage)
     // the string key keeps working (the guard types, it does not ban)
     assert(TableCommit.readWhereLexAt(spark, t, id, "k",
       "doc-00000", "doc-00009").count() == 10L)
+    // DML over the same bounds is a predicate: the string bounds cast to
+    // INT and pruning is typed by the column, so no code-point compare
+    // can arise — update and delete touch exactly the model's rows,
+    // every pt in [0, 1], all 400
+    val upd = TableCommit.update(spark, t, Seq("pt"), lexBand("pt", "0", "1"),
+      Map("v" -> upper(col("v"))), TableCommit.MergeOnRead)
+    assert(upd.rowsUpdated == 400L, upd.toString)
+    assert(TableCommit.read(spark, t).filter(col("v").rlike("^V"))
+      .count() == 400L)
+    val del = TableCommit.delete(spark, t, Seq("pt"), lexBand("pt", "0", "1"),
+      TableCommit.CopyOnWrite)
+    assert(del.rowsDeleted == 400L, del.toString)
+    assert(TableCommit.read(spark, t).count() == 0L)
   }
 
   test("sidecar cold-open types the band from the sidecar's own meta: a " +
@@ -458,8 +466,8 @@ class TypedStatsSpec extends GraftSpec {
   test("#require dv: a MoR delete's manifest declares the dv feature and " +
       "keeps reading fine on this engine") {
     val t = freshLexTable(i => f"doc-$i%05d")
-    TableCommit.deleteWhereMorLex(spark, t, "pt", "k",
-      "doc-00000", "doc-00009")
+    TableCommit.delete(spark, t, Seq("pt"),
+      lexBand("k", "doc-00000", "doc-00009"), TableCommit.MergeOnRead)
     val (id, _) = TableCommit.resolve(t).get
     val mf = new java.io.File(t, f"_manifests/manifest-$id%09d")
     val text = new String(
